@@ -8,7 +8,7 @@ semantics as distributed set algebra over DataFrames:
 
 * record stream            -> transcripts DataFrame (conv_id, turn_idx, role,
                               text, tool, ts)                     [sources/]
-* per-record extraction    -> Arrow-batched pandas UDFs           [operators/extract]
+* per-record extraction    -> JVM regexp_extract_all fan-out      [operators/extract]
 * MERGE on natural key     -> dedup + anti-join vs snapshot       [operators/merge]
 * exact-key node identity  -> normalization + MinHash-LSH linking [operators/link]
 * uniqueness constraints   -> hash-min connected components       [operators/canonicalize]

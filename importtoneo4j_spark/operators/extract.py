@@ -3,9 +3,9 @@
 Analog of the reference's external parser extension point
 (VEPAnnotationv82.parseAnnotation(), VariantDatabase.java:365,377: one raw
 string -> many typed annotation records, then HashSet-dedup) — re-expressed
-as an Arrow-batched ``mapInPandas`` fan-out: each text row yields 0..N
-assertion rows. All regex work is pandas-vectorized (``str.extractall``);
-there is no per-row Python (input_hint requirement).
+as a JVM-only fan-out: ``regexp_extract_all`` per capture group, zipped and
+exploded, so each text row yields 0..N assertion rows with no Python
+boundary in the plan.
 
 Assertion grammar (see datagen.py):
   [[SUBJ]] <pred> [[OBJ]]     pred in {works_at, located_in, reports_to,
@@ -18,91 +18,33 @@ Assertion grammar (see datagen.py):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ASSERTION_PATTERN = (
-    r"\[\[(?P<subj>[^\[\]]+)\]\]\s+"
-    r"(?P<verb>works_at|located_in|reports_to|uses|manages|aka|invoked:\w+)\s+"
-    r"\[\[(?P<obj>[^\[\]]+)\]\]"
-)
-
-# the same grammar with anonymous groups for the JVM path (Java regex takes
-# the identical pattern; named groups are only needed by pandas extractall).
-# \w/\s are ASCII in Java vs unicode-aware in Python — identical on the
-# assertion grammar's ASCII verb/tool tokens (path parity is test-asserted).
+# Whitespace and word classes are spelled out as Java's ASCII \s and \w:
+# Python's are Unicode-aware, so writing them explicitly keeps this pattern
+# and the oracle's copy (oracle.ASSERTION_RE) matching the same texts.
 ASSERTION_PATTERN_SQL = (
-    r"\[\[([^\[\]]+)\]\]\s+"
-    r"(works_at|located_in|reports_to|uses|manages|aka|invoked:\w+)\s+"
-    r"\[\[([^\[\]]+)\]\]"
+    r"\[\[([^\[\]]+)\]\][ \t\n\x0B\f\r]+"
+    r"(works_at|located_in|reports_to|uses|manages|aka|invoked:[A-Za-z0-9_]+)"
+    r"[ \t\n\x0B\f\r]+\[\[([^\[\]]+)\]\]"
 )
-
-EXTRACTED_DDL = (
-    "conv_id string, turn_idx int, role string, seq int, "
-    "subj_surface string, pred string, obj_surface string, "
-    "kind string, quality float"
-)
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    matches = pdf["text"].str.extractall(ASSERTION_PATTERN)
-    if matches.empty:
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Series([], dtype="string"),
-                "turn_idx": pd.Series([], dtype="int32"),
-                "role": pd.Series([], dtype="string"),
-                "seq": pd.Series([], dtype="int32"),
-                "subj_surface": pd.Series([], dtype="string"),
-                "pred": pd.Series([], dtype="string"),
-                "obj_surface": pd.Series([], dtype="string"),
-                "kind": pd.Series([], dtype="string"),
-                "quality": pd.Series([], dtype="float32"),
-            }
-        )
-    row_pos = matches.index.get_level_values(0)
-    verb = matches["verb"]
-    is_aka = verb.eq("aka")
-    is_tool = verb.str.startswith("invoked:")
-    pred = verb.mask(is_aka, "same_as").str.replace(":", "_", regex=False)
-    out = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy()[row_pos],
-            "turn_idx": pdf["turn_idx"].to_numpy()[row_pos],
-            "role": pdf["role"].to_numpy()[row_pos],
-            "seq": pdf["seq"].to_numpy()[row_pos],
-            "subj_surface": matches["subj"].str.strip().to_numpy(),
-            "pred": pred.to_numpy(),
-            "obj_surface": matches["obj"].str.strip().to_numpy(),
-            "kind": is_aka.map({True: "same_as", False: "triple"}).to_numpy(),
-            "quality": is_tool.map({True: 0.8, False: 1.0}).astype("float32").to_numpy(),
-        }
-    )
-    return out
 
 
 def extract_assertions(transcripts: DataFrame) -> DataFrame:
     """valid, stably-ordered transcripts -> exploded assertion rows.
 
-    Round 6 (guide §4.1: prefer built-ins when they exist): the default
-    path runs the assertion grammar entirely in the JVM —
-    ``regexp_extract_all`` per capture group + ``arrays_zip`` + ``explode``
-    — so the hot path has NO Python boundary at all (no Arrow transpose,
-    no worker processes; the MapInPandas node is gone from the plan).
-    Measured at the sf1.0 bench corpus: 1.80 -> 0.76 s (and 5.7 -> 1.8 s
-    on a cold first run, which is what a once-per-pipeline stage pays).
-    Row-identical to the Arrow path on the reference corpora
-    (exceptAll == 0 in both directions, asserted in tests).
-
-    ``extract_assertions_arrow`` keeps the Arrow-batched extension point
-    (SURVEY §2.9) for parsers that are NOT expressible as SQL regexes —
-    the reference's external-parser analog (VEPAnnotationv82,
-    VariantDatabase.java:365) — with the same output contract.
+    Round 6 (guide §4.1: prefer built-ins when they exist): the assertion
+    grammar runs entirely in the JVM — ``regexp_extract_all`` per capture
+    group + ``arrays_zip`` + ``explode`` — so there is no Arrow transpose
+    and no Python worker. Measured at the sf1.0 bench corpus against the
+    earlier Arrow-batched pandas path: 1.80 -> 0.76 s (and 5.7 -> 1.8 s on a
+    cold first run, which is what a once-per-pipeline stage pays).
     """
-    pruned = _pruned(transcripts)
+    # prefilter: a row without a mention marker can produce no assertion,
+    # so it never pays the regex — ~1/3 of turns are noise/edge-case text.
+    # Pushed into the scan.
+    pruned = transcripts.filter(F.col("text").contains("[["))
     z = pruned.select(
         "conv_id",
         "turn_idx",
@@ -131,29 +73,6 @@ def extract_assertions(transcripts: DataFrame) -> DataFrame:
         F.when(is_aka, "same_as").otherwise("triple").alias("kind"),
         F.when(is_tool, F.lit(0.8)).otherwise(F.lit(1.0)).cast("float").alias("quality"),
     )
-
-
-def _pruned(transcripts: DataFrame) -> DataFrame:
-    # JVM-side prefilter: a row without a mention marker can produce no
-    # assertion, so it never pays the regex (or, on the Arrow path, the
-    # transfer) — ~1/3 of turns are noise/edge-case text. Pushed into the
-    # scan.
-    return transcripts.filter(F.col("text").contains("[[")).select(
-        "conv_id", "turn_idx", "role", "seq", "text"
-    )
-
-
-def extract_assertions_arrow(transcripts: DataFrame) -> DataFrame:
-    """The Arrow-batched parser extension point (SURVEY §2.9): one pandas
-    batch in, 0..N assertion rows out, vectorized ``str.extractall`` inside —
-    for parsers that cannot be expressed as SQL regexes. Same output contract
-    as ``extract_assertions`` (row-identical on the assertion grammar)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _extract_batch(pdf)
-
-    return _pruned(transcripts).mapInPandas(run, schema=EXTRACTED_DDL)
 
 
 def with_dynamic_pred_stats(extracted: DataFrame) -> DataFrame:

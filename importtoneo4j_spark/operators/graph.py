@@ -86,12 +86,10 @@ class GraphView:
     ) -> bool:
         """Edge-existence probe — one job (take(1)).
 
-        Layout note: against the pipeline's subj-bucketed triples layout
-        (KGPipeline(bucket_subj=N) -> sources/tables.write_bucketed) the
-        subj equality prunes to one bucket's files; against the
-        pred-partitioned layout, pass ``pred`` so the partition filter
-        prunes the scan. Prefer the bucketed layout when point probes
-        dominate the read workload."""
+        Layout note: the pipeline writes triples partitioned by ``pred``
+        and (subj, obj)-sorted within each file, so passing ``pred`` prunes
+        the scan to one partition and the subj equality skips row groups by
+        their min/max statistics."""
         df = self.triples.filter((F.col("subj") == subj) & (F.col("obj") == obj))
         if pred is not None:
             df = df.filter(F.col("pred") == pred)

@@ -23,10 +23,12 @@ import re
 
 import pandas as pd
 
+# the grammar of operators/extract.ASSERTION_PATTERN_SQL, with the same
+# explicit ASCII classes (Python's \s and \w would also match Unicode)
 ASSERTION_RE = re.compile(
-    r"\[\[([^\[\]]+)\]\]\s+"
-    r"(works_at|located_in|reports_to|uses|manages|aka|invoked:\w+)\s+"
-    r"\[\[([^\[\]]+)\]\]"
+    r"\[\[([^\[\]]+)\]\][ \t\n\x0B\f\r]+"
+    r"(works_at|located_in|reports_to|uses|manages|aka|invoked:[A-Za-z0-9_]+)"
+    r"[ \t\n\x0B\f\r]+\[\[([^\[\]]+)\]\]"
 )
 
 # matches Spark's [^\p{L}\p{N}]+ (underscore is punctuation there)

@@ -11,7 +11,7 @@ exactly-once-per-analysis semantics).
 Stages::
 
     ingest       transcripts -> valid + rejects (quarantine w/ reason)
-    extract      Arrow-batched assertion extraction (fan-out)
+    extract      JVM regexp_extract_all assertion extraction (fan-out)
     link         vocabulary + same_as + MinHash-LSH similarity edges
     canonicalize connected components -> (surface -> canonical_id)
     materialize  triples + nodes + lineage manifest
@@ -74,10 +74,6 @@ class KGPipeline:
     # reference aborts on duplicate analysisId, Main.java:73-76, and on
     # constraint violations, Neo4j.java:163-167); opt out to first-wins
     # through a known-dirty corpus
-    bucket_subj: int = 0  # >0: write triples hash-bucketed on subj with
-    # this bucket count (catalog table; co-located self/edge joins run
-    # shuffle-free — SCALE.md bucket(N, subj) layout). 0 (default) keeps
-    # the pred-partitioned parquet-dir layout.
     input_format: str | None = None  # transcripts wire format: None infers
     # (catalog table vs parquet path); 'json' (JSON-lines) and 'csv' go
     # through the same schema enforcement + quarantine (sources/transcripts)
@@ -185,9 +181,9 @@ class KGPipeline:
             and self.store.exists("extracted")
             and self.store.exists("conv_watermarks")
             and bool(self._prev_runs())
-            # legacy (pre-run-partitioned) extracted layouts fall back to a
-            # full re-extraction, which rewrites the modern layout — correct,
-            # just not O(delta) for that one migration run
+            # an empty-input base leaves extracted flat (no _run dirs): fall
+            # back to a full re-extraction, which writes the partitioned
+            # layout — correct, and the base had nothing to reuse anyway
             and self.store.has_partition_dirs("extracted", "_run")
         )
         if reusing:
@@ -247,15 +243,15 @@ class KGPipeline:
 
     def _extracted(self) -> DataFrame:
         """The full extracted-assertions view (every run's partition), with
-        the _run bookkeeping column dropped. Tolerates legacy flat layouts
-        (no _run column)."""
+        the _run bookkeeping column dropped. Tolerates the flat layout of an
+        empty extraction (no _run column)."""
         df = self.store.read("extracted")
         return df.drop("_run") if "_run" in df.columns else df
 
     def _extracted_run(self, run_id: str) -> DataFrame:
         """THIS run's extraction delta — a partition-pruned scan of
         extracted/_run=<run_id> (O(delta) I/O), falling back to the full
-        view for legacy layouts."""
+        view for the flat layout of an empty extraction."""
         df = self.store.read("extracted")
         if "_run" not in df.columns:
             return df
@@ -511,9 +507,10 @@ class KGPipeline:
             # occurrences, so its first-wins attribution over the delta
             # equals its attribution over the full corpus. The anti-join
             # against the snapshot still guards the exactly-once contract.
-            # The watermark filter stays as a second guard for the legacy-
-            # layout fallback, where the run partition holds the full corpus
-            # (without it, old turns would re-count into n_mentions).
+            # The watermark filter stays as a second guard for when extract
+            # fell back to a full re-extraction, so the run partition holds
+            # the full corpus (without it, old turns would re-count into
+            # n_mentions).
             delta_extracted = self._extracted_run(self.run_id)
             if self.store.exists("conv_watermarks"):
                 wm = self.store.read("conv_watermarks")
@@ -542,42 +539,18 @@ class KGPipeline:
                 )
                 delta = new_keys_only(cand, snapshot, ["subj", "pred", "obj"])
                 self.store.write(delta, "triples_delta")  # ref delta-VCF sink
-                # appending into a bucketed table would silently break its
-                # bucket guarantee -> demote to plain layout (flat files
-                # match the bucketed dir shape; partitioned appends only on
-                # the pred-partitioned layout). The layout is consulted from
-                # the DURABLE materialize marker, not the session-local
-                # catalog (ADVICE r2): a fresh session's in-memory catalog
-                # answers tableExists=False for a bucketed table written by
-                # a previous session, and a pred-partitioned append into the
-                # flat bucketed directory is a mixed layout partition
-                # discovery rejects.
-                prev_layout = prev_marker.get("triples_layout")
-                if prev_layout is None:
-                    # legacy marker without the layout key (ADVICE r3
-                    # medium): probe the directory instead of assuming
-                    # pred-partitioned — a wrong guess appends the OTHER
-                    # layout into this one and partition discovery then
-                    # silently drops files.
-                    prev_layout = (
-                        "pred_partitioned"
-                        if self.store.has_partition_dirs("triples", "pred")
-                        else "flat"
-                    )
-                # any plain layout stays plain (ADVICE r3 high): after a
-                # bucketed->flat demotion the marker reads 'flat', and a
-                # second append must NOT write pred= dirs into that flat dir
-                plain = prev_layout in ("bucketed", "flat")
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self.store.catalog_name('triples')}"
-                )
+                # an empty-input rebuild writes triples flat, and a flat
+                # table stays flat: pred= dirs appended into a flat
+                # directory are a mixed layout partition discovery rejects.
+                # The layout comes from the durable materialize marker.
+                flat = prev_marker.get("triples_layout") == "flat"
                 self.store.write(
                     self.store.read("triples_delta"),
                     "triples",
                     mode="append",
-                    partition_by=None if plain else ["pred"],
+                    partition_by=None if flat else ["pred"],
                 )
-                res["layout"] = "flat" if plain else "pred_partitioned"
+                res["layout"] = "flat" if flat else "pred_partitioned"
 
             def _a_nodes() -> None:
                 # node upsert (not insert-new-only): labels/surfaces/mention
@@ -670,7 +643,7 @@ class KGPipeline:
             # partition to one core (measured: flat materialize time from 8
             # to 32 cores). The dedup's (subj,pred,obj) hash partitioning is
             # already balanced; subj-locality comes from the pred-partitioned
-            # layout below plus bucket(N, subj) on a real catalog.
+            # layout and the within-partition sort below.
             # sortWithinPartitions = the reference's sort-before-load
             # (import.sh SortVcf stage, O1): no shuffle, but every parquet
             # row group is (subj, obj)-ordered -> min/max row-group skipping
@@ -687,25 +660,17 @@ class KGPipeline:
             res: dict = {}
 
             def _w_triples() -> None:
-                if self.bucket_subj > 0:
-                    self.store.write_bucketed(
-                        triples,
-                        "triples",
-                        bucket_cols=["subj"],
-                        n_buckets=self.bucket_subj,
-                        sort_cols=["subj", "obj"],
-                    )
-                    res["layout"] = "bucketed"
-                else:
-                    n_trip = self._write_counted(
-                        triples.sortWithinPartitions("pred", "subj", "obj"),
-                        "triples",
-                        partition_by=["pred"],
-                    )
-                    res["layout"] = "pred_partitioned"
-                    if n_trip == 0:
-                        self.store.write(triples.limit(0), "triples")
-                        res["layout"] = "flat"
+                n_trip = self._write_counted(
+                    triples.sortWithinPartitions("pred", "subj", "obj"),
+                    "triples",
+                    partition_by=["pred"],
+                )
+                res["layout"] = "pred_partitioned"
+                if n_trip == 0:
+                    # dynamic partitioning writes no files for an empty
+                    # frame; keep the empty table readable, flat
+                    self.store.write(triples.limit(0), "triples")
+                    res["layout"] = "flat"
                 self.store.write(triples.limit(0), "triples_delta")
 
             def _w_nodes() -> None:

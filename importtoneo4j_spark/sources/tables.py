@@ -68,10 +68,9 @@ class TableStore:
 
     def has_partition_dirs(self, name: str, col: str) -> bool:
         """True if the table directory contains ``col=...`` partition
-        subdirectories — the fallback layout probe for markers written
-        before the ``triples_layout`` key existed (ADVICE r3 medium): a
-        legacy marker must never default to a pred-partitioned append onto
-        what might be a flat/bucketed directory (silent mixed layout)."""
+        subdirectories. An empty-input rebuild writes ``extracted`` flat
+        (no ``_run=`` dirs), so an append onto it must re-extract in full
+        instead of adding a partition beside flat files."""
         if self.iceberg:
             return False
         fs, hp = self._fs(self.path(name))
@@ -103,10 +102,6 @@ class TableStore:
                 # pipeline only appends to tables it has already created
                 w.append()
             return
-        if mode == "overwrite":
-            # a plain overwrite invalidates any bucketed catalog entry for
-            # this name (external table: metadata only, files are ours)
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog_name(name)}")
         w = df.write.mode(mode)
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -116,7 +111,6 @@ class TableStore:
         if self.iceberg:
             self.spark.sql(f"DROP TABLE IF EXISTS kg.db.{name}")
             return
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog_name(name)}")
         fs, hp = self._fs(self.path(name))
         fs.delete(hp, True)
 
@@ -140,8 +134,6 @@ class TableStore:
             )
             self.spark.sql(f"DROP TABLE IF EXISTS kg.db.{src}")
             return
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog_name(dst)}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog_name(src)}")
         fs, dst_hp = self._fs(self.path(dst))
         fs.delete(dst_hp, True)
         _, src_hp = self._fs(self.path(src))
@@ -155,80 +147,24 @@ class TableStore:
         partition directories present in ``df``; untouched partitions keep
         their files byte-identical (contract-tested). Parquet: Spark's
         dynamic partitionOverwriteMode stages the job output and swaps just
-        the matched partition dirs at commit. Iceberg: overwritePartitions.
+        the matched partition dirs at commit; the mode is a writer option,
+        so it never leaks to writes running concurrently in the same
+        session. Iceberg: overwritePartitions.
         The caller must ensure ``df``'s lineage does not scan ``name``
         itself (checkpoint first) — V1 rejects overwriting a read path."""
         if self.iceberg:
             df.writeTo(f"kg.db.{name}").overwritePartitions()
             return
-        conf = self.spark.conf
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = conf.get(key, "static")
-        conf.set(key, "dynamic")
-        try:
-            w = df.write.mode("overwrite").partitionBy(*partition_by)
-            w.parquet(self.path(name))
-        finally:
-            conf.set(key, prev)
-
-    # ------------------------------------------------------------- bucketing
-    def catalog_name(self, name: str) -> str:
-        """Session-catalog table name for this store's root (bucket metadata
-        lives in the catalog, not in parquet files)."""
-        import hashlib
-
-        tag = hashlib.md5(self.root.encode()).hexdigest()[:8]
-        return f"kg_{tag}_{name}"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_cols: list[str],
-        n_buckets: int = 32,
-        sort_cols: list[str] | None = None,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """Hash-bucketed table layout — the co-located-join analog of the
-        reference's index-before-load (Main.java:69): two tables bucketed on
-        the same key with the same bucket count join with NO shuffle on
-        either side (asserted in tests/test_plans.py). Parquet directories
-        cannot carry bucket metadata, so the table registers in the session
-        catalog (Iceberg: bucket partition transform instead)."""
-        if self.iceberg:
-            # the contract tests caught the first drift here already:
-            # functions.bucket moved to functions.partitioning in Spark 4
-            from pyspark.sql.functions import col
-
-            try:
-                from pyspark.sql.functions.partitioning import bucket
-            except ImportError:  # pre-4.0 location
-                from pyspark.sql.functions import bucket
-
-            w = df.writeTo(f"kg.db.{name}").partitionedBy(
-                bucket(n_buckets, col(bucket_cols[0]))
-            )
-            w.createOrReplace()
-            return
-        w = (
+        (
             df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, *bucket_cols)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_by)
+            .parquet(self.path(name))
         )
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.option("path", self.path(name)).saveAsTable(self.catalog_name(name))
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg:
             return self.spark.read.table(f"kg.db.{name}")
-        # prefer the catalog entry when one exists: that is where bucket
-        # metadata lives (a path read of the same files works but loses the
-        # shuffle-free join property)
-        if self.spark.catalog.tableExists(self.catalog_name(name)):
-            return self.spark.table(self.catalog_name(name))
         return self.spark.read.parquet(self.path(name))
 
     # --------------------------------------------------------------- markers

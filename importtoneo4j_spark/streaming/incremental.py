@@ -3,7 +3,7 @@
 The reference is strictly batch (Main.java:22-88); its incremental story is
 "re-run append with MERGE" (Main.java:73-76). This module provides the
 streaming equivalent for continuous transcript arrival: a file-source stream
-over the transcripts directory, the same Arrow-batched extraction, and a
+over the transcripts directory, the same JVM regex extraction, and a
 foreachBatch sink made idempotent per epoch: foreachBatch gives
 at-least-once delivery, so the sink partitions the output by epoch_id and
 overwrites ONLY its own epoch partition (dynamic partition overwrite) — a

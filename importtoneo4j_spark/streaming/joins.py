@@ -1,7 +1,7 @@
 """Watermarked stream-stream joins (round 4).
 
 The reference is batch-only; this completes the engine's streaming surface
-(windows + stateful counters + incremental extraction + this): correlating
+(windows + incremental extraction + this): correlating
 two live streams — e.g. user turns with the assistant/tool turns that
 answer them — without unbounded state.
 

@@ -1,10 +1,8 @@
 """Streaming windowed metrics over the transcript stream.
 
 The reference is batch-only; this is the engine's forward-looking streaming
-surface: tumbling-window per-role turn rates with a watermark for late data,
-plus a stateful per-conversation turn-counter built on
-``applyInPandasWithState`` (the custom-stateful-operator extension point).
-Both run under availableNow triggers in tests, driven to completion
+surface: tumbling, hopping and session-window turn metrics with a watermark
+for late data. The streams run under availableNow triggers in tests, driven to completion
 synchronously against a parquet directory.
 """
 

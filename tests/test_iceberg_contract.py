@@ -1,11 +1,11 @@
 """Contract tests for the Iceberg branch of TableStore (VERDICT r3 #3).
 
 No Iceberg jar exists in this sandbox, so the catalog code path
-(`sources/tables.py` writeTo/createOrReplace/partitionedBy(bucket)/
-read.table/tableExists/DROP TABLE) could never run — the first user on a
+(`sources/tables.py` writeTo/createOrReplace/partitionedBy/read.table/
+tableExists/DROP TABLE) could never run — the first user on a
 real catalog would be the first execution. These tests pin the exact call
 sequences and table names against recording fakes, so any signature drift
-(a renamed method, a wrong catalog prefix, a lost bucket transform) fails
+(a renamed method, a wrong catalog prefix, a lost partition column) fails
 in CI instead of on a user's cluster. The parquet fallback is covered by
 every other suite; `_have_iceberg` switching is covered here too.
 """
@@ -120,19 +120,6 @@ def test_write_append_never_replaces():
     assert fs.log[0] == ("writeTo", ("kg.db.links",), {})
     assert calls(fs.log)[1:] == ["writeTo.append"]
     assert "writeTo.createOrReplace" not in calls(fs.log)
-
-
-def test_write_bucketed_uses_bucket_transform(spark):
-    fs = FakeSpark()
-    store = TableStore(fs, "ignored-root")
-    store.write_bucketed(
-        FakeDF(fs.log), "triples", bucket_cols=["subj"], n_buckets=32
-    )
-    names = calls(fs.log)
-    assert names == ["writeTo", "writeTo.partitionedBy", "writeTo.createOrReplace"]
-    (bargs, _) = fs.log[1][1:]
-    # the partition transform is bucket(32, subj), not an identity column
-    assert "bucket(32, subj)" in str(bargs[0])
 
 
 def test_read_exists_drop_roundtrip():

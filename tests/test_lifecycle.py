@@ -45,101 +45,45 @@ def test_append_same_input_is_noop(spark, data, tmp_path_factory):
     assert m2["extract"]["assertions"] == m1["extract"]["assertions"]
 
 
-def test_append_layout_survives_new_session(spark, tmp_path_factory):
-    """ADVICE r2: the triples layout must be consulted from the DURABLE
-    materialize marker, not the session-local catalog. Simulate a fresh
-    session by dropping the in-memory catalog entry for a bucketed triples
-    table; an append must still write flat files (the bucketed-dir shape),
-    never pred=... directories mixed into a flat directory — a layout
-    partition discovery rejects on the next read."""
-    gen = TranscriptGenerator(seed=11, n_entities=40)
-    full_path = str(tmp_path_factory.mktemp("lay") / "full")
-    gen.write_parquet(full_path, n_convs=20)
-    half_path = str(tmp_path_factory.mktemp("lay") / "half")
-    spark.read.parquet(full_path).filter(
-        F.col("conv_id") < "conv-0000010"
-    ).write.parquet(half_path)
+@pytest.mark.parametrize("base_convs", [10, 0], ids=["base10", "empty_base"])
+def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
+    """A base plus two superset appends equals a rebuild over the union,
+    whether the base holds 10 conversations or none. The triples layout the
+    base wrote (pred= partitions, or flat for an empty base) survives both
+    appends unmixed — pred= directories inside a flat directory are a
+    layout partition discovery rejects — and the materialize marker counts
+    exactly the rows the table holds (nothing silently dropped)."""
+    from importtoneo4j_spark.schemas import TRANSCRIPTS
 
-    work = str(tmp_path_factory.mktemp("lay") / "kg")
-    p1 = KGPipeline(spark, half_path, work, run_id="r1", bucket_subj=4)
-    p1.run()
-    assert p1.store.read_marker("materialize")["triples_layout"] == "bucketed"
-    # a new session starts with an empty in-memory catalog
-    spark.sql(f"DROP TABLE IF EXISTS {p1.store.catalog_name('triples')}")
+    root = tmp_path_factory.mktemp("two_appends")
+    inputs = []
+    for n in (base_convs, 20, 30):
+        path = str(root / f"in{n}")
+        if n:
+            # the generator is prefix-stable: larger inputs are supersets
+            TranscriptGenerator(seed=11, n_entities=40).write_parquet(path, n_convs=n)
+        else:
+            spark.createDataFrame([], TRANSCRIPTS).write.parquet(path)
+        inputs.append(path)
 
-    p2 = KGPipeline(spark, full_path, work, run_id="r2", mode="append", bucket_subj=4)
-    for s in ["ingest", "extract", "link", "canonicalize"]:
-        p2.store.clear_marker(s)
-    p2.run(resume=False)
-    entries = os.listdir(os.path.join(work, "triples"))
-    assert not any(e.startswith("pred=") for e in entries)
-    assert p2.triples().count() > 0  # a mixed-layout directory would throw here
-    assert p2.store.read_marker("materialize")["triples_layout"] == "flat"
-
-
-def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
-    """ADVICE r3 high: after a bucketed->flat demotion the marker reads
-    'flat'; the SECOND append must also write flat files. The old
-    was_bucketed check only matched 'bucketed', so append #2 wrote pred=
-    directories into the flat triples directory and partition discovery
-    silently dropped rows on the next read (270 of 905 in the judge's
-    repro)."""
-    gen = TranscriptGenerator(seed=13, n_entities=40)
-    full_path = str(tmp_path_factory.mktemp("dd") / "full")
-    gen.write_parquet(full_path, n_convs=30)
-    slices = []
-    for i, cut in enumerate(["conv-0000010", "conv-0000020"]):
-        p = str(tmp_path_factory.mktemp("dd") / f"s{i}")
-        spark.read.parquet(full_path).filter(F.col("conv_id") < cut).write.parquet(p)
-        slices.append(p)
-
-    work = str(tmp_path_factory.mktemp("dd") / "kg")
-    p1 = KGPipeline(spark, slices[0], work, run_id="r1", bucket_subj=4)
-    p1.run()
-    n = p1.triples().count()
-    for run_id, path in [("r2", slices[1]), ("r3", full_path)]:
+    work = str(root / "kg")
+    KGPipeline(spark, inputs[0], work, run_id="r1").run(resume=False)
+    want_layout = "pred_partitioned" if base_convs else "flat"
+    for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
         pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
-        for s in ["ingest", "extract", "link", "canonicalize"]:
-            pn.store.clear_marker(s)
-        pn.run(resume=False)
-        n += pn.store.read("triples_delta").count()
-        assert pn.store.read_marker("materialize")["triples_layout"] == "flat"
+        m = pn.run(resume=False)
+        marker = pn.store.read_marker("materialize")
+        assert marker["triples_layout"] == want_layout
         entries = os.listdir(os.path.join(work, "triples"))
-        assert not any(e.startswith("pred=") for e in entries)
-    assert pn.triples().count() == n  # nothing silently dropped
-    assert pn.store.read_marker("materialize")["triples"] == n
+        has_pred_dirs = any(e.startswith("pred=") for e in entries)
+        has_flat_files = any(e.endswith(".parquet") for e in entries)
+        assert not (has_pred_dirs and has_flat_files)
+        assert marker["triples"] == pn.triples().count()
 
-
-def test_legacy_marker_append_probes_directory_layout(spark, tmp_path_factory):
-    """ADVICE r3 medium: markers written before the triples_layout key must
-    not default to a pred-partitioned append — the layout is probed from the
-    directory shape (pred= subdirs => pred_partitioned, else flat)."""
-    gen = TranscriptGenerator(seed=17, n_entities=40)
-    full_path = str(tmp_path_factory.mktemp("leg") / "full")
-    gen.write_parquet(full_path, n_convs=20)
-    half_path = str(tmp_path_factory.mktemp("leg") / "half")
-    spark.read.parquet(full_path).filter(
-        F.col("conv_id") < "conv-0000010"
-    ).write.parquet(half_path)
-
-    for bucket_subj, want_layout in [(4, "flat"), (0, "pred_partitioned")]:
-        work = str(tmp_path_factory.mktemp("leg") / f"kg{bucket_subj}")
-        p1 = KGPipeline(spark, half_path, work, run_id="r1", bucket_subj=bucket_subj)
-        p1.run()
-        n = p1.triples().count()
-        # simulate a legacy marker: drop the layout key
-        marker = p1.store.read_marker("materialize")
-        marker.pop("triples_layout")
-        p1.store.write_marker("materialize", marker)
-        spark.sql(f"DROP TABLE IF EXISTS {p1.store.catalog_name('triples')}")
-
-        p2 = KGPipeline(spark, full_path, work, run_id="r2", mode="append")
-        for s in ["ingest", "extract", "link", "canonicalize"]:
-            p2.store.clear_marker(s)
-        p2.run(resume=False)
-        n += p2.store.read("triples_delta").count()
-        assert p2.store.read_marker("materialize")["triples_layout"] == want_layout
-        assert p2.triples().count() == n  # no mixed-layout row loss
+    fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
+    want = fresh.run(resume=False)["materialize"]
+    assert m["materialize"]["checksum"] == want["checksum"]
+    assert m["materialize"]["nodes"] == want["nodes"] == pn.nodes().count()
 
 
 def test_resume_mid_stage_identical(spark, data, tmp_path_factory):

@@ -198,11 +198,16 @@ def test_extract_empty_batch(spark):
 # -------------------------------------------------------- oracle/datagen sync
 
 def test_oracle_extraction_agrees_with_udf(spark, gen):
-    """The Spark UDF and the sequential oracle must parse identically."""
+    """The Spark extraction and the sequential oracle must parse
+    identically, including on Unicode whitespace and word characters, which
+    neither grammar copy accepts."""
     from importtoneo4j_spark.oracle import ASSERTION_RE
 
     pdf = gen.turns_pandas(n_convs=10)
-    texts = [t for t in pdf["text"] if isinstance(t, str)]
+    texts = [t for t in pdf["text"] if isinstance(t, str)] + [
+        "[[A]]\u00a0works_at [[B]]",
+        "[[A]] invoked:café [[B]]",
+    ]
     n_oracle = sum(len(ASSERTION_RE.findall(t)) for t in texts)
     got = _extract(spark, texts)
     assert len(got) == n_oracle
@@ -312,26 +317,31 @@ def test_asof_join_semantics(spark):
 
 
 def test_lsh_dropped_buckets_on_persisted_signature(spark):
-    """VERDICT r2 minor #4: the observability path consumes an
-    already-computed signature frame (one MinHash computation total) and its
-    dropped buckets are exactly the ones drop_hot_buckets removes."""
+    """VERDICT r2 minor #4: the observability path consumes the signature
+    frame lsh_candidate_edges already computed (the one the pipeline stores
+    as link_sig; one MinHash computation total) and its dropped buckets are
+    exactly the ones drop_hot_buckets removes."""
     from importtoneo4j_spark.operators.link import (
         drop_hot_buckets,
+        lsh_candidate_edges,
         lsh_dropped_buckets,
-        signature_frame,
     )
+    from importtoneo4j_spark.session import stage_unpersist
 
     # shared-prefix keys: nearly identical shingle sets flood a few buckets
     vocab = spark.createDataFrame(
         [(f"acme corp {i}",) for i in range(40)], ["norm_key"]
     )
-    sig = signature_frame(vocab).cache()
+    persisted, sig_box = [], []
+    lsh_candidate_edges(vocab, persisted=persisted, sig_out=sig_box)
+    sig = sig_box[0]
     dropped = lsh_dropped_buckets(sig, max_bucket=5)
     rows = dropped.collect()
     assert rows and all(r["bsz"] > 5 for r in rows)
     kept = drop_hot_buckets(sig, 5)
     assert kept.join(dropped, "band_key").count() == 0
-    sig.unpersist()
+    for frame in persisted:
+        stage_unpersist(frame)
 
 
 def test_asof_join_dedup_col_and_map_payload(spark):

@@ -7,7 +7,6 @@ import os
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -82,8 +81,7 @@ def test_whole_stage_codegen_everywhere(spark):
 
 
 def test_no_python_udf_outside_extraction(spark):
-    """Python crosses the JVM boundary ONLY in the extraction operator:
-    every driver query must compile to a plan free of Python evals."""
+    """Every driver query must compile to a plan free of Python evals."""
     for name, q in entry_mod.queries().items():
         plan = plan_of(q(spark, SF_DIR))
         for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
@@ -91,23 +89,16 @@ def test_no_python_udf_outside_extraction(spark):
 
 
 def test_extraction_is_arrow_batched(spark, gen):
-    """Round 6: the DEFAULT extraction runs entirely in the JVM — no Python
-    node of any kind in the plan (guide §4.1: built-ins over UDFs). The
-    retained Arrow extension point still uses MapInPandas (batched), never
-    row-at-a-time BatchEvalPython."""
-    from importtoneo4j_spark.operators.extract import (
-        extract_assertions,
-        extract_assertions_arrow,
-    )
+    """Extraction runs entirely in the JVM (regexp_extract_all + explode):
+    no Python node of any kind in the plan (guide §4.1: built-ins over
+    UDFs)."""
+    from importtoneo4j_spark.operators.extract import extract_assertions
     from importtoneo4j_spark.sources.transcripts import with_stable_order
 
     df = with_stable_order(spark.createDataFrame(gen.turns_pandas(5)))
     plan = plan_of(extract_assertions(df))
     for marker in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan
-    arrow_plan = plan_of(extract_assertions_arrow(df))
-    assert "MapInPandas" in arrow_plan
-    assert "BatchEvalPython" not in arrow_plan
 
 
 def test_first_wins_has_partial_aggregation(spark):
@@ -159,52 +150,6 @@ def test_materialize_joins_are_aqe_chosen(spark):
         df.collect()  # AQE finalizes the physical plan on execution
         assert "BroadcastHashJoin" in plan_of(df)  # ...and picks broadcast
         # when the runtime-measured vocabulary actually is small
-
-
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path_factory):
-    """bucket(N, key) layout (SCALE.md): two tables bucketed on the same key
-    with the same count sort-merge-join with NO hash-partitioning exchange
-    on either side — the co-located-join analog of index-before-load."""
-    from pyspark.sql import functions as F
-
-    from importtoneo4j_spark.sources.tables import TableStore
-
-    store = TableStore(spark, str(tmp_path_factory.mktemp("bkt") / "store"))
-    t1 = spark.range(2000).select(
-        F.concat(F.lit("e"), (F.col("id") % 500).cast("string")).alias("subj"),
-        F.col("id").alias("a"),
-    )
-    t2 = spark.range(1000).select(
-        F.concat(F.lit("e"), (F.col("id") % 500).cast("string")).alias("subj"),
-        (F.col("id") * 2).alias("b"),
-    )
-    store.write_bucketed(t1, "t1", ["subj"], 8, sort_cols=["subj"])
-    store.write_bucketed(t2, "t2", ["subj"], 8, sort_cols=["subj"])
-    j = store.read("t1").join(store.read("t2").hint("merge"), "subj")
-    j.collect()
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    assert "Exchange hashpartitioning" not in plan  # bucket-co-located
-    store.drop("t1")
-    store.drop("t2")
-
-
-def test_pipeline_bucketed_triples_layout(spark, small_transcripts_path, tmp_path_factory):
-    """bucket_subj pipeline option: triples land as a bucketed catalog table,
-    results identical to the plain layout."""
-    from importtoneo4j_spark.plans.pipeline import KGPipeline
-
-    work = str(tmp_path_factory.mktemp("bktp") / "kg")
-    pipe = KGPipeline(spark, small_transcripts_path, work, run_id="r1", bucket_subj=8)
-    m = pipe.run()
-    assert spark.catalog.tableExists(pipe.store.catalog_name("triples"))
-    assert m["materialize"]["triples"] > 0
-    # subj self-join on the bucketed table: no hash-partitioning exchange
-    t = pipe.triples()
-    j = t.select("subj", "pred").join(t.select("subj", "obj").hint("merge"), "subj")
-    j.count()
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
 
 
 def test_interval_join_is_equi_not_nested_loop(spark):
