@@ -45,39 +45,97 @@ def test_append_same_input_is_noop(spark, data, tmp_path_factory):
     assert m2["extract"]["assertions"] == m1["extract"]["assertions"]
 
 
-@pytest.mark.parametrize("base_convs", [10, 0], ids=["base10", "empty_base"])
-def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
-    """A base plus two superset appends equals a rebuild over the union,
-    whether the base holds 10 conversations or none. The triples layout the
-    base wrote (pred= partitions, or flat for an empty base) survives both
-    appends unmixed — pred= directories inside a flat directory are a
-    layout partition discovery rejects — and the materialize marker counts
-    exactly the rows the table holds (nothing silently dropped)."""
+def _superset_inputs(spark, root, sizes):
+    """Write one transcript input per size; the generator is prefix-stable,
+    so larger inputs are supersets. Size 0 writes an empty input."""
     from importtoneo4j_spark.schemas import TRANSCRIPTS
 
-    root = tmp_path_factory.mktemp("two_appends")
     inputs = []
-    for n in (base_convs, 20, 30):
+    for n in sizes:
         path = str(root / f"in{n}")
         if n:
-            # the generator is prefix-stable: larger inputs are supersets
             TranscriptGenerator(seed=11, n_entities=40).write_parquet(path, n_convs=n)
         else:
             spark.createDataFrame([], TRANSCRIPTS).write.parquet(path)
         inputs.append(path)
+    return inputs
 
+
+def _assert_unmixed_layout(work):
+    """pred= directories next to flat files in one triples directory are a
+    layout partition discovery rejects (or silently drops rows from)."""
+    entries = os.listdir(os.path.join(work, "triples"))
+    has_pred_dirs = any(e.startswith("pred=") for e in entries)
+    has_flat_files = any(e.endswith(".parquet") for e in entries)
+    assert not (has_pred_dirs and has_flat_files)
+    return has_pred_dirs
+
+
+def test_append_layout_survives_new_session(spark, tmp_path_factory):
+    """The triples layout an append writes is read from the durable
+    materialize marker, not from session state: an empty-input rebuild
+    writes triples flat, and an append run in a new Spark session (its own
+    catalog and SQL conf) must still write flat files, never pred=
+    directories mixed into the flat directory."""
+    root = tmp_path_factory.mktemp("lay")
+    base, full = _superset_inputs(spark, root, [0, 20])
+    work = str(root / "kg")
+    p1 = KGPipeline(spark, base, work, run_id="r1")
+    p1.run(resume=False)
+    assert p1.store.read_marker("materialize")["triples_layout"] == "flat"
+
+    p2 = KGPipeline(spark.newSession(), full, work, run_id="r2", mode="append")
+    p2.run(resume=False)
+    assert not _assert_unmixed_layout(work)
+    marker = p2.store.read_marker("materialize")
+    assert marker["triples_layout"] == "flat"
+    assert marker["triples"] == p2.triples().count() > 0
+
+
+def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
+    """Once the marker reads 'flat' the SECOND append must also write flat
+    files; a check that keyed on any other layout name would write pred=
+    directories into the flat triples directory and partition discovery
+    would silently drop rows on the next read. The flat table here comes
+    from an empty-input rebuild; base + two appends must equal a rebuild
+    over the union, with no row lost."""
+    root = tmp_path_factory.mktemp("dd")
+    inputs = _superset_inputs(spark, root, [0, 20, 30])
     work = str(root / "kg")
     KGPipeline(spark, inputs[0], work, run_id="r1").run(resume=False)
-    want_layout = "pred_partitioned" if base_convs else "flat"
+    n = 0
+    for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
+        pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
+        m = pn.run(resume=False)
+        n += pn.store.read("triples_delta").count()
+        assert pn.store.read_marker("materialize")["triples_layout"] == "flat"
+        assert not _assert_unmixed_layout(work)
+    assert pn.triples().count() == n  # nothing silently dropped
+    assert pn.store.read_marker("materialize")["triples"] == n
+
+    fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
+    want = fresh.run(resume=False)["materialize"]
+    assert m["materialize"]["checksum"] == want["checksum"]
+    assert m["materialize"]["nodes"] == want["nodes"] == pn.nodes().count()
+
+
+@pytest.mark.parametrize("base_convs", [10], ids=["base10"])
+def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
+    """A 10-conversation base plus two superset appends equals a rebuild
+    over the union. The pred= partitioned layout the base wrote survives
+    both appends unmixed, and the materialize marker counts exactly the
+    rows the table holds (nothing silently dropped). The empty-base (flat)
+    case is test_double_append_after_demotion_stays_flat."""
+    root = tmp_path_factory.mktemp("two_appends")
+    inputs = _superset_inputs(spark, root, [base_convs, 20, 30])
+    work = str(root / "kg")
+    KGPipeline(spark, inputs[0], work, run_id="r1").run(resume=False)
     for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
         pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
         m = pn.run(resume=False)
         marker = pn.store.read_marker("materialize")
-        assert marker["triples_layout"] == want_layout
-        entries = os.listdir(os.path.join(work, "triples"))
-        has_pred_dirs = any(e.startswith("pred=") for e in entries)
-        has_flat_files = any(e.endswith(".parquet") for e in entries)
-        assert not (has_pred_dirs and has_flat_files)
+        assert marker["triples_layout"] == "pred_partitioned"
+        assert _assert_unmixed_layout(work)
         assert marker["triples"] == pn.triples().count()
 
     fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
