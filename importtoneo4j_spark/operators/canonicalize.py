@@ -5,7 +5,7 @@ The reference enforces one node per natural key via uniqueness constraints
 and MERGE (Neo4j.java:160-173; VariantDatabase.java:100-109). After fuzzy
 linking, "one entity, one node" becomes a graph problem: the connected
 components of the linking-evidence graph. Catalyst cannot express fixpoints
-(SURVEY.md §4), so this is a driver-side loop of joins with
+(SURVEY.md §4), so this is a driver-side loop of aggregations with
 ``localCheckpoint`` lineage truncation — the canonical GraphFrames-style
 hash-min algorithm: every vertex repeatedly adopts the minimum component id
 among itself and its neighbors; converges in O(component diameter) rounds
@@ -17,61 +17,67 @@ independent of partitioning and parallelism.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, checkpoint_every: int = 1
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(src, dst) string edges -> (id, comp) with comp = min id in component.
 
     Vertices appearing only as singletons are NOT included — callers union
     them back with comp = own id (see assign_canonical_ids).
+
+    Each round is ONE eager ``localCheckpoint`` of one ``groupBy(id)``; the
+    count of changed labels rides that action as an ``Observation``, so
+    the convergence check costs no job of its own. ``sym`` stays a lazy
+    projection of ``edges`` (duplicate edges cannot change a min), and round
+    1 needs no labels: it is min(id, min neighbour) straight off the edges.
+    Superseded rounds are released as soon as the next one is checkpointed;
+    the returned frame is backed by the last round's checkpoint, which the
+    caller releases with ``session.stage_unpersist``.
     """
+    from importtoneo4j_spark.session import stage_unpersist
+
     sym = (
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
-    sym = sym.localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
+    # round 1: every label starts as the node's own id
+    step = (
+        sym.groupBy(F.col("src").alias("id"))
+        .agg(F.min("dst").alias("nbr"))
+        .select("id", F.least("id", "nbr").alias("comp"), F.col("id").alias("old"))
     )
-    for it in range(max_iter):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
+    labels = None
+    for _ in range(max_iter):
+        obs = Observation("cc_changed")
+        nxt = step.observe(
+            obs, F.sum((F.col("comp") != F.col("old")).cast("long")).alias("n")
+        ).localCheckpoint()
+        if labels is not None:
+            stage_unpersist(labels)
+        labels = nxt.select("id", "comp")
+        if not obs.get["n"]:  # None on an edgeless graph
+            return labels
+        # next round: the node's own label and its neighbours' labels, one
+        # groupBy — the new label is their min, the old one rides along
+        own = labels.select("id", "comp", F.col("comp").alias("old"))
+        nbrs = sym.join(labels.withColumnRenamed("id", "src"), "src").select(
+            F.col("dst").alias("id"), "comp", F.lit(None).alias("old")
         )
-        new_comp = F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp")))
-        # convergence flag computed inside the iteration plan: the count of
-        # changed rows is a cheap scan of the checkpointed result, not a
-        # join-back against the previous labels
-        new_labels = labels.join(nbr_min, "id", "left").select(
-            "id",
-            new_comp.alias("comp"),
-            (new_comp != F.col("comp")).alias("_changed"),
+        step = (
+            own.unionByName(nbrs)
+            .groupBy("id")
+            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
         )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint()
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} iters")
-    return labels
+    raise RuntimeError(f"connected_components did not converge in {max_iter} iters")
 
 
-def assign_canonical_ids(vocab: DataFrame, edges: DataFrame) -> DataFrame:
-    """(surface, norm_key) vocab + link edges -> (surface, norm_key,
-    canonical_id). Singleton keys canonicalize to themselves."""
-    comp = connected_components(edges)
+def assign_canonical_ids(vocab: DataFrame, comp: DataFrame) -> DataFrame:
+    """(surface, norm_key) vocab + connected_components output ->
+    (surface, norm_key, canonical_id). Singleton keys canonicalize to
+    themselves."""
     return vocab.join(
         comp.withColumnRenamed("id", "norm_key"), "norm_key", "left"
     ).withColumn("canonical_id", F.coalesce(F.col("comp"), F.col("norm_key"))).drop(

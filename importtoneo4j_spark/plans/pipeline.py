@@ -26,7 +26,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from importtoneo4j_spark.operators.canonicalize import assign_canonical_ids
+from importtoneo4j_spark.operators.canonicalize import (
+    assign_canonical_ids,
+    connected_components,
+)
 from importtoneo4j_spark.operators.enrich import enrich_nodes, missing_keys
 from importtoneo4j_spark.operators.extract import extract_assertions
 from importtoneo4j_spark.operators.link import (
@@ -165,9 +168,10 @@ class KGPipeline:
 
     def _valid(self) -> DataFrame:
         """The valid-turn view of the ingested table (partition-pruned).
-        The validity flag compares as string: partition-column inference
-        reads the directory value back as 'true'/'false', while the
-        empty-input layout keeps a real boolean column."""
+        The validity flag compares as string: the schema sidecar and the
+        empty-input layout give a real boolean column, while a read by
+        inference (no sidecar) gets the directory value back as
+        'true'/'false'."""
         return (
             self.store.read("ingested")
             .filter(F.col("_ok").cast("string") == "true")
@@ -386,9 +390,10 @@ class KGPipeline:
         self._mark("link", vocab=n_vocab, edges=n_edges)
 
     def stage_canonicalize(self) -> None:
-        vocab = self.store.read("vocab")
-        edges = self.store.read("link_edges")
-        links = assign_canonical_ids(vocab, edges)
+        from importtoneo4j_spark.session import stage_unpersist
+
+        comp = connected_components(self.store.read("link_edges"))
+        links = assign_canonical_ids(self.store.read("vocab"), comp)
         if self.mode == "append" and self.store.exists("links") and self._prev_runs():
             # cross-run id stability: a surface already in the snapshot keeps
             # its canonical_id; only genuinely new surfaces are appended with
@@ -455,6 +460,8 @@ class KGPipeline:
             n = int(obs.get["n"])  # approx is fine for a metric; exact count
             # would need a distinct shuffle just for observability
             self.metrics["canonicalize"] = {"entities": n}
+        # the component labels' checkpoint is dead once links is written
+        stage_unpersist(comp)
         self._mark("canonicalize", **self.metrics["canonicalize"])
 
     def stage_materialize(self) -> None:
@@ -563,15 +570,14 @@ class KGPipeline:
                 # (contract-tested). The old path full-outer-joined and
                 # REWROTE the entire nodes table twice (nodes_next + nodes)
                 # per append — the dominant append cost at 10^9 nodes.
-                # delta_nodes is read by three consumers (touched-bucket
-                # derivation, the merge, and nothing else transitively
-                # cheap) — checkpoint ONCE so the delta aggregation runs
-                # once, not per consumer; same for the touched snapshot
-                # slice (merge + count). Both frames are delta-sized /
-                # touched-bucket-sized. The checkpoints also cut the nodes
-                # path out of the write's lineage, which is what lets the
-                # dynamic partition overwrite target the same table (V1
-                # refuses to overwrite a path it scans).
+                # delta_nodes is read by two consumers (touched-bucket
+                # derivation and the merge) — checkpoint ONCE so the delta
+                # aggregation runs once, not per consumer. Both frames are
+                # delta-sized / touched-bucket-sized. The checkpoints also
+                # cut the nodes path out of the write's lineage, which is
+                # what lets the dynamic partition overwrite target the same
+                # table (V1 refuses to overwrite a path it scans). The node
+                # total is counted later, by the post-write node audit.
                 delta_nodes = canonical_nodes(
                     delta_extracted, links
                 ).localCheckpoint()
@@ -587,21 +593,7 @@ class KGPipeline:
                 merged = merge_nodes(snap_touched, delta_nodes).withColumn(
                     "_bucket", node_bucket(F.col("entity_id"))
                 )
-                n_touched_before = snap_touched.count()
-                if "nodes" in prev_marker:
-                    prev_total = int(prev_marker["nodes"])
-                else:
-                    # marker lost: metadata count before the overwrite
-                    prev_total = self.store.read("nodes").count()
-                obs = Observation("nodes_upsert")
-                self.store.overwrite_partitions(
-                    merged.observe(obs, F.count(F.lit(1)).alias("n")),
-                    "nodes",
-                    ["_bucket"],
-                )
-                res["n_nodes"] = (
-                    prev_total - n_touched_before + int(obs.get["n"])
-                )
+                self.store.overwrite_partitions(merged, "nodes", ["_bucket"])
 
             had_wm = self.store.exists("conv_watermarks")
 
@@ -631,7 +623,6 @@ class KGPipeline:
                     f.result()
             if had_wm:
                 self.store.promote("conv_watermarks_next", "conv_watermarks")
-            n_nodes = res["n_nodes"]
             layout = res["layout"]
         else:
             triples = canonical_triples(extracted, links)
@@ -674,7 +665,7 @@ class KGPipeline:
                 self.store.write(triples.limit(0), "triples_delta")
 
             def _w_nodes() -> None:
-                res["n_nodes"] = self._write_counted(
+                n_written = self._write_counted(
                     # leading with the partition column avoids the writer's
                     # own re-sort (same rationale as the triples write above)
                     nodes.sortWithinPartitions("_bucket", "entity_id"),
@@ -683,7 +674,7 @@ class KGPipeline:
                 )
                 # dynamic partitioning writes no files for empty frames; keep
                 # empty tables readable (schema preserved, unpartitioned)
-                if res["n_nodes"] == 0:
+                if n_written == 0:
                     self.store.write(nodes.limit(0), "nodes")
 
             def _w_wm() -> None:
@@ -699,18 +690,42 @@ class KGPipeline:
             with ThreadPoolExecutor(max_workers=3) as pool:
                 for f in [pool.submit(fn) for fn in (_w_triples, _w_nodes, _w_wm)]:
                     f.result()
-            n_nodes = res["n_nodes"]
             layout = res["layout"]
 
         final = self.store.read("triples")
 
-        def _t_assert() -> None:
-            if self.fail_fast:
-                # F4 on the graph sink: entity_id is the node MERGE key and
-                # must be unique (Neo4j.java:163-167 throws on >1 index hit)
-                assert_unique(
-                    self.store.read("nodes"), ["entity_id"], what="entity_id"
+        # the node total, the triple count and the global checksum are all
+        # taken from the tables as written — never from an earlier marker —
+        # so a retry of this stage under the same run_id reports the same
+        # figures whatever its previous attempt left behind
+        nodes_obs = Observation("nodes_audit")
+
+        def _t_nodes() -> None:
+            # node total + F4 on the graph sink in one pass: entity_id is
+            # the node MERGE key and must be unique (Neo4j.java:163-167
+            # throws on >1 index hit). Both ride an Observation ABOVE the
+            # per-key count — below a shuffle, AQE drops the metrics of a
+            # branch it finds empty at runtime — and the noop sink drains
+            # the counts without collecting them. The offender lookup runs
+            # only on the failure path.
+            nodes = self.store.read("nodes")
+            (
+                nodes.groupBy("entity_id")
+                .count()
+                .observe(
+                    nodes_obs, F.sum("count").alias("n"), F.max("count").alias("dup")
                 )
+                .write.format("noop")
+                .mode("overwrite")
+                .save()
+            )
+            if self.fail_fast and (nodes_obs.get["dup"] or 0) > 1:
+                assert_unique(nodes, ["entity_id"], what="entity_id")
+
+        # the triple count + global checksum ride the lineage write as an
+        # Observation — no lineage read-back (bit_xor is associative: the
+        # xor of per-partition checksums == the xor of all row hashes)
+        lin_obs = Observation("lineage_totals")
 
         def _t_registry() -> None:
             # schema registry as data (SURVEY §1.1): the declared vocabulary
@@ -726,10 +741,18 @@ class KGPipeline:
         def _t_lineage() -> None:
             lineage = lineage_manifest(
                 final, self.run_id, "materialize", hash_cols=["subj", "pred", "obj"]
+            ).observe(
+                lin_obs,
+                F.count(F.lit(1)).alias("parts"),
+                F.sum("output_rows").alias("n"),
+                F.expr("bit_xor(cast(checksum as bigint))").alias("x"),
             )
-            self.store.write(
-                lineage, "lineage", mode="append" if prev_runs else "overwrite"
-            )
+            # partitioned by run_id: an append (or a retry of this stage)
+            # replaces only its own run's rows, never duplicates them
+            if prev_runs:
+                self.store.overwrite_partitions(lineage, "lineage", ["run_id"])
+            else:
+                self.store.write(lineage, "lineage", partition_by=["run_id"])
 
         # the three post-write audits are mutually independent reads of the
         # just-written tables — run them concurrently too (guide §2.6). A
@@ -737,24 +760,12 @@ class KGPipeline:
         # the registry/lineage artifacts it may race with are rewritten by
         # the re-run (no marker = stage incomplete).
         with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [pool.submit(fn) for fn in (_t_assert, _t_registry, _t_lineage)]:
+            for f in [pool.submit(fn) for fn in (_t_nodes, _t_registry, _t_lineage)]:
                 f.result()
-        # triple count + global checksum derived from the manifest (bit_xor is
-        # associative: xor of per-partition checksums == xor of row hashes) —
-        # no extra full scans of the triples table
-        lin_rows = [
-            (r["output_rows"], int(r["checksum"]))
-            for r in self.store.read("lineage")
-            .filter(F.col("run_id") == self.run_id)
-            .select("output_rows", "checksum")
-            .collect()
-        ]
-        n_triples = sum(n for n, _ in lin_rows)
-        ux = 0
-        for _, c in lin_rows:
-            ux ^= c & 0xFFFFFFFFFFFFFFFF
-        signed = ux - 2**64 if ux >= 2**63 else ux
-        checksum = f"{n_triples}:{signed}" if lin_rows else "0:None"
+        lin = lin_obs.get
+        n_triples = int(lin["n"] or 0)
+        checksum = f"{n_triples}:{int(lin['x'])}" if lin["parts"] else "0:None"
+        n_nodes = int(nodes_obs.get["n"] or 0)
         self.metrics["materialize"] = {
             "triples": n_triples,
             "nodes": n_nodes,

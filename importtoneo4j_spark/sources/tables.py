@@ -11,6 +11,16 @@ All filesystem access goes through the Hadoop FileSystem API resolved from
 the path's scheme (file://, hdfs://, s3a://, ...) — never ``os.*`` — so the
 same store works against local disks in tests and object stores on a
 cluster. Markers are small JSON objects written through FSDataOutputStream.
+
+Every parquet table carries a schema sidecar, ``<table>/_schema.json``: the
+schema a read of the table returns (the written frame's fields, partition
+columns last). ``read`` hands it to
+``spark.read.schema``, so opening a table runs no schema-inference job;
+a table without the sidecar is read by inference. The sidecar cannot go
+stale: an overwrite deletes the directory (sidecar included) before the new
+data lands, appends and partition overwrites keep the schema, ``promote``
+renames the directory with the sidecar inside, and Spark's file index skips
+``_``-prefixed files.
 """
 
 from __future__ import annotations
@@ -19,6 +29,9 @@ import json
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
 
 
 def _have_iceberg(spark: SparkSession) -> bool:
@@ -26,6 +39,16 @@ def _have_iceberg(spark: SparkSession) -> bool:
         return bool(spark.conf.get("spark.sql.catalog.kg", None))
     except Exception:
         return False
+
+
+def _table_schema(df: DataFrame, partition_by: list[str] | None) -> StructType:
+    """``df``'s fields in the order a parquet read of the written table
+    returns them: partition columns last. (A file-source read makes every
+    field nullable whatever the schema says, as an inferred read does.)"""
+    pcols = partition_by or []
+    return StructType(
+        [f for f in df.schema if f.name not in pcols] + [df.schema[c] for c in pcols]
+    )
 
 
 class TableStore:
@@ -106,6 +129,7 @@ class TableStore:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
+        self._save_schema(df, name, partition_by, replace=mode == "overwrite")
 
     def drop(self, name: str) -> None:
         if self.iceberg:
@@ -161,26 +185,63 @@ class TableStore:
             .partitionBy(*partition_by)
             .parquet(self.path(name))
         )
+        self._save_schema(df, name, partition_by, replace=False)
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg:
             return self.spark.read.table(f"kg.db.{name}")
-        return self.spark.read.parquet(self.path(name))
+        schema = self._read_json(self._schema_path(name))
+        if schema is None:
+            return self.spark.read.parquet(self.path(name))
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(
+            self.path(name)
+        )
+
+    # ---------------------------------------------------------- schema sidecar
+    def _schema_path(self, name: str) -> str:
+        return posixpath.join(self.path(name), SCHEMA_FILE)
+
+    def _save_schema(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None,
+        replace: bool,
+    ) -> None:
+        """Record the table's read schema after a write. An append or a
+        partition overwrite keeps the sidecar the table already has."""
+        path = self._schema_path(name)
+        if not replace:
+            fs, hp = self._fs(path)
+            if fs.exists(hp):
+                return
+        self._write_json(path, _table_schema(df, partition_by).jsonValue())
 
     # --------------------------------------------------------------- markers
     def marker_path(self, name: str) -> str:
         return posixpath.join(self.root, f"_{name}.COMPLETE.json")
 
     def write_marker(self, name: str, payload: dict) -> None:
+        self._write_json(self.marker_path(name), payload)
+
+    def read_marker(self, name: str) -> dict | None:
+        return self._read_json(self.marker_path(name))
+
+    def clear_marker(self, name: str) -> None:
         fs, hp = self._fs(self.marker_path(name))
+        fs.delete(hp, False)
+
+    # ------------------------------------------------------------ json files
+    def _write_json(self, path: str, payload: dict) -> None:
+        fs, hp = self._fs(path)
         out = fs.create(hp, True)
         try:
             out.write(bytearray(json.dumps(payload, sort_keys=True).encode("utf-8")))
         finally:
             out.close()
 
-    def read_marker(self, name: str) -> dict | None:
-        fs, hp = self._fs(self.marker_path(name))
+    def _read_json(self, path: str) -> dict | None:
+        fs, hp = self._fs(path)
         if not fs.exists(hp):
             return None
         jvm = self.spark._jvm
@@ -197,7 +258,3 @@ class TableStore:
         finally:
             reader.close()
         return json.loads("\n".join(chunks))
-
-    def clear_marker(self, name: str) -> None:
-        fs, hp = self._fs(self.marker_path(name))
-        fs.delete(hp, False)

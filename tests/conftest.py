@@ -18,6 +18,21 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """Callable: how many Spark jobs the session has started so far (the
+    newest job id in the driver's status store, read after the listener
+    bus drains). Diff two calls to count the jobs an operation runs."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def count() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def gen():
     return TranscriptGenerator(seed=42, n_entities=120)
 

@@ -538,11 +538,12 @@ def test_label_propagation_hand_traced(spark):
 
 
 def test_iterative_analytics_release_persisted_state(spark):
-    """VERDICT r4 wrong #2: repeated pagerank/BFS/LPA calls in one session
+    """VERDICT r4 wrong #2: repeated pagerank/BFS/LPA/CC calls in one session
     must not accumulate pinned blocks. Contract: every intermediate (the
     persisted edge table, per-iteration checkpoints) is released before
     return; the ONLY residual is the single checkpoint backing the
     returned frame, and stage_unpersist(result) releases that too."""
+    from importtoneo4j_spark.operators.canonicalize import connected_components
     from importtoneo4j_spark.operators.graph import (
         bfs_distances,
         hits,
@@ -571,6 +572,9 @@ def test_iterative_analytics_release_persisted_state(spark):
         lambda: shortest_paths(wedges, srcs, max_iters=3),
         lambda: k_core(edges, k=2, rounds=2),
         lambda: hits(edges, iters=2),
+        lambda: connected_components(
+            edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+        ),
     ):
         for _ in range(2):
             # re-measure per call: the async ContextCleaner may reclaim

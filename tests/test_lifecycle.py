@@ -144,6 +144,37 @@ def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
     assert m["materialize"]["nodes"] == want["nodes"] == pn.nodes().count()
 
 
+def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
+    """A crash after the append's lineage write but before its materialize
+    marker, retried under the same run_id: only materialize reruns, it
+    reports the checksum and node count of a rebuild of the superset, and
+    lineage holds that run_id's rows exactly once (a second append of them
+    used to double the count and cancel the xor checksum to 0)."""
+    root = tmp_path_factory.mktemp("retry")
+    base, full = _superset_inputs(spark, root, [10, 20])
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    p2 = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    pre_append = p2.store.read_marker("materialize")
+    p2.run(resume=False)
+    p2.store.write_marker("materialize", pre_append)  # the crash
+
+    retry = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    m = retry.run()
+    assert not m.get("skipped")
+    assert all(m[s].get("resumed") for s in ("ingest", "extract", "link", "canonicalize"))
+    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
+    want = fresh.run(resume=False)["materialize"]
+    assert m["materialize"]["checksum"] == want["checksum"]
+    assert m["materialize"]["nodes"] == want["nodes"] == retry.nodes().count()
+
+    lin = retry.lineage()
+    r2 = lin.filter(F.col("run_id") == "r2")
+    assert r2.count() == r2.select("partition_id").distinct().count()
+    assert r2.agg(F.sum("output_rows")).first()[0] == want["triples"]
+    assert lin.filter(F.col("run_id") == "r1").count() > 0  # r1 untouched
+
+
 def test_resume_mid_stage_identical(spark, data, tmp_path_factory):
     """Kill after stage k, resume -> identical final checksum."""
     w_full = str(tmp_path_factory.mktemp("lc1") / "kg")

@@ -58,6 +58,30 @@ def test_cc_self_loop(spark):
     assert got == {("a", "a"), ("b", "a")}
 
 
+def test_cc_two_node_components_job_budget(spark, spark_jobs, tmp_path):
+    """A graph of only 2-node components (the alias shape of a wide
+    vocabulary) converges in two rounds of one checkpoint each: round 1
+    labels straight off the edges, round 2 finds no change through the
+    Observation on its checkpoint. No distinct, label-seeding or count job
+    on top — at most 6 Spark jobs in all. The edges are a parquet scan, as
+    the pipeline's link_edges table is."""
+    from importtoneo4j_spark.session import stage_unpersist
+
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(
+        [(f"b{i:03d}", f"a{i:03d}") for i in range(200)], ["src", "dst"]
+    ).write.parquet(path)
+    df = spark.read.schema("src string, dst string").parquet(path)
+    before = spark_jobs()
+    comp = connected_components(df)
+    assert spark_jobs() - before <= 6
+    got = {(r["id"], r["comp"]) for r in comp.collect()}
+    stage_unpersist(comp)
+    assert got == {
+        (f"{side}{i:03d}", f"a{i:03d}") for i in range(200) for side in "ab"
+    }
+
+
 # ----------------------------------------------------------- first-wins merge
 
 @pytest.fixture(scope="module")

@@ -209,6 +209,7 @@ def test_empty_input_yields_zero_triples(spark, tmp_path_factory):
     assert m["materialize"]["triples"] == 0
     assert m["materialize"]["checksum"] == "0:None"
     assert pipe.rejects().count() == 0
+    assert pipe.lineage().count() == 0  # run_id-partitioned, still readable
 
 
 def test_export_neo4j_admin_csv(run, tmp_path_factory):

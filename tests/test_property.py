@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from importtoneo4j_spark.operators.canonicalize import connected_components
@@ -47,6 +47,8 @@ edge_lists = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(edges=edge_lists)
+@example(edges=[(i + 1, i) for i in range(19)])  # 20-node chain, min at the end
+@example(edges=[(12, i) for i in range(25) if i != 12])  # star
 def test_cc_matches_union_find(spark, edges):
     """Spark hash-min CC == sequential union-find on arbitrary graphs, and
     component id == min member id."""
