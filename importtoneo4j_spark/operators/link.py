@@ -76,6 +76,7 @@ def same_as_edges(extracted: DataFrame) -> DataFrame:
 
 def lsh_candidate_edges(
     vocab: DataFrame,
+    stored_sig: DataFrame | None = None,
     num_perm: int = NUM_PERM,
     bands: int = BANDS,
     rows_per_band: int = ROWS_PER_BAND,
@@ -87,58 +88,44 @@ def lsh_candidate_edges(
     """Distinct norm_keys -> verified similarity edges (src < dst).
 
     shingle -> minhash signature -> band keys -> explode -> self-equi-join on
-    band key -> distinct pair -> exact-Jaccard verify (native array ops).
+    band key -> distinct pair -> exact token-Jaccard verify (native array
+    ops on the pair's own keys).
 
-    ``persisted`` (round 6, VERDICT r5 nit): pass a list to receive the two
-    frames this function stage_persists (keys, sig) so the CALLER can
-    stage_unpersist exactly those once the returned edges are materialized —
+    ``stored_sig``: (norm_key, band_key) signatures computed earlier (the
+    pipeline's ``link_sig`` table). Only keys absent from it are MinHashed;
+    candidate generation and verification run over stored ∪ fresh and are
+    bit-identical to a run from scratch, because a key's signature is a pure
+    function of the key. Without it every key is fresh.
+
+    ``persisted`` (round 6, VERDICT r5 nit): pass a list to receive the
+    frame this function stage_persists (sig) so the CALLER can
+    stage_unpersist exactly that once the returned edges are materialized —
     the scoped replacement for the session-wide catalog.clearCache() the
     pipeline used to issue (which also dropped frames a caller had cached).
+    ``sig_out`` receives the signature frame (the pipeline stores it).
     """
-    keys = stage_persist(
-        lsh_keys(vocab),
-        mode="memory",  # vocabulary-sized (<< mentions); reused by the
-        # self-join aliases and the verification joins below. memory (not
-        # localCheckpoint): keeps lineage, and the table is small enough
-        # that MEMORY_AND_DISK never spills in practice
-    )
-    sig = stage_persist(
-        minhash_bands_agg(keys, "norm_key", "shingles", num_perm, bands, rows_per_band),
-        mode="memory",
-    )
+    keys = lsh_keys(vocab)
+
+    def signatures(df: DataFrame) -> DataFrame:
+        return minhash_bands_agg(df, "norm_key", "shingles", num_perm, bands, rows_per_band)
+
+    if stored_sig is None:
+        # an empty relation with the signature columns: the anti-join and
+        # union below fold away (cheaper to analyze than an empty MinHash)
+        stored_sig = keys.select("norm_key", F.lit("").alias("band_key")).limit(0)
+    fresh = keys.join(stored_sig.select("norm_key").distinct(), "norm_key", "left_anti")
+    # vocabulary-sized (<< mentions) and read four times by the hot-bucket
+    # cap and the band self-join. memory, not localCheckpoint: a checkpoint
+    # hides the frame's size and partitioning from AQE, and the band
+    # self-join and pair verification then ran in fewer, longer tasks
+    # (measured on wide_vocab, 4 vCPUs: 3.4-4.0 s vs 2.4-3.0 s per LSH)
+    sig = stage_persist(stored_sig.unionByName(signatures(fresh)), mode="memory")
     if persisted is not None:
-        persisted.extend([keys, sig])
+        persisted.append(sig)
     if sig_out is not None:
         sig_out.append(sig)
-    return edges_from_sig(sig, keys, threshold, max_bucket)
 
-
-def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """Distinct norm_keys with blocking shingles + verification tokens."""
-    return (
-        vocab.select("norm_key")
-        .distinct()
-        .withColumn("shingles", char_shingles(F.col("norm_key"), k))
-        .withColumn("tokens", token_shingles(F.col("norm_key")))
-        .filter(F.size("shingles") > 0)
-    )
-
-
-def edges_from_sig(
-    sig: DataFrame,
-    keys: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """(norm_key, band_key) signatures + (norm_key, tokens) keys -> verified
-    similarity edges: the band self-join + exact-Jaccard half of
-    lsh_candidate_edges, split out (round 6) so the pipeline's append mode
-    can feed it STORED signatures — per-key md5/shingle work then runs only
-    for keys new to this batch, while candidate generation and verification
-    stay bit-identical to a full re-run (the signature of a key is a pure
-    function of the key, so stored ∪ fresh == recomputed-from-scratch)."""
     capped = drop_hot_buckets(sig, max_bucket)
-
     a = capped.alias("a")
     b = capped.alias("b")
     pairs = (
@@ -147,20 +134,20 @@ def edges_from_sig(
         .select(F.col("a.norm_key").alias("src"), F.col("b.norm_key").alias("dst"))
         .distinct()
     )
-    verified = (
-        pairs.join(
-            keys.select(F.col("norm_key").alias("src"), F.col("tokens").alias("tok_a")),
-            "src",
-        )
-        .join(
-            keys.select(F.col("norm_key").alias("dst"), F.col("tokens").alias("tok_b")),
-            "dst",
-        )
-        .withColumn("sim", jaccard(F.col("tok_a"), F.col("tok_b")))
-        .filter(F.col("sim") >= threshold)
-        .select("src", "dst")
+    # a key's tokens are a pure function of the key: computed on the pair,
+    # no join back to the vocabulary
+    sim = jaccard(token_shingles(F.col("src")), token_shingles(F.col("dst")))
+    return pairs.filter(sim >= threshold)
+
+
+def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:
+    """Distinct norm_keys with their blocking shingles."""
+    return (
+        vocab.select("norm_key")
+        .distinct()
+        .withColumn("shingles", char_shingles(F.col("norm_key"), k))
+        .filter(F.size("shingles") > 0)
     )
-    return verified
 
 
 def drop_hot_buckets(

@@ -4,8 +4,11 @@ hard part 4).
 
 Replaces the reference's embedded-Neo4j store handle
 (VariantDatabase.java:84-93 startDatabase / Main.java:47-55 destructive
-re-create): ``overwrite`` == the reference's ``-n`` recreate path, ``append``
-== its re-run upsert path.
+re-create). The pipeline's stages only ever add to a table (``append``,
+``overwrite_partitions``) or replace a table they fully recompute
+(``overwrite``, ``promote``); its rebuild — the reference's ``-n`` — is
+``drop`` of every table followed by the same appends. Appending to, or
+overwriting partitions of, a table that does not exist creates it.
 
 All filesystem access goes through the Hadoop FileSystem API resolved from
 the path's scheme (file://, hdfs://, s3a://, ...) — never ``os.*`` — so the
@@ -15,8 +18,10 @@ cluster. Markers are small JSON objects written through FSDataOutputStream.
 Every parquet table carries a schema sidecar, ``<table>/_schema.json``: the
 schema a read of the table returns (the written frame's fields, partition
 columns last). ``read`` hands it to
-``spark.read.schema``, so opening a table runs no schema-inference job;
-a table without the sidecar is read by inference. The sidecar cannot go
+``spark.read.schema``, so opening a table runs no schema-inference job,
+and a partitioned table that holds no rows (an empty write creates no
+partition directory) still reads as an empty frame with its columns; a
+table without the sidecar is read by inference. The sidecar cannot go
 stale: an overwrite deletes the directory (sidecar included) before the new
 data lands, appends and partition overwrites keep the schema, ``promote``
 renames the directory with the sidecar inside, and Spark's file index skips
@@ -82,28 +87,12 @@ class TableStore:
         fs, hp = self._fs(self.path(name))
         if not fs.exists(hp) or not fs.getFileStatus(hp).isDirectory():
             return False
-        if fs.exists(self._fs(posixpath.join(self.path(name), "_SUCCESS"))[1]):
-            return True
-        for st in fs.listStatus(hp):
-            if st.getPath().getName().endswith(".parquet"):
+        # the sidecar: a dynamic partition overwrite that creates a table
+        # leaves no _SUCCESS at its root
+        for meta in (SCHEMA_FILE, "_SUCCESS"):
+            if fs.exists(self._fs(posixpath.join(self.path(name), meta))[1]):
                 return True
-        return False
-
-    def has_partition_dirs(self, name: str, col: str) -> bool:
-        """True if the table directory contains ``col=...`` partition
-        subdirectories. An empty-input rebuild writes ``extracted`` flat
-        (no ``_run=`` dirs), so an append onto it must re-extract in full
-        instead of adding a partition beside flat files."""
-        if self.iceberg:
-            return False
-        fs, hp = self._fs(self.path(name))
-        if not fs.exists(hp):
-            return False
-        prefix = f"{col}="
-        for st in fs.listStatus(hp):
-            if st.isDirectory() and st.getPath().getName().startswith(prefix):
-                return True
-        return False
+        return any(st.getPath().getName().endswith(".parquet") for st in fs.listStatus(hp))
 
     def write(
         self,
@@ -113,17 +102,16 @@ class TableStore:
         partition_by: list[str] | None = None,
     ) -> None:
         if self.iceberg:
+            if mode == "append" and self.exists(name):
+                # append inherits the existing table's partition spec
+                df.writeTo(f"kg.db.{name}").append()
+                return
             w = df.writeTo(f"kg.db.{name}")
-            if mode == "overwrite":
-                if partition_by:
-                    from pyspark.sql.functions import col
+            if partition_by:
+                from pyspark.sql.functions import col
 
-                    w = w.partitionedBy(*[col(c) for c in partition_by])
-                w.createOrReplace()
-            else:
-                # append inherits the existing table's partition spec; the
-                # pipeline only appends to tables it has already created
-                w.append()
+                w = w.partitionedBy(*[col(c) for c in partition_by])
+            w.createOrReplace()
             return
         w = df.write.mode(mode)
         if partition_by:
@@ -151,12 +139,11 @@ class TableStore:
         copy+delete; the loud-failure property still holds because the
         destination only appears after the copy completes.)"""
         if self.iceberg:
-            # Iceberg staging is redundant (REPLACE TABLE is atomic); callers
-            # use promote only on the parquet fallback. Mirror the semantics.
-            self.spark.sql(
-                f"CREATE OR REPLACE TABLE kg.db.{dst} AS SELECT * FROM kg.db.{src}"
-            )
-            self.spark.sql(f"DROP TABLE IF EXISTS kg.db.{src}")
+            # a rename keeps the source's partition spec (CREATE OR REPLACE
+            # ... AS SELECT would drop it, and a later overwritePartitions
+            # on the unpartitioned table would replace the whole table)
+            self.spark.sql(f"DROP TABLE IF EXISTS kg.db.{dst}")
+            self.spark.sql(f"ALTER TABLE kg.db.{src} RENAME TO kg.db.{dst}")
             return
         fs, dst_hp = self._fs(self.path(dst))
         fs.delete(dst_hp, True)
@@ -173,11 +160,15 @@ class TableStore:
         dynamic partitionOverwriteMode stages the job output and swaps just
         the matched partition dirs at commit; the mode is a writer option,
         so it never leaks to writes running concurrently in the same
-        session. Iceberg: overwritePartitions.
+        session. Iceberg: overwritePartitions. A missing table is created
+        partitioned by ``partition_by``.
         The caller must ensure ``df``'s lineage does not scan ``name``
         itself (checkpoint first) — V1 rejects overwriting a read path."""
         if self.iceberg:
-            df.writeTo(f"kg.db.{name}").overwritePartitions()
+            if self.exists(name):
+                df.writeTo(f"kg.db.{name}").overwritePartitions()
+            else:
+                self.write(df, name, partition_by=partition_by)
             return
         (
             df.write.mode("overwrite")

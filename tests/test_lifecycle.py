@@ -3,13 +3,15 @@ incremental extraction (FIXTURES.md §4 rerun_idempotent / resume_mid_stage)."""
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.datagen import TranscriptGenerator
-from importtoneo4j_spark.plans.pipeline import KGPipeline
+from importtoneo4j_spark.plans.pipeline import STAGES, KGPipeline
 
 
 @pytest.fixture(scope="module")
@@ -37,11 +39,9 @@ def test_append_same_input_is_noop(spark, data, tmp_path_factory):
     p2.store.write_marker("materialize", {"run_id": "r1", "imported_runs": ["r1"]})
     m2 = p2.run(resume=False)
     assert m2["materialize"]["triples"] == n1
-    assert p2.store.read("triples_delta").count() == 0
-    # round 5: the append run reuses the snapshot's extraction and runs the
-    # UDF on the (here empty) watermark delta only — yet the full inventory
-    # it writes is identical to the overwrite run's
-    assert m2["extract"]["delta_only"] is True
+    assert _run_triples(p2, "r2") == 0  # the run's delta partition is empty
+    # the append extracts the (here empty) watermark delta only — yet the
+    # inventory it reports is identical to the overwrite run's
     assert m2["extract"]["assertions"] == m1["extract"]["assertions"]
 
 
@@ -62,43 +62,57 @@ def _superset_inputs(spark, root, sizes):
 
 
 def _assert_unmixed_layout(work):
-    """pred= directories next to flat files in one triples directory are a
-    layout partition discovery rejects (or silently drops rows from)."""
-    entries = os.listdir(os.path.join(work, "triples"))
-    has_pred_dirs = any(e.startswith("pred=") for e in entries)
-    has_flat_files = any(e.endswith(".parquet") for e in entries)
-    assert not (has_pred_dirs and has_flat_files)
-    return has_pred_dirs
+    """Every triples file sits in a _run=<id>/pred=<p> directory (partition
+    directories next to flat files are a layout partition discovery
+    rejects, or silently drops rows from). Returns the run ids that hold
+    triples."""
+    root = os.path.join(work, "triples")
+    rels = [
+        os.path.relpath(f, root)
+        for f in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    ]
+    for rel in rels:
+        assert re.fullmatch(r"_run=[^/]+/pred=[^/]+/[^/]+\.parquet", rel), rel
+    return {rel.split(os.sep)[0][len("_run="):] for rel in rels}
+
+
+def _run_triples(pipe, run_id):
+    """Rows in one run's _run partition of triples: the triples that run
+    added (the reference's new-keys delta sink)."""
+    return pipe.store.read("triples").filter(F.col("_run") == run_id).count()
 
 
 def test_append_layout_survives_new_session(spark, tmp_path_factory):
-    """The triples layout an append writes is read from the durable
-    materialize marker, not from session state: an empty-input rebuild
-    writes triples flat, and an append run in a new Spark session (its own
-    catalog and SQL conf) must still write flat files, never pred=
-    directories mixed into the flat directory."""
+    """The triples layout does not depend on session state: an empty-input
+    rebuild writes no triples file, and an append run in a new Spark
+    session (its own catalog and SQL conf) onto it writes every triple into
+    its own _run/pred directories — no flat files — with the materialize
+    marker counting exactly the rows the table holds, and the graph equal
+    to a rebuild of the same input."""
     root = tmp_path_factory.mktemp("lay")
     base, full = _superset_inputs(spark, root, [0, 20])
     work = str(root / "kg")
     p1 = KGPipeline(spark, base, work, run_id="r1")
-    p1.run(resume=False)
-    assert p1.store.read_marker("materialize")["triples_layout"] == "flat"
+    assert p1.run(resume=False)["materialize"]["triples"] == 0
+    assert _assert_unmixed_layout(work) == set()
 
     p2 = KGPipeline(spark.newSession(), full, work, run_id="r2", mode="append")
-    p2.run(resume=False)
-    assert not _assert_unmixed_layout(work)
+    m = p2.run(resume=False)
+    assert _assert_unmixed_layout(work) == {"r2"}
     marker = p2.store.read_marker("materialize")
-    assert marker["triples_layout"] == "flat"
-    assert marker["triples"] == p2.triples().count() > 0
+    assert marker["triples"] == p2.triples().count() == _run_triples(p2, "r2") > 0
+
+    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
+    want = fresh.run(resume=False)["materialize"]
+    assert m["materialize"]["checksum"] == want["checksum"]
+    assert m["materialize"]["nodes"] == want["nodes"]
 
 
 def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
-    """Once the marker reads 'flat' the SECOND append must also write flat
-    files; a check that keyed on any other layout name would write pred=
-    directories into the flat triples directory and partition discovery
-    would silently drop rows on the next read. The flat table here comes
-    from an empty-input rebuild; base + two appends must equal a rebuild
-    over the union, with no row lost."""
+    """Two appends onto an empty-input rebuild: each writes its triples
+    into its own _run partition, unmixed with flat files, so the table
+    holds exactly the sum of the two deltas (no row lost or counted twice)
+    and base + two appends equals a rebuild over the union."""
     root = tmp_path_factory.mktemp("dd")
     inputs = _superset_inputs(spark, root, [0, 20, 30])
     work = str(root / "kg")
@@ -107,9 +121,8 @@ def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
     for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
         pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
         m = pn.run(resume=False)
-        n += pn.store.read("triples_delta").count()
-        assert pn.store.read_marker("materialize")["triples_layout"] == "flat"
-        assert not _assert_unmixed_layout(work)
+        n += _run_triples(pn, run_id)
+        assert run_id in _assert_unmixed_layout(work)
     assert pn.triples().count() == n  # nothing silently dropped
     assert pn.store.read_marker("materialize")["triples"] == n
 
@@ -122,21 +135,21 @@ def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
 @pytest.mark.parametrize("base_convs", [10], ids=["base10"])
 def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
     """A 10-conversation base plus two superset appends equals a rebuild
-    over the union. The pred= partitioned layout the base wrote survives
-    both appends unmixed, and the materialize marker counts exactly the
-    rows the table holds (nothing silently dropped). The empty-base (flat)
-    case is test_double_append_after_demotion_stays_flat."""
+    over the union. Each run's triples land in its own _run partition,
+    unmixed with flat files, and the materialize marker counts exactly the
+    rows the table holds (nothing silently dropped). The empty-base case
+    is test_double_append_after_demotion_stays_flat."""
     root = tmp_path_factory.mktemp("two_appends")
     inputs = _superset_inputs(spark, root, [base_convs, 20, 30])
     work = str(root / "kg")
     KGPipeline(spark, inputs[0], work, run_id="r1").run(resume=False)
+    runs = {"r1"}
     for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
         pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
         m = pn.run(resume=False)
-        marker = pn.store.read_marker("materialize")
-        assert marker["triples_layout"] == "pred_partitioned"
-        assert _assert_unmixed_layout(work)
-        assert marker["triples"] == pn.triples().count()
+        runs.add(run_id)
+        assert _assert_unmixed_layout(work) == runs
+        assert pn.store.read_marker("materialize")["triples"] == pn.triples().count()
 
     fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
     want = fresh.run(resume=False)["materialize"]
@@ -147,9 +160,10 @@ def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
 def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     """A crash after the append's lineage write but before its materialize
     marker, retried under the same run_id: only materialize reruns, it
-    reports the checksum and node count of a rebuild of the superset, and
-    lineage holds that run_id's rows exactly once (a second append of them
-    used to double the count and cancel the xor checksum to 0)."""
+    reports the checksum, node count and mention total of a rebuild of the
+    superset, and lineage holds that run_id's rows exactly once (a second
+    append of them used to double the count and cancel the xor checksum to
+    0)."""
     root = tmp_path_factory.mktemp("retry")
     base, full = _superset_inputs(spark, root, [10, 20])
     work = str(root / "kg")
@@ -167,12 +181,77 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     want = fresh.run(resume=False)["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"] == retry.nodes().count()
+    # the node upsert is not repeated: mention counts are not added twice
+    mentions = F.sum("n_mentions")
+    assert retry.nodes().agg(mentions).first() == fresh.nodes().agg(mentions).first()
 
     lin = retry.lineage()
     r2 = lin.filter(F.col("run_id") == "r2")
     assert r2.count() == r2.select("partition_id").distinct().count()
     assert r2.agg(F.sum("output_rows")).first()[0] == want["triples"]
     assert lin.filter(F.col("run_id") == "r1").count() > 0  # r1 untouched
+
+
+def test_append_retried_under_new_run_id_matches_rebuild(spark, tmp_path_factory):
+    """An append that crashes after canonicalize and is retried under a NEW
+    run_id: the retry deletes the crashed run's extraction partition (its
+    run never reached imported_runs, and conv_watermarks did not advance,
+    so the retry re-extracts the same delta turns). Assertion count,
+    extracted rows, checksum and node count equal a rebuild of the
+    superset; keeping the orphan partition counted the delta twice."""
+    root = tmp_path_factory.mktemp("orphan")
+    base, full = _superset_inputs(spark, root, [10, 20])
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    crashed = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    for stage in STAGES[:-1]:
+        getattr(crashed, f"stage_{stage}")()  # dies before materialize
+
+    retry = KGPipeline(spark, full, work, run_id="r3", mode="append")
+    m = retry.run()
+    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
+    want = fresh.run(resume=False)
+    n = want["extract"]["assertions"]
+    assert m["extract"]["assertions"] == retry._extracted().count() == n
+    assert m["materialize"]["checksum"] == want["materialize"]["checksum"]
+    assert m["materialize"]["nodes"] == want["materialize"]["nodes"] == retry.nodes().count()
+
+
+def test_rebuild_onto_used_store_forgets_old_runs(spark, tmp_path_factory):
+    """A rebuild (the reference's -n) into a workdir holding a base and an
+    append first clears the store: checksum, node count and lineage equal
+    a rebuild into a fresh directory, only the new run is imported, and
+    re-importing the old base run_id afterwards is not skipped."""
+    root = tmp_path_factory.mktemp("reuse")
+    base, full = _superset_inputs(spark, root, [10, 20])
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    KGPipeline(spark, full, work, run_id="r2", mode="append").run(resume=False)
+
+    again = KGPipeline(spark, full, work, run_id="r3")
+    m = again.run()
+    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="r3")
+    want = fresh.run()["materialize"]
+    assert m["materialize"]["checksum"] == want["checksum"]
+    assert m["materialize"]["nodes"] == want["nodes"] == again.nodes().count()
+    assert again.store.read_marker("materialize")["imported_runs"] == ["r3"]
+
+    def lineage_totals(pipe):
+        return pipe.lineage().agg(
+            F.collect_set("run_id"),
+            F.count(F.lit(1)),
+            F.sum("output_rows"),
+            F.expr("bit_xor(cast(checksum as bigint))"),
+        ).first()
+
+    assert lineage_totals(again) == lineage_totals(fresh)
+    assert lineage_totals(again)[0] == ["r3"]
+
+    old = KGPipeline(spark, base, work, run_id="r1", mode="append")
+    m_old = old.run()
+    assert not m_old.get("skipped")
+    assert m_old["materialize"]["checksum"] == want["checksum"]  # base ⊂ superset
+    assert old.store.read_marker("materialize")["imported_runs"] == ["r1", "r3"]
 
 
 def test_resume_mid_stage_identical(spark, data, tmp_path_factory):
@@ -323,9 +402,11 @@ def test_append_auto_fold_reaches_fixpoint(spark, tmp_path_factory):
         p2.store.read_marker("materialize")["checksum"]
         == fresh.store.read_marker("materialize")["checksum"]
     )
-    # a later append onto the folded graph still works (layout marker sane)
+    # the fold rebuilt the graph into its own run's partition, and a later
+    # append onto the folded graph adds nothing
+    assert _assert_unmixed_layout(work) == {"r2"}
     p3 = _append_run(spark, full, work, "r3", fold_threshold=0)
-    assert p3.store.read("triples_delta").count() == 0
+    assert _run_triples(p3, "r3") == 0
     assert p3.metrics["canonicalize"]["stale_surfaces"] == 0
 
 
@@ -621,13 +702,15 @@ def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):
         return out
 
     work = str(tmp_path_factory.mktemp("dsc") / "kg")
-    m1 = KGPipeline(spark, base_p, work, run_id="b").run(resume=False)
+    p1 = KGPipeline(spark, base_p, work, run_id="b")
+    m1 = p1.run(resume=False)
+    # a rebuild is an append onto an empty store: its delta is every triple
+    assert _run_triples(p1, "b") == m1["materialize"]["triples"] > 0
     ext_before = fsig(os.path.join(work, "extracted"))
     nodes_before = fsig(os.path.join(work, "nodes"))
 
     pa = KGPipeline(spark, super_p, work, run_id="a", mode="append")
     ma = pa.run(resume=False)
-    assert ma["extract"]["delta_only"] is True
 
     # (b) base extraction partitions byte-identical; the delta landed in a
     # new _run=a partition

@@ -180,13 +180,17 @@ def test_partitioned_layout_prunes_point_lookups(run):
 def test_triples_files_are_sorted_within_partitions(run):
     """O1 sort-before-load (import.sh SortVcf analog): each written triples
     file is (subj, obj)-ordered so parquet row-group min/max stats can skip
-    on subj point lookups."""
+    on subj point lookups, and the write sorts once: in the final plan of
+    the triples write the only Sort between the writer and the aggregate is
+    the (pred, subj, obj) one, so the writer added no re-sort of its own
+    (round 6)."""
     import glob
+    import re
 
     import pyarrow.parquet as pq
 
     pipe, _ = run
-    files = glob.glob(pipe.store.path("triples") + "/pred=*/*.parquet")
+    files = glob.glob(pipe.store.path("triples") + "/_run=*/pred=*/*.parquet")
     assert files
     checked = 0
     for f in files[:5]:
@@ -195,6 +199,34 @@ def test_triples_files_are_sorted_within_partitions(run):
         assert pairs == sorted(pairs), f
         checked += 1
     assert checked > 0
+
+    execs = pipe.spark._jsparkSession.sharedState().statusStore().executionsList()
+    target = f"Arguments: file:{pipe.store.path('triples')}, "
+    writes = [
+        d
+        for d in (execs.apply(i).physicalPlanDescription() for i in range(execs.size()))
+        if "InsertIntoHadoopFsRelationCommand" in d and target in d
+    ]
+    assert len(writes) == 1  # each triple is written once
+    tree, details = writes[0].split("\n\n", 1)
+    sort_args = dict(
+        re.findall(r"^\((\d+)\) Sort[^\n]*\nInput[^\n]*\nArguments: \[([^\]]*)\]", details, re.M)
+    )
+    # the operators between the writer and the triples aggregate
+    final = tree.split("== Initial Plan ==")[0].splitlines()
+    below = final[next(i for i, line in enumerate(final) if "WriteFiles" in line) + 1 :]
+    chain = []
+    for line in below:
+        name, node = re.search(r"(\w+) \((\d+)\)\s*$", line).groups()
+        if name not in ("Project", "Sort"):
+            break
+        chain.append((name, node))
+    sorts = [
+        [key.split("#")[0] for key in sort_args[node].split(", ")]
+        for name, node in chain
+        if name == "Sort"
+    ]
+    assert sorts == [["pred", "subj", "obj"]]
 
 
 def test_empty_input_yields_zero_triples(spark, tmp_path_factory):
