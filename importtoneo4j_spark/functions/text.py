@@ -79,20 +79,6 @@ def minhash_signature(shingles: Column, num_perm: int = 32) -> Column:
     )
 
 
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Signature -> array<string> of band keys: band_id || md5(concat of the
-    band's row hashes). Two strings collide on a band iff all ``rows_per_band``
-    min-hashes in that band are equal."""
-    keys = []
-    for b in range(bands):
-        parts = [
-            F.element_at(signature, b * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
-        keys.append(F.concat(F.lit(f"{b}|"), F.md5(F.concat_ws("|", *parts))))
-    return F.array(*keys)
-
-
 # universal-hash MinHash family: one md5 per shingle, then num_perm affine
 # permutations (a_k * h + b_k) mod MINHASH_PRIME. h is the first 7 hex chars
 # of md5 (28 bits), so a_k * h stays < 2^59 — no int64 overflow in either

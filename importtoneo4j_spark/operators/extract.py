@@ -73,8 +73,3 @@ def extract_assertions(transcripts: DataFrame) -> DataFrame:
         F.when(is_aka, "same_as").otherwise("triple").alias("kind"),
         F.when(is_tool, F.lit(0.8)).otherwise(F.lit(1.0)).cast("float").alias("quality"),
     )
-
-
-def with_dynamic_pred_stats(extracted: DataFrame) -> DataFrame:
-    """Predicate vocabulary as data (never N DataFrames): per-pred counts."""
-    return extracted.groupBy("pred").agg(F.count("*").alias("n")).orderBy("pred")

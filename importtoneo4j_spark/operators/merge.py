@@ -82,12 +82,6 @@ def label_union(
     return final
 
 
-def dedupe_exact(df: DataFrame, keys: list[str]) -> DataFrame:
-    """HashSet-style dedup (reference VariantDatabase.java:357) — partial +
-    final hash aggregate via dropDuplicates."""
-    return df.dropDuplicates(keys)
-
-
 def new_keys_only(df: DataFrame, snapshot: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of df whose key is absent from snapshot (the reference's
     new-variants delta, VariantDatabase.java:235-263,312) — left_anti join."""

@@ -114,15 +114,6 @@ class Oracle:
     def triple_set(self) -> set[tuple[str, str, str]]:
         return set(self.triples.keys())
 
-    def triples_df(self) -> pd.DataFrame:
-        rows = [
-            (s, p, o, c, t, q)
-            for (s, p, o), (c, t, q) in sorted(self.triples.items())
-        ]
-        return pd.DataFrame(
-            rows, columns=["subj", "pred", "obj", "conv_id", "turn_idx", "quality"]
-        )
-
 
 def precision_recall(
     engine: set[tuple[str, str, str]], oracle: set[tuple[str, str, str]]

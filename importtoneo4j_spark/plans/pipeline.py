@@ -30,7 +30,6 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -144,23 +143,16 @@ class KGPipeline:
         for stage in STAGES + ["nodes", "enrich"]:
             self.store.clear_marker(stage)
 
-    def _drop_unimported_runs(self, name: str) -> None:
-        """Delete every ``_run=<id>`` partition of ``name`` whose run is not
-        in the materialize marker's ``imported_runs``: this run's own partial
+    def _drop_unimported(self, tables: list[tuple[str, str]]) -> None:
+        """Delete, for each (table, run column), every partition written by
+        a run that is not in ``imported_runs``: this run's own partial
         partition from a crashed attempt, and the partitions of a crashed
-        run retried under another run_id (conv_watermarks only advance in
-        materialize, so the retry re-extracts the same delta turns — kept,
-        they would count twice). The caller then appends this run's
-        partition. Matches by DECODED partition value — Spark %-escapes
-        special characters in partition dir names, so a literal
-        ``_run=<value>`` path probe would miss e.g. a run id with ':'."""
-        keep = set(self._prev_runs())
-        fs, root = self.store._fs(self.store.path(name))
-        fs.mkdirs(root)  # the caller's write creates the directory anyway
-        for st in fs.listStatus(root):
-            part = st.getPath().getName()
-            if part.startswith("_run=") and unquote(part[5:]) not in keep:
-                fs.delete(st.getPath(), True)
+        run retried under another run_id. Kept, they would count twice —
+        and a crashed run's watermarks would hide its delta turns from the
+        retry, whose extraction partition was deleted."""
+        imported = self._prev_runs()
+        for name, col in tables:
+            self.store.drop_partitions(name, col, imported)
 
     # ---------------------------------------------------------------- stages
     def _write_counted(self, df: DataFrame, name: str, **write_kwargs) -> int:
@@ -218,42 +210,47 @@ class KGPipeline:
             .drop("_ok", "reject_reason")
         )
 
-    def stage_extract(self) -> None:
-        """Extract the valid turns above the stored per-conversation
-        watermarks into this run's ``_run=<run_id>`` partition; the other
-        runs' partitions are never rewritten. Per-turn extraction is
-        row-local and deterministic and an append input is a documented
-        superset whose old turns are byte-identical, so the stored
-        partitions ∪ extract(delta) == extract(superset) bit-for-bit. A
-        crashed attempt leaves at worst a partition of an unimported run,
-        which the retry deletes before it writes (conv_watermarks only
-        advance in materialize, so the delta filter reproduces the same
-        rows — exactly-once)."""
+    def _new_turns(self) -> DataFrame:
+        """The valid turns this run imports: those above the imported runs'
+        per-conversation watermarks. Each run writes its marks into its own
+        ``_run`` partition of conv_watermarks, and a run's marks only count
+        once the callers have deleted the partitions of runs that never
+        completed. A turn is imported iff SOME run's mark for its
+        conversation reaches it — an anti-join on conv_id with the mark
+        comparison as its condition, so no max over the runs (and no
+        shuffle for one) is needed."""
         valid = self._valid()
         wm = self._snapshot(
-            "conv_watermarks", like=valid.select("conv_id", F.col("turn_idx").alias("max_turn"))
+            "conv_watermarks",
+            like=valid.select("conv_id", F.col("turn_idx").alias("max_turn")),
+        ).select(F.col("conv_id").alias("wm_conv"), "max_turn")
+        return valid.join(
+            wm,
+            (F.col("conv_id") == F.col("wm_conv")) & (F.col("turn_idx") <= F.col("max_turn")),
+            "left_anti",
         )
-        delta = (
-            valid.join(wm, "conv_id", "left")
-            .filter(F.col("max_turn").isNull() | (F.col("turn_idx") > F.col("max_turn")))
-            .drop("max_turn")
-        )
-        self._drop_unimported_runs("extracted")
+
+    def stage_extract(self) -> None:
+        """Extract the valid turns above the imported watermarks into this
+        run's ``_run=<run_id>`` partition; the other runs' partitions are
+        never rewritten. Per-turn extraction is row-local and deterministic
+        and an append input is a documented superset whose old turns are
+        byte-identical, so the stored partitions ∪ extract(delta) ==
+        extract(superset) bit-for-bit. A crashed attempt (of this run_id or
+        another) leaves at worst extraction and watermark partitions of an
+        unimported run; both are deleted first, so the delta filter
+        reproduces that run's rows — exactly-once."""
+        self._drop_unimported([("extracted", "_run"), ("conv_watermarks", "_run")])
         n_delta = self._write_counted(
-            extract_assertions(delta).withColumn("_run", F.lit(self.run_id)),
+            extract_assertions(self._new_turns()).withColumn("_run", F.lit(self.run_id)),
             "extracted",
             mode="append",
             partition_by=["_run"],
         )
         # the imported runs' total comes from the materialize marker (a
-        # crashed run's extract marker would count its delta twice); a
-        # marker without it (manual intervention) falls back to a metadata
-        # count — parquet answers count() from row-group statistics
-        imported = self.store.read_marker("materialize") or {"assertions": 0}
-        if "assertions" in imported:
-            n = int(imported["assertions"]) + n_delta
-        else:
-            n = self._extracted().count()
+        # crashed run's extract marker would count its delta twice)
+        imported = self.store.read_marker("materialize") or {}
+        n = int(imported.get("assertions", 0)) + n_delta
         self.metrics["extract"] = {"assertions": n}
         self._mark("extract", assertions=n)
 
@@ -394,16 +391,30 @@ class KGPipeline:
         derivable from an old turn is already stored; new (s,p,o) keys can
         only arise from delta turns, and a new key has no old occurrences,
         so its first-wins attribution over the delta equals its attribution
-        over the full corpus. An auto-folded run clears the triples and
-        nodes and takes every run's partition as its delta."""
+        over the full corpus.
+
+        A fold clears the triples and nodes and takes every run's partition
+        as its delta: an auto-folded run, and a run that finds ``nodes``
+        possibly touched by a run that never completed. The nodes are
+        upserted in place, so the ``nodes`` marker names the run that may
+        have changed them since the last import; a retry after a crash
+        anywhere in this stage, under this run_id or another, cannot merge
+        a delta onto them again and re-materializes from every run's
+        extraction instead."""
         links = self.store.read("links")
-        if self.store.read_marker("canonicalize").get("auto_folded"):
+        touched = self.store.read_marker("nodes")
+        fold = self.store.read_marker("canonicalize").get("auto_folded") or (
+            touched is not None and touched["run_id"] not in self._prev_runs()
+        )
+        self._mark("nodes")
+        self._drop_unimported(
+            [("triples", "_run"), ("conv_watermarks", "_run"), ("lineage", "run_id")]
+        )
+        if fold:
             for name in ("triples", "nodes"):
                 self.store.drop(name)
-            self.store.clear_marker("nodes")
             delta_ext = self._extracted()
         else:
-            self._drop_unimported_runs("triples")
             delta_ext = self._extracted_run(self.run_id)
 
         def _triples() -> None:
@@ -446,11 +457,6 @@ class KGPipeline:
             # partitions holding entities the delta touches are merged and
             # rewritten (dynamic partition overwrite); untouched bucket
             # directories keep their files byte-for-byte (contract-tested).
-            # The upsert adds mention counts, so a retry of this stage must
-            # not repeat it: the "nodes" marker records the run whose delta
-            # the table already holds.
-            if self._done("nodes"):
-                return
             delta_nodes = canonical_nodes(delta_ext, links)
             if self.store.exists("nodes"):
                 # the delta has two consumers (touched buckets, merge):
@@ -480,23 +486,22 @@ class KGPipeline:
                 "nodes",
                 ["_bucket"],
             )
-            self._mark("nodes")
 
         def _watermarks() -> None:
-            # per-conversation high-water marks of every imported turn: the
-            # next run's extract delta filters against these. Computed from
-            # the ingested valid turns (turns with zero assertions still
-            # count as imported); a fold (no ingest) uses its extraction.
-            # Merging reads the table being replaced -> stage through a
-            # sibling, promoted below the pool join.
-            src = self._valid() if self.store.exists("ingested") else delta_ext
-            run_wm = src.groupBy("conv_id").agg(F.max("turn_idx").alias("max_turn"))
+            # per-conversation high-water marks of the turns this run
+            # imports, into its own _run partition: the next run's extract
+            # delta filters against the max over the imported runs'
+            # partitions. Computed from the ingested valid turns (turns with
+            # zero assertions still count as imported); fold_epochs (no
+            # ingest) uses its extraction.
+            src = self._new_turns() if self.store.exists("ingested") else delta_ext
             self.store.write(
-                self._snapshot("conv_watermarks", like=run_wm)
-                .unionByName(run_wm)
-                .groupBy("conv_id")
-                .agg(F.max("max_turn").alias("max_turn")),
-                "conv_watermarks_next",
+                src.groupBy("conv_id")
+                .agg(F.max("turn_idx").alias("max_turn"))
+                .withColumn("_run", F.lit(self.run_id)),
+                "conv_watermarks",
+                mode="append",
+                partition_by=["_run"],
             )
 
         # guide §2.6 (overlap independent jobs): the three updates write
@@ -508,7 +513,6 @@ class KGPipeline:
         with ThreadPoolExecutor(max_workers=3) as pool:
             for f in [pool.submit(fn) for fn in (_triples, _nodes, _watermarks)]:
                 f.result()
-        self.store.promote("conv_watermarks_next", "conv_watermarks")
 
         final = self.store.read("triples")
 

@@ -172,9 +172,3 @@ def stage_unpersist(df) -> None:
         pass
     if not found:
         df.unpersist(True)
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -13,21 +13,10 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.operators.merge import assert_unique
-
-
-def read_conv_meta(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.withColumn(
-        "analysis_id",
-        F.coalesce(
-            F.col("analysis_id"),
-            F.concat_ws("_", F.col("worklist_id"), F.col("conv_id"), F.col("run_id")),
-        ),
-    )
 
 
 def reject_duplicate_analyses(meta: DataFrame) -> None:

@@ -6,7 +6,8 @@ Replaces the reference's embedded-Neo4j store handle
 (VariantDatabase.java:84-93 startDatabase / Main.java:47-55 destructive
 re-create). The pipeline's stages only ever add to a table (``append``,
 ``overwrite_partitions``) or replace a table they fully recompute
-(``overwrite``, ``promote``); its rebuild — the reference's ``-n`` — is
+(``overwrite``, ``promote``), and delete the partitions of runs that never
+completed (``drop_partitions``); its rebuild — the reference's ``-n`` — is
 ``drop`` of every table followed by the same appends. Appending to, or
 overwriting partitions of, a table that does not exist creates it.
 
@@ -32,6 +33,7 @@ from __future__ import annotations
 
 import json
 import posixpath
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -177,6 +179,30 @@ class TableStore:
             .parquet(self.path(name))
         )
         self._save_schema(df, name, partition_by, replace=False)
+
+    def drop_partitions(self, name: str, col: str, keep: list[str]) -> None:
+        """Delete every partition of ``name`` whose ``col`` value is not in
+        ``keep``; a missing table is left missing. Parquet deletes the
+        ``col=<value>`` directories, matching the DECODED value (Spark
+        %-escapes special characters in partition directory names, so a
+        run id with ':' is stored as ``%3A``). Iceberg deletes the rows,
+        which on a partition column is a metadata-only delete."""
+        if self.iceberg:
+            if self.exists(name):
+                lits = ", ".join(
+                    "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in keep
+                )
+                where = f"{col} NOT IN ({lits})" if keep else "true"
+                self.spark.sql(f"DELETE FROM kg.db.{name} WHERE {where}")
+            return
+        fs, hp = self._fs(self.path(name))
+        if not fs.exists(hp):
+            return
+        prefix = f"{col}="
+        for st in fs.listStatus(hp):
+            part = st.getPath().getName()
+            if part.startswith(prefix) and unquote(part[len(prefix):]) not in keep:
+                fs.delete(st.getPath(), True)
 
     def read(self, name: str) -> DataFrame:
         if self.iceberg:

@@ -2,8 +2,9 @@
 
 No Iceberg jar exists in this sandbox, so the catalog code path
 (`sources/tables.py` writeTo/createOrReplace/partitionedBy/append/
-overwritePartitions/read.table/tableExists/DROP TABLE/ALTER TABLE RENAME) could never run — the first user on a
-real catalog would be the first execution. These tests pin the exact call
+overwritePartitions/read.table/tableExists/DROP TABLE/ALTER TABLE RENAME/
+DELETE FROM) could never run — the first user on a real catalog would be
+the first execution. These tests pin the exact call
 sequences and table names against recording fakes, so any signature drift
 (a renamed method, a wrong catalog prefix, a lost partition column) fails
 in CI instead of on a user's cluster. The parquet fallback is covered by
@@ -167,6 +168,22 @@ def test_promote_keeps_partition_spec():
         ("sql", ("DROP TABLE IF EXISTS kg.db.nodes",), {}),
         ("sql", ("ALTER TABLE kg.db.nodes_enriched RENAME TO kg.db.nodes",), {}),
     ]
+
+
+def test_drop_partitions_deletes_unkept_runs():
+    """Orphan-run cleanup on Iceberg is a row delete on the run column (a
+    metadata-only delete on a partition column); a missing table is left
+    alone, and an empty keep list deletes every row."""
+    fs = FakeSpark(existing=["kg.db.extracted", "kg.db.lineage"])
+    store = TableStore(fs, "ignored-root")
+    store.drop_partitions("extracted", "_run", ["r1", "it's"])
+    store.drop_partitions("lineage", "run_id", [])
+    store.drop_partitions("triples", "_run", ["r1"])
+    assert [c for c in fs.log if c[0] == "sql"] == [
+        ("sql", ("DELETE FROM kg.db.extracted WHERE _run NOT IN ('r1', 'it\\'s')",), {}),
+        ("sql", ("DELETE FROM kg.db.lineage WHERE true",), {}),
+    ]
+    assert ("catalog.tableExists", ("kg.db.triples",), {}) in fs.log
 
 
 def test_read_exists_drop_roundtrip():

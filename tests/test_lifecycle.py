@@ -34,9 +34,8 @@ def test_append_same_input_is_noop(spark, data, tmp_path_factory):
     p2 = KGPipeline(spark, data, work, run_id="r2", mode="append")
     for s in ["ingest", "extract", "link", "canonicalize"]:
         p2.store.clear_marker(s)
-    p2.store.clear_marker("materialize")
-    # keep imported_runs knowledge: append mode needs the prior snapshot
-    p2.store.write_marker("materialize", {"run_id": "r1", "imported_runs": ["r1"]})
+    # the materialize marker stays: it carries imported_runs and the
+    # imported assertion total the append builds on
     m2 = p2.run(resume=False)
     assert m2["materialize"]["triples"] == n1
     assert _run_triples(p2, "r2") == 0  # the run's delta partition is empty
@@ -192,29 +191,57 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     assert lin.filter(F.col("run_id") == "r1").count() > 0  # r1 untouched
 
 
-def test_append_retried_under_new_run_id_matches_rebuild(spark, tmp_path_factory):
-    """An append that crashes after canonicalize and is retried under a NEW
-    run_id: the retry deletes the crashed run's extraction partition (its
-    run never reached imported_runs, and conv_watermarks did not advance,
-    so the retry re-extracts the same delta turns). Assertion count,
-    extracted rows, checksum and node count equal a rebuild of the
-    superset; keeping the orphan partition counted the delta twice."""
-    root = tmp_path_factory.mktemp("orphan")
+@pytest.mark.parametrize(
+    "last, retry_id, resume",
+    [
+        pytest.param("canonicalize", "r3", True, id="before_materialize-new_run_id"),
+        pytest.param("materialize", "r3", True, id="after_materialize-new_run_id"),
+        pytest.param("materialize", "r2", False, id="after_materialize-same_run_id_no_resume"),
+    ],
+)
+def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, resume):
+    """An append that dies after stage ``last`` (after materialize: after
+    every write — watermarks, triples, the node upsert, lineage — but
+    before its marker), retried under a new run_id or under the same run_id
+    without resume. Its run never reached imported_runs, so the retry
+    deletes its partitions: its watermarks do not hide its turns from the
+    retry, its delta is not counted twice, and the retry does not merge
+    onto its node upsert. Assertions, extracted rows, checksum, nodes,
+    mention total and lineage equal a rebuild of the superset, and a later
+    append of the same input adds nothing."""
+    root = tmp_path_factory.mktemp("crash")
     base, full = _superset_inputs(spark, root, [10, 20])
     work = str(root / "kg")
     KGPipeline(spark, base, work, run_id="r1").run(resume=False)
     crashed = KGPipeline(spark, full, work, run_id="r2", mode="append")
-    for stage in STAGES[:-1]:
-        getattr(crashed, f"stage_{stage}")()  # dies before materialize
+    pre_append = crashed.store.read_marker("materialize")
+    for stage in STAGES[: STAGES.index(last) + 1]:
+        getattr(crashed, f"stage_{stage}")()
+    crashed.store.write_marker("materialize", pre_append)  # the crash
 
-    retry = KGPipeline(spark, full, work, run_id="r3", mode="append")
-    m = retry.run()
+    retry = KGPipeline(spark, full, work, run_id=retry_id, mode="append")
+    m = retry.run(resume=resume)
     fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
     want = fresh.run(resume=False)
     n = want["extract"]["assertions"]
     assert m["extract"]["assertions"] == retry._extracted().count() == n
     assert m["materialize"]["checksum"] == want["materialize"]["checksum"]
     assert m["materialize"]["nodes"] == want["materialize"]["nodes"] == retry.nodes().count()
+    mentions = F.sum("n_mentions")
+    assert retry.nodes().agg(mentions).first() == fresh.nodes().agg(mentions).first()
+    runs = sorted({"r1", retry_id})
+    assert retry.store.read_marker("materialize")["imported_runs"] == runs
+    for name, col in [("extracted", "_run"), ("conv_watermarks", "_run"), ("lineage", "run_id")]:
+        got = retry.store.read(name).select(col).distinct().collect()
+        assert sorted(r[0] for r in got) == runs, name
+    lin = retry.lineage().filter(F.col("run_id") == retry_id)
+    assert lin.agg(F.sum("output_rows")).first()[0] == want["materialize"]["triples"]
+
+    again = KGPipeline(spark, full, work, run_id="r4", mode="append")
+    m4 = again.run()
+    assert m4["extract"]["assertions"] == n
+    assert m4["materialize"]["checksum"] == want["materialize"]["checksum"]
+    assert _run_triples(again, "r4") == 0
 
 
 def test_rebuild_onto_used_store_forgets_old_runs(spark, tmp_path_factory):
