@@ -8,18 +8,20 @@ The reference's node identity is exact-string MERGE on a natural key
 * tier 2 — explicit same_as assertions extracted from the text ("aka").
 * tier 3 — MinHash-LSH over character 4-gram shingles of the *distinct*
   norm_key vocabulary (linking runs on vocabulary, never on mentions — at
-  10^12 turns the vocabulary is orders of magnitude smaller), banded
-  self-equi-join on (band_key), then exact-Jaccard verification with native
-  array ops. Hot buckets are capped (skew mitigation — SURVEY.md §7 hard
-  part 3) and the dropped count is observable.
+  10^12 turns the vocabulary is orders of magnitude smaller), grouped by
+  band key, each bucket's pairs enumerated and token-Jaccard verified inside
+  its own reduce task with native array ops. Hot buckets are capped (skew
+  mitigation — SURVEY.md §7 hard part 3) and the dropped count is observed
+  on the same pass.
 
-Everything here is native Spark SQL expressions; the only shuffle-heavy op
-is the band self-join, which joins on a derived high-entropy key.
+Everything here is native Spark SQL expressions; the only shuffle after the
+MinHash aggregate is the one groupBy on band_key, a derived high-entropy
+key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.session import stage_persist
@@ -28,7 +30,6 @@ from importtoneo4j_spark.functions.text import (
     jaccard,
     minhash_bands_agg,
     norm_key,
-    token_shingles,
 )
 
 NUM_PERM = 32
@@ -87,9 +88,24 @@ def lsh_candidate_edges(
 ) -> DataFrame:
     """Distinct norm_keys -> verified similarity edges (src < dst).
 
-    shingle -> minhash signature -> band keys -> explode -> self-equi-join on
-    band key -> distinct pair -> exact token-Jaccard verify (native array
-    ops on the pair's own keys).
+    shingle -> minhash signature -> band keys -> one groupBy(band_key) ->
+    per bucket: sort members, enumerate pairs, exact token-Jaccard verify.
+    Each bucket's pairs are enumerated inside its own reduce task: no band
+    self-join and no pair ``distinct``. A pair that shares several buckets
+    comes out once per shared bucket, so the caller dedups (the pipeline's
+    union with same_as takes one ``distinct``).
+
+    Each bucket's member list is sorted once, as (key, tokens): a norm_key
+    is already normalized, so ``array_distinct(split(key, " "))`` equals its
+    token_shingles (tests/test_property.py pins this), computed once per
+    member rather than once per collision. The pairs i < j of the sorted
+    list are the src < dst pairs.
+
+    Hot buckets (more than ``max_bucket`` members) yield no pair. A bucket's
+    member list lands whole in one reduce task: O(B) memory for a bucket of
+    B members, never its O(B^2) pairs. The dropped-bucket count rides an
+    Observation on the aggregate, above its shuffle, at no extra job:
+    ``hot_buckets_dropped(edges)`` reads it once the returned frame has run.
 
     ``stored_sig``: (norm_key, band_key) signatures computed earlier (the
     pipeline's ``link_sig`` table). Only keys absent from it are MinHashed;
@@ -114,30 +130,78 @@ def lsh_candidate_edges(
         # union below fold away (cheaper to analyze than an empty MinHash)
         stored_sig = keys.select("norm_key", F.lit("").alias("band_key")).limit(0)
     fresh = keys.join(stored_sig.select("norm_key").distinct(), "norm_key", "left_anti")
-    # vocabulary-sized (<< mentions) and read four times by the hot-bucket
-    # cap and the band self-join. memory, not localCheckpoint: a checkpoint
-    # hides the frame's size and partitioning from AQE, and the band
-    # self-join and pair verification then ran in fewer, longer tasks
-    # (measured on wide_vocab, 4 vCPUs: 3.4-4.0 s vs 2.4-3.0 s per LSH)
+    # vocabulary-sized (<< mentions) and read twice: by the grouped pass and
+    # by the caller's link_sig write. memory, not localCheckpoint: a
+    # checkpoint hides the frame's size and partitioning from AQE, which
+    # then planned fewer, longer tasks (measured on wide_vocab, 4 vCPUs, with
+    # the band self-join this pass replaced: 3.4-4.0 s vs 2.4-3.0 s per LSH)
     sig = stage_persist(stored_sig.unionByName(signatures(fresh)), mode="memory")
     if persisted is not None:
         persisted.append(sig)
     if sig_out is not None:
         sig_out.append(sig)
 
-    capped = drop_hot_buckets(sig, max_bucket)
-    a = capped.alias("a")
-    b = capped.alias("b")
-    pairs = (
-        a.join(b, on="band_key")
-        .filter(F.col("a.norm_key") < F.col("b.norm_key"))
-        .select(F.col("a.norm_key").alias("src"), F.col("b.norm_key").alias("dst"))
-        .distinct()
+    obs = Observation()
+    buckets = (
+        sig.groupBy("band_key")
+        .agg(F.collect_list("norm_key").alias("keys"))
+        .observe(obs, F.count_if(F.size("keys") > max_bucket).alias("hot"))
+        .filter(F.size("keys").between(2, max_bucket))
+        .select(
+            F.array_sort(
+                F.transform(
+                    "keys",
+                    lambda k: F.struct(
+                        k.alias("k"), F.array_distinct(F.split(k, " ")).alias("t")
+                    ),
+                )
+            ).alias("m")
+        )
     )
-    # a key's tokens are a pure function of the key: computed on the pair,
-    # no join back to the vocabulary
-    sim = jaccard(token_shingles(F.col("src")), token_shingles(F.col("dst")))
-    return pairs.filter(sim >= threshold)
+    # member i pairs with members i+1..n-1 (transform hands a two-argument
+    # lambda the element's 0-based index)
+    m, n = F.col("m"), F.size("m")
+    pairs = F.flatten(
+        F.transform(
+            m,
+            lambda x, i: F.transform(
+                F.slice(m, i + 2, n - i - 1),
+                lambda y: F.struct(
+                    x["k"].alias("src"),
+                    y["k"].alias("dst"),
+                    x["t"].alias("ta"),
+                    y["t"].alias("tb"),
+                ),
+            ),
+        )
+    )
+    # src < dst also drops a key listed twice in one bucket, as the self-join
+    # did
+    out = (
+        buckets.select(F.inline(pairs))
+        .filter((F.col("src") < F.col("dst")) & (jaccard(F.col("ta"), F.col("tb")) >= threshold))
+        .select("src", "dst")
+    )
+
+    def hot() -> int:
+        # AQE drops a shuffle stage that wrote no row from the final plan,
+        # and the Observation inside it: its metrics row comes back empty.
+        # The grouped pass then emitted no pair, and the dropped buckets are
+        # counted on the signatures instead (two small jobs).
+        if obs._jo.getRow().length() == 0:
+            return lsh_dropped_buckets(sig, max_bucket).count()
+        return int(obs.get["hot"])
+
+    out._hot_buckets = hot
+    return out
+
+
+def hot_buckets_dropped(edges: DataFrame) -> int:
+    """How many LSH buckets the hot-bucket cap skipped while ``edges`` (a
+    frame returned by lsh_candidate_edges) ran: blocks until it has run, and
+    must be read before its signature frame is unpersisted. Equals
+    ``lsh_dropped_buckets(sig).count()`` on the same signatures."""
+    return edges._hot_buckets()
 
 
 def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:
@@ -153,9 +217,10 @@ def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 def drop_hot_buckets(
     sig: DataFrame, max_bucket: int = MAX_BUCKET, key: str = "band_key"
 ) -> DataFrame:
-    """Hot-bucket cap: a bucket with B members yields B^2 candidate pairs;
-    the cap bounds worst-case blocking cost (dropped buckets are countable
-    via lsh_dropped_buckets below).
+    """Hot-bucket cap in front of a blocking self-join (the dedup operators):
+    a bucket with B members yields B^2 candidate pairs; the cap bounds
+    worst-case blocking cost. The linker does not use it: its grouped pass
+    drops hot buckets after one groupBy, holding O(B) per reducer.
 
     Two-phase on purpose: groupBy(key).count() partial-aggregates map-side,
     so a 10^5-member hot bucket collapses to one row per map task *before*

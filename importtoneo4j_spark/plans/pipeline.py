@@ -41,6 +41,7 @@ from importtoneo4j_spark.operators.canonicalize import (
 from importtoneo4j_spark.operators.enrich import enrich_nodes, missing_keys
 from importtoneo4j_spark.operators.extract import extract_assertions
 from importtoneo4j_spark.operators.link import (
+    hot_buckets_dropped,
     lsh_candidate_edges,
     mention_vocabulary,
     same_as_edges,
@@ -317,6 +318,7 @@ class KGPipeline:
         )
         edges = self.store.read("same_as_next").unionByName(lsh).distinct()
         n_edges = self._write_counted(edges, "link_edges")
+        n_hot = hot_buckets_dropped(lsh)
         self.store.write(sig_box[0], "link_sig_next")
         self.store.promote("vocab_next", "vocab")
         self.store.promote("link_sig_next", "link_sig")
@@ -327,8 +329,12 @@ class KGPipeline:
         # (asserted in tests/test_lifecycle.py::test_caller_cache_survives)
         for frame in lsh_state:
             stage_unpersist(frame)
-        self.metrics["link"] = {"vocab": res["vocab"], "edges": n_edges}
-        self._mark("link", vocab=res["vocab"], edges=n_edges)
+        self.metrics["link"] = {
+            "vocab": res["vocab"],
+            "edges": n_edges,
+            "hot_buckets_dropped": n_hot,
+        }
+        self._mark("link", **self.metrics["link"])
 
     def stage_canonicalize(self) -> None:
         """Cross-run id stability: a surface already in the stored ``links``

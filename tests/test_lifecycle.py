@@ -703,6 +703,54 @@ def test_caller_cache_survives(spark, data, tmp_path_factory):
     mine.unpersist()
 
 
+def _prefix_cluster_input(spark, path, n_convs, alias_pair=False):
+    """``n_convs`` one-turn conversations; conversation i says "Acme Corp i"
+    uses "Acme Corp i+1". The "acme corp <n>" keys share most of their char
+    4-grams, so some LSH buckets pass the 64-member cap, and no two of them
+    link (token Jaccard 1/2). ``alias_pair`` adds a conversation naming
+    "Zeta Works" and its alias "Zeta Works Inc", which do. Prefix-stable: a
+    larger ``n_convs`` writes a superset."""
+    from datetime import datetime
+
+    from importtoneo4j_spark.schemas import TRANSCRIPTS
+
+    texts = [
+        (f"conv-{i:04d}", f"note [[Acme Corp {i}]] uses [[Acme Corp {i + 1}]] .")
+        for i in range(n_convs)
+    ]
+    if alias_pair:
+        texts.append(("conv-zeta", "note [[Zeta Works]] uses [[Zeta Works Inc]] ."))
+    rows = [(c, 0, "user", t, None, datetime(2026, 1, 1)) for c, t in texts]
+    spark.createDataFrame(rows, TRANSCRIPTS).write.parquet(path)
+
+
+def test_link_reports_hot_buckets_dropped(spark, tmp_path_factory):
+    """The link stage's hot-bucket counter (metrics and marker) equals the
+    buckets lsh_dropped_buckets finds on the stored signatures, after a
+    rebuild and after an append onto it. The rebuild's LSH verifies no
+    pair, so Spark prunes the stage holding the counter's Observation and
+    the count comes from the signatures; the append's alias pair keeps
+    that stage, and the count comes from the Observation."""
+    from importtoneo4j_spark.operators.link import lsh_dropped_buckets
+
+    root = tmp_path_factory.mktemp("hotb")
+    base, sup = str(root / "base"), str(root / "super")
+    _prefix_cluster_input(spark, base, 100)
+    _prefix_cluster_input(spark, sup, 140, alias_pair=True)
+    work = str(root / "kg")
+    counts = []
+    for pipe in (
+        KGPipeline(spark, base, work, run_id="b"),
+        KGPipeline(spark, sup, work, run_id="a", mode="append"),
+    ):
+        m = pipe.run(resume=False)
+        want = lsh_dropped_buckets(pipe.store.read("link_sig")).count()
+        assert m["link"]["hot_buckets_dropped"] == want > 0
+        assert pipe.store.read_marker("link")["hot_buckets_dropped"] == want
+        counts.append(want)
+    assert counts[1] > counts[0]  # the append counts stored and fresh keys
+
+
 def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):
     """Round 6 (VERDICT r5 #1/#4): the O(delta) append must (a) produce a
     final graph bit-identical to a fresh overwrite run over the same

@@ -285,6 +285,60 @@ def test_drop_hot_buckets_partial_agg_skew(spark):
     assert "partial_count" in plan or plan.count("HashAggregate") >= 2
 
 
+def test_lsh_grouped_pass_drops_planted_hot_bucket(spark):
+    """Skew guard for the linker: a planted 10^5-member band key, fed in as
+    a stored signature, yields no pair and counts as one dropped bucket.
+    The plan has no Window and no join on band_key: the bucket is dropped
+    after one groupBy, holding its member list (O(B)), never its pairs."""
+    from importtoneo4j_spark.operators.link import hot_buckets_dropped, lsh_candidate_edges
+    from importtoneo4j_spark.session import stage_unpersist
+
+    hot = spark.range(100_000).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("norm_key"),
+        F.lit("HOT").alias("band_key"),
+    )
+    vocab = spark.createDataFrame([("acme corp",)], ["norm_key"])
+    persisted: list = []
+    edges = lsh_candidate_edges(vocab, stored_sig=hot, persisted=persisted)
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert not [line for line in plan.splitlines() if "Join" in line and "band_key" in line]
+    assert edges.collect() == []
+    assert hot_buckets_dropped(edges) == 1
+    for frame in persisted:
+        stage_unpersist(frame)
+
+
+def test_link_edges_job_budget(spark, spark_jobs, tmp_path):
+    """link_edges as the pipeline builds it — LSH edges ∪ same_as, one
+    distinct — written from a parquet-scanned vocabulary runs at most 6
+    Spark jobs (the band self-join form ran 12)."""
+    from importtoneo4j_spark.operators.link import lsh_candidate_edges
+    from importtoneo4j_spark.session import stage_unpersist
+
+    names = [
+        f"{a} {b}"
+        for a in ("alpha", "beta", "gamma", "delta")
+        for b in ("labs", "systems", "works")
+    ]
+    spark.createDataFrame(
+        [(n,) for n in names] + [(f"{n} inc",) for n in names], "norm_key string"
+    ).write.parquet(str(tmp_path / "vocab"))
+    spark.createDataFrame(
+        [("alpha labs", "alpha labs ltd")], "src string, dst string"
+    ).write.parquet(str(tmp_path / "same_as"))
+    persisted: list = []
+    lsh = lsh_candidate_edges(spark.read.parquet(str(tmp_path / "vocab")), persisted=persisted)
+    edges = spark.read.parquet(str(tmp_path / "same_as")).unionByName(lsh).distinct()
+    before = spark_jobs()
+    edges.write.parquet(str(tmp_path / "edges"))
+    assert spark_jobs() - before <= 6
+    got = {tuple(r) for r in spark.read.parquet(str(tmp_path / "edges")).collect()}
+    assert ("alpha labs", "alpha labs inc") in got and ("alpha labs", "alpha labs ltd") in got
+    for frame in persisted:
+        stage_unpersist(frame)
+
+
 def test_stage_persist_modes(spark):
     """Cluster/local cache-discipline knob (SCALE.md §cache-discipline)."""
     from importtoneo4j_spark.session import stage_persist

@@ -279,3 +279,97 @@ def test_shortest_paths_matches_bellman_ford(spark, edges):
         3,
     )
     assert got == want
+
+
+# letters that normalization lowercases, folds or splits on: Turkish dotted
+# I (lowercases to i + a combining dot), final sigma, ligatures, CJK,
+# non-ASCII digits
+_ALPHABET = list("abcdeiklmnorstxyz") + list("ÄäÖöüßçéñøåłœİıΣσςДжﬁ日本٣Ⅻ")
+_words = st.text(alphabet=_ALPHABET, min_size=1, max_size=6)
+_surfaces = st.lists(_words, min_size=1, max_size=3).flatmap(
+    lambda ws: st.sampled_from([" ", "-", ". ", "  ", "_"]).map(lambda sep: sep.join(ws))
+)
+lsh_cases = st.tuples(
+    # each surface with or without a legal-form alias ("<surface> Inc"):
+    # a two-token name and its alias link at token Jaccard 2/3
+    st.lists(st.tuples(_surfaces, st.booleans()), max_size=12),
+    # shared-prefix clusters: "<prefix> corp 0" .. "<prefix> corp n-1" share
+    # most char 4-grams, so their band buckets overflow a small cap
+    st.lists(st.tuples(_words, st.integers(min_value=2, max_value=9)), max_size=3),
+    st.integers(min_value=2, max_value=4),  # max_bucket
+    st.integers(min_value=0, max_value=40),  # keys carried in as stored_sig
+)
+
+
+def _reference_lsh_edges(sig_rows, max_bucket, threshold):
+    """The LSH edges in plain Python from a signature frame: buckets of
+    2..max_bucket members, pairs a < b, token Jaccard on ``key.split(" ")``."""
+    buckets: dict[str, set[str]] = {}
+    for r in sig_rows:
+        buckets.setdefault(r["band_key"], set()).add(r["norm_key"])
+    out = set()
+    for members in buckets.values():
+        if not 2 <= len(members) <= max_bucket:
+            continue
+        for a in members:
+            for b in members:
+                ta, tb = set(a.split(" ")), set(b.split(" "))
+                if a < b and len(ta & tb) / len(ta | tb) >= threshold:
+                    out.add((a, b))
+    return out
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=lsh_cases)
+@example(case=([("Acme Corp", True), ("acme-corp.", False)], [("acme", 8)], 3, 2))
+@example(case=([("İstanbul Ölçer", True), ("ΣΟΦΙΑ ς", True)], [("zz", 5)], 4, 0))
+def test_lsh_candidate_edges_matches_reference(spark, case):
+    """lsh_candidate_edges == a pure-Python recomputation from the
+    signature frame it returns, whatever part of the vocabulary comes in
+    as stored signatures; and the tokens the linker takes from a norm_key
+    by splitting it equal token_shingles of that key."""
+    from pyspark.sql import functions as F
+
+    from importtoneo4j_spark.functions.text import norm_key, token_shingles
+    from importtoneo4j_spark.operators.link import (
+        JACCARD_THRESHOLD,
+        lsh_candidate_edges,
+    )
+    from importtoneo4j_spark.session import stage_unpersist
+
+    surfaces, clusters, max_bucket, n_stored = case
+    texts = [t for s, alias in surfaces for t in ([s, f"{s} Inc"] if alias else [s])]
+    texts += [f"{p} corp {j}" for p, n in clusters for j in range(n)]
+    keyed = spark.createDataFrame([(t,) for t in texts], "text string").select(
+        norm_key(F.col("text")).alias("k")
+    )
+    split_ok = keyed.select(
+        (F.array_distinct(F.split("k", " ")) == token_shingles(F.col("k"))).alias("ok")
+    )
+    assert all(r["ok"] for r in split_ok.collect())
+
+    keys = sorted({r["k"] for r in keyed.collect()} - {""})
+    vocab = spark.createDataFrame([(k,) for k in keys], "norm_key string")
+    persisted: list = []
+    stored = None
+    if n_stored:
+        first: list = []
+        lsh_candidate_edges(
+            vocab.filter(F.col("norm_key").isin(keys[:n_stored])),
+            persisted=persisted,
+            sig_out=first,
+        )
+        stored = spark.createDataFrame(first[0].collect(), first[0].schema)
+    sig_box: list = []
+    edges = lsh_candidate_edges(
+        vocab, stored_sig=stored, max_bucket=max_bucket, persisted=persisted, sig_out=sig_box
+    )
+    got = {(r["src"], r["dst"]) for r in edges.collect()}
+    want = _reference_lsh_edges(sig_box[0].collect(), max_bucket, JACCARD_THRESHOLD)
+    assert got == want
+    for frame in persisted:
+        stage_unpersist(frame)
