@@ -21,6 +21,8 @@ key.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -75,6 +77,21 @@ def same_as_edges(extracted: DataFrame) -> DataFrame:
     )
 
 
+class LSH(NamedTuple):
+    """What ``lsh_candidate_edges`` returns.
+
+    ``edges``: the verified (src, dst) pairs, src < dst, once per shared
+    bucket. ``sig``: the (norm_key, band_key) signatures of this call's
+    fresh keys, the only frame it persists: the caller stores it and then
+    releases it with ``session.stage_unpersist``. ``hot_buckets_dropped()``:
+    how many buckets the cap skipped; it blocks until ``edges`` has run and
+    is read before ``sig`` is released."""
+
+    edges: DataFrame
+    sig: DataFrame
+    hot_buckets_dropped: Callable[[], int]
+
+
 def lsh_candidate_edges(
     vocab: DataFrame,
     stored_sig: DataFrame | None = None,
@@ -83,9 +100,7 @@ def lsh_candidate_edges(
     rows_per_band: int = ROWS_PER_BAND,
     threshold: float = JACCARD_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
-    persisted: list | None = None,
-    sig_out: list | None = None,
-) -> DataFrame:
+) -> LSH:
     """Distinct norm_keys -> verified similarity edges (src < dst).
 
     shingle -> minhash signature -> band keys -> one groupBy(band_key) ->
@@ -104,42 +119,31 @@ def lsh_candidate_edges(
     Hot buckets (more than ``max_bucket`` members) yield no pair. A bucket's
     member list lands whole in one reduce task: O(B) memory for a bucket of
     B members, never its O(B^2) pairs. The dropped-bucket count rides an
-    Observation on the aggregate, above its shuffle, at no extra job:
-    ``hot_buckets_dropped(edges)`` reads it once the returned frame has run.
+    Observation on the aggregate, above its shuffle, at no extra job.
 
     ``stored_sig``: (norm_key, band_key) signatures computed earlier (the
     pipeline's ``link_sig`` table). Only keys absent from it are MinHashed;
     candidate generation and verification run over stored ∪ fresh and are
     bit-identical to a run from scratch, because a key's signature is a pure
     function of the key. Without it every key is fresh.
-
-    ``persisted`` (round 6, VERDICT r5 nit): pass a list to receive the
-    frame this function stage_persists (sig) so the CALLER can
-    stage_unpersist exactly that once the returned edges are materialized —
-    the scoped replacement for the session-wide catalog.clearCache() the
-    pipeline used to issue (which also dropped frames a caller had cached).
-    ``sig_out`` receives the signature frame (the pipeline stores it).
     """
     keys = lsh_keys(vocab)
-
-    def signatures(df: DataFrame) -> DataFrame:
-        return minhash_bands_agg(df, "norm_key", "shingles", num_perm, bands, rows_per_band)
-
     if stored_sig is None:
         # an empty relation with the signature columns: the anti-join and
         # union below fold away (cheaper to analyze than an empty MinHash)
         stored_sig = keys.select("norm_key", F.lit("").alias("band_key")).limit(0)
+    stored_sig = stored_sig.select("norm_key", "band_key")
     fresh = keys.join(stored_sig.select("norm_key").distinct(), "norm_key", "left_anti")
-    # vocabulary-sized (<< mentions) and read twice: by the grouped pass and
-    # by the caller's link_sig write. memory, not localCheckpoint: a
-    # checkpoint hides the frame's size and partitioning from AQE, which
-    # then planned fewer, longer tasks (measured on wide_vocab, 4 vCPUs, with
-    # the band self-join this pass replaced: 3.4-4.0 s vs 2.4-3.0 s per LSH)
-    sig = stage_persist(stored_sig.unionByName(signatures(fresh)), mode="memory")
-    if persisted is not None:
-        persisted.append(sig)
-    if sig_out is not None:
-        sig_out.append(sig)
+    # read twice: by the grouped pass and by the caller's link_sig write.
+    # memory, not localCheckpoint: a checkpoint hides the frame's size and
+    # partitioning from AQE, which then planned fewer, longer tasks
+    # (measured on wide_vocab, 4 vCPUs, with the band self-join this pass
+    # replaced: 3.4-4.0 s vs 2.4-3.0 s per LSH)
+    fresh_sig = stage_persist(
+        minhash_bands_agg(fresh, "norm_key", "shingles", num_perm, bands, rows_per_band),
+        mode="memory",
+    )
+    sig = stored_sig.unionByName(fresh_sig)
 
     obs = Observation()
     buckets = (
@@ -192,16 +196,7 @@ def lsh_candidate_edges(
             return lsh_dropped_buckets(sig, max_bucket).count()
         return int(obs.get["hot"])
 
-    out._hot_buckets = hot
-    return out
-
-
-def hot_buckets_dropped(edges: DataFrame) -> int:
-    """How many LSH buckets the hot-bucket cap skipped while ``edges`` (a
-    frame returned by lsh_candidate_edges) ran: blocks until it has run, and
-    must be read before its signature frame is unpersisted. Equals
-    ``lsh_dropped_buckets(sig).count()`` on the same signatures."""
-    return edges._hot_buckets()
+    return LSH(out, fresh_sig, hot)
 
 
 def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:
@@ -237,11 +232,11 @@ def drop_hot_buckets(
 def lsh_dropped_buckets(sig: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
     """Observability: which LSH buckets the hot-key cap skipped.
 
-    Takes the already-computed (id, band_key) signature frame — the one
-    lsh_candidate_edges persists — instead of recomputing shingles+MinHash
-    from the vocabulary (VERDICT r2 minor #4: the recompute doubled the
-    MinHash cost of the observability path): the pipeline stores it as the
-    ``link_sig`` table."""
+    Takes already-computed (norm_key, band_key) signatures — the pipeline's
+    ``link_sig`` table, which every run appends its fresh keys' signatures
+    to — instead of recomputing shingles+MinHash from the vocabulary
+    (VERDICT r2 minor #4: the recompute doubled the MinHash cost of the
+    observability path)."""
     return (
         sig.groupBy("band_key").agg(F.count("*").alias("bsz")).filter(F.col("bsz") > max_bucket)
     )

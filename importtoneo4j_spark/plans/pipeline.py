@@ -41,7 +41,6 @@ from importtoneo4j_spark.operators.canonicalize import (
 from importtoneo4j_spark.operators.enrich import enrich_nodes, missing_keys
 from importtoneo4j_spark.operators.extract import extract_assertions
 from importtoneo4j_spark.operators.link import (
-    hot_buckets_dropped,
     lsh_candidate_edges,
     mention_vocabulary,
     same_as_edges,
@@ -68,23 +67,25 @@ from importtoneo4j_spark.sources.transcripts import (
 
 STAGES = ["ingest", "extract", "link", "canonicalize", "materialize"]
 
+# the run-scoped tables and their run column: a run writes its delta into
+# its own partition of each (``_append``), never rewriting another run's, and
+# the partitions of a run that never completed are deleted before the next
+# run writes (``_drop_unimported``)
+RUN_TABLES = {
+    "extracted": "_run",
+    "vocab": "_run",
+    "link_sig": "_run",
+    "same_as_edges": "_run",
+    "links": "_run",
+    "triples": "_run",
+    "conv_watermarks": "_run",
+    "lineage": "run_id",
+}
+
 # every table a run keeps; a rebuild deletes them (and the stage markers)
-# before its first stage. Staging siblings (``*_next``) need no clearing:
-# each is overwritten before it is promoted.
-TABLES = [
-    "ingested",
-    "extracted",
-    "vocab",
-    "link_sig",
-    "same_as_edges",
-    "link_edges",
-    "links",
-    "triples",
-    "nodes",
-    "conv_watermarks",
-    "schema_registry",
-    "lineage",
-]
+# before its first stage. The rest are rewritten whole by every run
+# (``nodes`` per touched bucket).
+TABLES = [*RUN_TABLES, "ingested", "link_edges", "nodes", "schema_registry"]
 
 
 @dataclass
@@ -124,8 +125,12 @@ class KGPipeline:
         self.store.write_marker(stage, {"run_id": self.run_id, **payload})
 
     def _prev_runs(self) -> list[str]:
-        m = self.store.read_marker("materialize")
-        return m.get("imported_runs", []) if m else []
+        return self._imported("imported_runs", [])
+
+    def _imported(self, key: str, default=0):
+        """A figure of the imported runs, from the materialize marker (a
+        crashed run's own stage markers would count its delta twice)."""
+        return (self.store.read_marker("materialize") or {}).get(key, default)
 
     def _snapshot(self, name: str, like: DataFrame | None = None) -> DataFrame | None:
         """The stored table ``name``. When the store has none: ``like``
@@ -144,16 +149,44 @@ class KGPipeline:
         for stage in STAGES + ["nodes", "enrich"]:
             self.store.clear_marker(stage)
 
-    def _drop_unimported(self, tables: list[tuple[str, str]]) -> None:
-        """Delete, for each (table, run column), every partition written by
-        a run that is not in ``imported_runs``: this run's own partial
+    def _drop_unimported(self, *names: str) -> None:
+        """Delete, in each run-scoped table, every partition written by a
+        run that is not in ``imported_runs``: this run's own partial
         partition from a crashed attempt, and the partitions of a crashed
-        run retried under another run_id. Kept, they would count twice —
-        and a crashed run's watermarks would hide its delta turns from the
-        retry, whose extraction partition was deleted."""
+        run retried under another run_id. Kept, they would count twice,
+        a crashed run's watermarks would hide its delta turns from the
+        retry, and its link evidence would merge entities the imported
+        turns do not link."""
         imported = self._prev_runs()
-        for name, col in tables:
-            self.store.drop_partitions(name, col, imported)
+        for name in names:
+            self.store.drop_partitions(name, RUN_TABLES[name], imported)
+
+    def _append(
+        self, df: DataFrame, name: str, *partition_by: str, order_by: tuple = ()
+    ) -> int:
+        """Write ``df`` as this run's delta of the run-scoped table
+        ``name``, into its own partition of the run column (then
+        ``partition_by``), and return its row count. ``order_by`` orders
+        the rows of each file after ``partition_by``; the sort sits above
+        the count's Observation, which hides any order below it from the
+        writer (it would re-sort by the partition columns alone)."""
+        col = RUN_TABLES[name]
+        obs = Observation(f"{name}_rows")
+        df = df.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(col, F.lit(self.run_id))
+        if order_by:
+            df = df.sortWithinPartitions(*partition_by, *order_by)
+        self.store.write(df, name, mode="append", partition_by=[col, *partition_by])
+        return int(obs.get["n"])
+
+    def _full(self, name: str) -> DataFrame:
+        """Every run's rows of a run-scoped table, without the run column."""
+        return self.store.read(name).drop(RUN_TABLES[name])
+
+    def _delta(self, name: str) -> DataFrame:
+        """THIS run's rows of a run-scoped table: a partition-pruned scan
+        (O(delta) I/O)."""
+        col = RUN_TABLES[name]
+        return self.store.read(name).filter(F.col(col) == self.run_id).drop(col)
 
     # ---------------------------------------------------------------- stages
     def _write_counted(self, df: DataFrame, name: str, **write_kwargs) -> int:
@@ -241,96 +274,62 @@ class KGPipeline:
         another) leaves at worst extraction and watermark partitions of an
         unimported run; both are deleted first, so the delta filter
         reproduces that run's rows — exactly-once."""
-        self._drop_unimported([("extracted", "_run"), ("conv_watermarks", "_run")])
-        n_delta = self._write_counted(
-            extract_assertions(self._new_turns()).withColumn("_run", F.lit(self.run_id)),
-            "extracted",
-            mode="append",
-            partition_by=["_run"],
+        self._drop_unimported("extracted", "conv_watermarks")
+        n = self._imported("assertions") + self._append(
+            extract_assertions(self._new_turns()), "extracted"
         )
-        # the imported runs' total comes from the materialize marker (a
-        # crashed run's extract marker would count its delta twice)
-        imported = self.store.read_marker("materialize") or {}
-        n = int(imported.get("assertions", 0)) + n_delta
         self.metrics["extract"] = {"assertions": n}
         self._mark("extract", assertions=n)
 
-    def _extracted(self) -> DataFrame:
-        """The full extracted-assertions view (every run's partition), with
-        the _run bookkeeping column dropped."""
-        return self.store.read("extracted").drop("_run")
-
-    def _extracted_run(self, run_id: str) -> DataFrame:
-        """THIS run's extraction delta — a partition-pruned scan of
-        extracted/_run=<run_id> (O(delta) I/O)."""
-        return (
-            self.store.read("extracted").filter(F.col("_run") == run_id).drop("_run")
-        )
-
     def stage_link(self) -> None:
-        """O(delta) re-link (round 6, VERDICT r5 #1a): the expensive per-key
-        work — normalize, char-shingle, md5 MinHash — runs ONLY for
-        norm_keys absent from the stored signatures (``link_sig``), inside
-        ``lsh_candidate_edges``. Candidate generation and token-Jaccard
-        verification run over stored ∪ fresh and are bit-identical to a run
-        from scratch, because a key's signature is a pure function of the
-        key. same_as evidence is its own durable table, so the old half
-        unions in without re-scanning old turns. The three stores are
-        written as ``*_next`` siblings and installed by rename-promote at
-        the end, so a crash at any point leaves the old state (or a missing
-        table the retry rebuilds) — never a torn one."""
+        """O(delta) re-link (round 6, VERDICT r5 #1a): the run appends to
+        ``vocab`` only the surfaces the stored vocabulary lacks, to
+        ``same_as_edges`` its delta's explicit same_as evidence, and to
+        ``link_sig`` the signatures of the keys the stored signatures lack
+        — the expensive per-key work (normalize, char-shingle, md5 MinHash)
+        runs only for those, inside ``lsh_candidate_edges``. Candidate
+        generation and token-Jaccard verification run over stored ∪ fresh
+        signatures and are bit-identical to a run from scratch, because a
+        key's signature is a pure function of the key; ``link_edges`` is
+        their union-``distinct`` with every run's same_as evidence. The
+        three stores are run-scoped, so the evidence of a run that never
+        completed is deleted before this run reads them."""
         from importtoneo4j_spark.session import stage_unpersist
 
-        delta_ext = self._extracted_run(self.run_id)
+        self._drop_unimported("vocab", "link_sig", "same_as_edges")
+        delta_ext = self._delta("extracted")
         fresh_vocab = mention_vocabulary(delta_ext)
-        fresh_same_as = same_as_edges(delta_ext)
+        stored = self._snapshot("vocab", like=fresh_vocab).select("surface")
         res: dict = {}
 
         def _vocab() -> None:
-            old = self._snapshot("vocab", like=fresh_vocab)
-            res["vocab"] = self._write_counted(
-                old.unionByName(
-                    fresh_vocab.join(old.select("surface"), "surface", "left_anti")
-                ),
-                "vocab_next",
+            res["vocab"] = self._append(
+                fresh_vocab.join(stored, "surface", "left_anti"), "vocab"
             )
 
         def _same_as() -> None:
-            self.store.write(
-                self._snapshot("same_as_edges", like=fresh_same_as)
-                .unionByName(fresh_same_as)
-                .distinct(),
-                "same_as_next",
-            )
+            self._append(same_as_edges(delta_ext), "same_as_edges")
 
-        # disjoint staged outputs reading only durable tables — overlap
-        # them (guide §2.6); the promotes wait until everything is written
+        # disjoint deltas reading only durable tables — overlap them (guide
+        # §2.6)
         with ThreadPoolExecutor(max_workers=2) as pool:
             for f in [pool.submit(fn) for fn in (_vocab, _same_as)]:
                 f.result()
-        lsh_state: list = []
-        sig_box: list = []
-        lsh = lsh_candidate_edges(
-            self.store.read("vocab_next"),
-            stored_sig=self._snapshot("link_sig"),
-            persisted=lsh_state,
-            sig_out=sig_box,
+        # the stored keys' signatures are in link_sig; the keys new to the
+        # store are the ones in this run's vocab partition
+        lsh = lsh_candidate_edges(self._delta("vocab"), stored_sig=self._snapshot("link_sig"))
+        n_edges = self._write_counted(
+            self._full("same_as_edges").unionByName(lsh.edges).distinct(), "link_edges"
         )
-        edges = self.store.read("same_as_next").unionByName(lsh).distinct()
-        n_edges = self._write_counted(edges, "link_edges")
-        n_hot = hot_buckets_dropped(lsh)
-        self.store.write(sig_box[0], "link_sig_next")
-        self.store.promote("vocab_next", "vocab")
-        self.store.promote("link_sig_next", "link_sig")
-        self.store.promote("same_as_next", "same_as_edges")
+        n_hot = lsh.hot_buckets_dropped()
+        self._append(lsh.sig, "link_sig")
         # scoped release (round 6, VERDICT r5 nit): unpersist exactly the
-        # frames the LSH stage persisted, never the whole session cache —
+        # frame the LSH persisted, never the whole session cache —
         # catalog.clearCache() also dropped frames a CALLER had cached
         # (asserted in tests/test_lifecycle.py::test_caller_cache_survives)
-        for frame in lsh_state:
-            stage_unpersist(frame)
+        stage_unpersist(lsh.sig)
         self.metrics["link"] = {
-            "vocab": res["vocab"],
+            "vocab": self._imported("vocab") + res["vocab"],
             "edges": n_edges,
             "hot_buckets_dropped": n_hot,
         }
@@ -348,11 +347,14 @@ class KGPipeline:
         every tagged row) — no separate counting job (VERDICT r3 #8). The
         entity count is approx-distinct over coalesce(stored id, this run's
         id), which under the superset-input contract equals the post-append
-        links table."""
+        links table. ``links`` is run-scoped: the surfaces a run found new
+        land in its own partition, and a run that never completed leaves no
+        assignment behind."""
         from importtoneo4j_spark.session import stage_unpersist
 
+        self._drop_unimported("links")
         comp = connected_components(self.store.read("link_edges"))
-        links = assign_canonical_ids(self.store.read("vocab"), comp)
+        links = assign_canonical_ids(self._full("vocab"), comp)
         snap = self._snapshot("links", like=links).select(
             "surface", F.col("canonical_id").alias("snap_id")
         )
@@ -367,20 +369,22 @@ class KGPipeline:
                 ).cast("long")
             ).alias("stale"),
         )
-        fresh = tagged.filter(F.col("snap_id").isNull()).drop("snap_id")
-        self.store.write(fresh, "links", mode="append")
+        self._append(tagged.filter(F.col("snap_id").isNull()).drop("snap_id"), "links")
         stale = int(obs.get["stale"] or 0)
         self.metrics["canonicalize"] = {"entities": int(obs.get["n"]), "stale_surfaces": stale}
         if self.fold_threshold is not None and stale > self.fold_threshold:
             # auto-fold (VERDICT r3 #4): enough cross-snapshot merge evidence
             # accrued that the append-mode graph diverges from the fixpoint —
-            # rewrite links at THIS run's full assignment; materialize then
-            # rebuilds the graph from every run's extraction (it reads the
-            # flag from the marker, so a resumed run folds too). `links`
-            # reads only the vocab/link_edges tables, never the links path,
-            # so a direct overwrite is safe (no staging).
+            # replace links by THIS run's full assignment, in its own
+            # partition. The stored triples and nodes no longer match it, so
+            # the nodes marker names this run first: materialize then
+            # rebuilds the graph from every run's extraction, and so does
+            # the retry of a run that crashed before its import. `links`
+            # reads only the vocab/link_edges tables, never the links path.
+            self._mark("nodes")
+            self.store.drop("links")
             obs2 = Observation("entities_fold")
-            self.store.write(
+            self._append(
                 links.observe(obs2, F.approx_count_distinct("canonical_id").alias("n")),
                 "links",
             )
@@ -400,28 +404,25 @@ class KGPipeline:
         over the full corpus.
 
         A fold clears the triples and nodes and takes every run's partition
-        as its delta: an auto-folded run, and a run that finds ``nodes``
-        possibly touched by a run that never completed. The nodes are
-        upserted in place, so the ``nodes`` marker names the run that may
-        have changed them since the last import; a retry after a crash
-        anywhere in this stage, under this run_id or another, cannot merge
-        a delta onto them again and re-materializes from every run's
-        extraction instead."""
-        links = self.store.read("links")
+        as its delta: it runs when ``nodes`` may no longer match the
+        imported runs. The ``nodes`` marker names the run that may have
+        changed the graph since the last import: this stage upserts the
+        nodes in place, and an auto-fold replaces the links they were
+        derived from. So an auto-folded run folds here, and a retry after a
+        crash in this stage or after an auto-fold, under this run_id or
+        another, cannot merge a delta onto them again and re-materializes
+        from every run's extraction instead."""
+        links = self._full("links")
         touched = self.store.read_marker("nodes")
-        fold = self.store.read_marker("canonicalize").get("auto_folded") or (
-            touched is not None and touched["run_id"] not in self._prev_runs()
-        )
+        fold = touched is not None and touched["run_id"] not in self._prev_runs()
         self._mark("nodes")
-        self._drop_unimported(
-            [("triples", "_run"), ("conv_watermarks", "_run"), ("lineage", "run_id")]
-        )
+        self._drop_unimported("triples", "conv_watermarks", "lineage")
         if fold:
             for name in ("triples", "nodes"):
                 self.store.drop(name)
-            delta_ext = self._extracted()
+            delta_ext = self._full("extracted")
         else:
-            delta_ext = self._extracted_run(self.run_id)
+            delta_ext = self._delta("extracted")
 
         def _triples() -> None:
             cand = canonical_triples(delta_ext, links)
@@ -446,14 +447,7 @@ class KGPipeline:
             # leads with the dynamic-partition column pred (_run is a
             # literal) so the writer adds no sort of its own (round 6,
             # guide §2.4: measured 3.51 -> 3.08 s write at sf1.0).
-            self.store.write(
-                delta.withColumn("_run", F.lit(self.run_id)).sortWithinPartitions(
-                    "pred", "subj", "obj"
-                ),
-                "triples",
-                mode="append",
-                partition_by=["_run", "pred"],
-            )
+            self._append(delta, "triples", "pred", order_by=("subj", "obj"))
 
         def _nodes() -> None:
             # node upsert (not insert-new-only): labels/surfaces/mention
@@ -501,13 +495,9 @@ class KGPipeline:
             # zero assertions still count as imported); fold_epochs (no
             # ingest) uses its extraction.
             src = self._new_turns() if self.store.exists("ingested") else delta_ext
-            self.store.write(
-                src.groupBy("conv_id")
-                .agg(F.max("turn_idx").alias("max_turn"))
-                .withColumn("_run", F.lit(self.run_id)),
+            self._append(
+                src.groupBy("conv_id").agg(F.max("turn_idx").alias("max_turn")),
                 "conv_watermarks",
-                mode="append",
-                partition_by=["_run"],
             )
 
         # guide §2.6 (overlap independent jobs): the three updates write
@@ -575,9 +565,8 @@ class KGPipeline:
                 F.sum("output_rows").alias("n"),
                 F.expr("bit_xor(cast(checksum as bigint))").alias("x"),
             )
-            # partitioned by run_id: a retry of this stage replaces only its
-            # own run's rows, never duplicates them
-            self.store.overwrite_partitions(lineage, "lineage", ["run_id"])
+            # a retry of this stage has deleted its own run's rows first
+            self._append(lineage, "lineage")
 
         # the three post-write audits are mutually independent reads of the
         # just-written tables — run them concurrently too (guide §2.6). A
@@ -602,6 +591,7 @@ class KGPipeline:
             nodes=n_nodes,
             checksum=checksum,
             assertions=self.store.read_marker("extract")["assertions"],
+            vocab=self.store.read_marker("link")["vocab"],
             imported_runs=sorted(set(self._prev_runs()) | {self.run_id}),
         )
 
@@ -685,12 +675,7 @@ class KGPipeline:
         """
         t0 = time.time()
         self._clear_store()
-        ext = self.spark.read.parquet(stream_output_dir).drop("epoch")
-        n = self._write_counted(
-            ext.withColumn("_run", F.lit(self.run_id)),
-            "extracted",
-            partition_by=["_run"],
-        )
+        n = self._append(self.spark.read.parquet(stream_output_dir).drop("epoch"), "extracted")
         self.metrics["extract"] = {"assertions": n, "folded": True}
         self._mark("extract", assertions=n, folded=True)
         self._run_stages(["link", "canonicalize", "materialize"], resume=False)
@@ -699,7 +684,7 @@ class KGPipeline:
 
     # ------------------------------------------------------------ dataframes
     def triples(self) -> DataFrame:
-        return self.store.read("triples").drop("_run")
+        return self._full("triples")
 
     def nodes(self) -> DataFrame:
         return self.store.read("nodes")

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.datagen import TranscriptGenerator
-from importtoneo4j_spark.plans.pipeline import STAGES, KGPipeline
+from importtoneo4j_spark.plans.pipeline import RUN_TABLES, STAGES, KGPipeline
 
 
 @pytest.fixture(scope="module")
@@ -167,10 +167,7 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     base, full = _superset_inputs(spark, root, [10, 20])
     work = str(root / "kg")
     KGPipeline(spark, base, work, run_id="r1").run(resume=False)
-    p2 = KGPipeline(spark, full, work, run_id="r2", mode="append")
-    pre_append = p2.store.read_marker("materialize")
-    p2.run(resume=False)
-    p2.store.write_marker("materialize", pre_append)  # the crash
+    _crashed_append(spark, full, work, "r2", "materialize")
 
     retry = KGPipeline(spark, full, work, run_id="r2", mode="append")
     m = retry.run()
@@ -191,9 +188,21 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     assert lin.filter(F.col("run_id") == "r1").count() > 0  # r1 untouched
 
 
+def _crashed_append(spark, path, work, run_id, last, **kw):
+    """An append of ``path`` that dies after stage ``last``: every stage up
+    to it ran (after materialize: every write, but not its marker), and the
+    materialize marker still names only the runs imported before it."""
+    crashed = KGPipeline(spark, path, work, run_id=run_id, mode="append", **kw)
+    pre_append = crashed.store.read_marker("materialize")
+    for stage in STAGES[: STAGES.index(last) + 1]:
+        getattr(crashed, f"stage_{stage}")()
+    crashed.store.write_marker("materialize", pre_append)  # the crash
+
+
 @pytest.mark.parametrize(
     "last, retry_id, resume",
     [
+        pytest.param("link", "r3", True, id="after_link-new_run_id"),
         pytest.param("canonicalize", "r3", True, id="before_materialize-new_run_id"),
         pytest.param("materialize", "r3", True, id="after_materialize-new_run_id"),
         pytest.param("materialize", "r2", False, id="after_materialize-same_run_id_no_resume"),
@@ -207,31 +216,30 @@ def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, r
     deletes its partitions: its watermarks do not hide its turns from the
     retry, its delta is not counted twice, and the retry does not merge
     onto its node upsert. Assertions, extracted rows, checksum, nodes,
-    mention total and lineage equal a rebuild of the superset, and a later
-    append of the same input adds nothing."""
+    mention total and lineage equal a rebuild of the superset, every
+    run-scoped table holds partitions of the imported runs only, and a
+    later append of the same input adds nothing."""
     root = tmp_path_factory.mktemp("crash")
     base, full = _superset_inputs(spark, root, [10, 20])
     work = str(root / "kg")
     KGPipeline(spark, base, work, run_id="r1").run(resume=False)
-    crashed = KGPipeline(spark, full, work, run_id="r2", mode="append")
-    pre_append = crashed.store.read_marker("materialize")
-    for stage in STAGES[: STAGES.index(last) + 1]:
-        getattr(crashed, f"stage_{stage}")()
-    crashed.store.write_marker("materialize", pre_append)  # the crash
+    _crashed_append(spark, full, work, "r2", last)
 
     retry = KGPipeline(spark, full, work, run_id=retry_id, mode="append")
     m = retry.run(resume=resume)
     fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
     want = fresh.run(resume=False)
     n = want["extract"]["assertions"]
-    assert m["extract"]["assertions"] == retry._extracted().count() == n
+    assert m["extract"]["assertions"] == retry._full("extracted").count() == n
     assert m["materialize"]["checksum"] == want["materialize"]["checksum"]
     assert m["materialize"]["nodes"] == want["materialize"]["nodes"] == retry.nodes().count()
     mentions = F.sum("n_mentions")
     assert retry.nodes().agg(mentions).first() == fresh.nodes().agg(mentions).first()
     runs = sorted({"r1", retry_id})
     assert retry.store.read_marker("materialize")["imported_runs"] == runs
-    for name, col in [("extracted", "_run"), ("conv_watermarks", "_run"), ("lineage", "run_id")]:
+    assert m["link"]["vocab"] == want["link"]["vocab"] == retry._full("vocab").count()
+    # triples aside: a retry that folds rewrites them into its own partition
+    for name, col in RUN_TABLES.items() - {("triples", "_run")}:
         got = retry.store.read(name).select(col).distinct().collect()
         assert sorted(r[0] for r in got) == runs, name
     lin = retry.lineage().filter(F.col("run_id") == retry_id)
@@ -435,6 +443,80 @@ def test_append_auto_fold_reaches_fixpoint(spark, tmp_path_factory):
     p3 = _append_run(spark, full, work, "r3", fold_threshold=0)
     assert _run_triples(p3, "r3") == 0
     assert p3.metrics["canonicalize"]["stale_surfaces"] == 0
+
+
+def test_append_retry_after_auto_fold_matches_clean_history(spark, tmp_path_factory):
+    """An auto-folding append that dies after canonicalize, when its full
+    assignment has already replaced links, retried under a new run_id: the
+    retry finds the graph touched by a run that never completed and
+    re-materializes from every run's extraction instead of merging its
+    delta onto triples and nodes that still carry the pre-fold ids. The
+    checksum and node count equal the same history without the crash."""
+    half, full = _staleness_corpora(spark, tmp_path_factory)
+    root = tmp_path_factory.mktemp("fold_crash")
+    work, clean = str(root / "kg"), str(root / "clean")
+    for w in (work, clean):
+        KGPipeline(spark, half, w, run_id="r1").run(resume=False)
+    _crashed_append(spark, full, work, "r2", "canonicalize", fold_threshold=0)
+
+    got, want = (
+        KGPipeline(spark, full, w, run_id="r3", mode="append", fold_threshold=0).run(
+            resume=False
+        )["materialize"]
+        for w in (work, clean)
+    )
+    assert got["checksum"] == want["checksum"]
+    assert got["nodes"] == want["nodes"] == 3  # the acme pair merged
+
+
+def _alias_corpora(spark, tmp_path_factory):
+    """A base naming "acme corp"; the input of an append that adds "acme
+    corp aka acme corporation"; and the input of a later append that names
+    "acme corporation" with no aka. The two acme keys share one of three
+    tokens, so only the aka links them."""
+    import datetime
+
+    from importtoneo4j_spark.schemas import TRANSCRIPTS
+
+    t0 = datetime.datetime(2025, 1, 1)
+    base = [
+        ("conv-a", 0, "user", "[[acme corp]] works_at [[big co]]", None, t0),
+        ("conv-a", 1, "assistant", "[[big co]] located_in [[metropolis]]", None, t0),
+    ]
+    aka = ("conv-b", 0, "user", "[[acme corp]] aka [[acme corporation]]", None, t0)
+    plain = ("conv-c", 0, "user", "[[acme corporation]] uses [[gizmo]]", None, t0)
+    root = tmp_path_factory.mktemp("alias")
+    paths = []
+    for name, rows in [("base", base), ("aka", base + [aka]), ("plain", base + [plain])]:
+        paths.append(str(root / name))
+        spark.createDataFrame(rows, TRANSCRIPTS).write.parquet(paths[-1])
+    return paths
+
+
+@pytest.mark.parametrize("last", ["link", "canonicalize"])
+def test_crashed_append_link_evidence_not_kept(spark, tmp_path_factory, last):
+    """An append that read an aka turn and died after ``last`` leaves no
+    evidence behind: its retry under a new run_id, whose input lacks that
+    turn, does not merge "acme corporation" into "acme corp". Its
+    vocabulary, signatures, same_as edges and links were in its own
+    partitions, which the retry deletes, so the checksum and the node set
+    equal the same history without the crash."""
+    base, aka, plain = _alias_corpora(spark, tmp_path_factory)
+    root = tmp_path_factory.mktemp("stale_evidence")
+    work, clean = str(root / "kg"), str(root / "clean")
+    for w in (work, clean):
+        KGPipeline(spark, base, w, run_id="r1").run(resume=False)
+    _crashed_append(spark, aka, work, "r2", last)
+
+    got, want = (KGPipeline(spark, plain, w, run_id="r3", mode="append") for w in (work, clean))
+    checksums = [p.run(resume=False)["materialize"]["checksum"] for p in (got, want)]
+    assert checksums[0] == checksums[1]
+
+    def node_ids(pipe):
+        return sorted(r[0] for r in pipe.nodes().select("entity_id").collect())
+
+    assert node_ids(got) == node_ids(want)
+    assert len(node_ids(want)) == 5  # the two acme entities stay apart
 
 
 def test_fold_epochs_watermarks_from_folded_extraction(spark, data, tmp_path_factory):

@@ -290,7 +290,7 @@ def test_lsh_grouped_pass_drops_planted_hot_bucket(spark):
     a stored signature, yields no pair and counts as one dropped bucket.
     The plan has no Window and no join on band_key: the bucket is dropped
     after one groupBy, holding its member list (O(B)), never its pairs."""
-    from importtoneo4j_spark.operators.link import hot_buckets_dropped, lsh_candidate_edges
+    from importtoneo4j_spark.operators.link import lsh_candidate_edges
     from importtoneo4j_spark.session import stage_unpersist
 
     hot = spark.range(100_000).select(
@@ -298,15 +298,13 @@ def test_lsh_grouped_pass_drops_planted_hot_bucket(spark):
         F.lit("HOT").alias("band_key"),
     )
     vocab = spark.createDataFrame([("acme corp",)], ["norm_key"])
-    persisted: list = []
-    edges = lsh_candidate_edges(vocab, stored_sig=hot, persisted=persisted)
-    plan = edges._jdf.queryExecution().executedPlan().toString()
+    lsh = lsh_candidate_edges(vocab, stored_sig=hot)
+    plan = lsh.edges._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert not [line for line in plan.splitlines() if "Join" in line and "band_key" in line]
-    assert edges.collect() == []
-    assert hot_buckets_dropped(edges) == 1
-    for frame in persisted:
-        stage_unpersist(frame)
+    assert lsh.edges.collect() == []
+    assert lsh.hot_buckets_dropped() == 1
+    stage_unpersist(lsh.sig)
 
 
 def test_link_edges_job_budget(spark, spark_jobs, tmp_path):
@@ -327,16 +325,14 @@ def test_link_edges_job_budget(spark, spark_jobs, tmp_path):
     spark.createDataFrame(
         [("alpha labs", "alpha labs ltd")], "src string, dst string"
     ).write.parquet(str(tmp_path / "same_as"))
-    persisted: list = []
-    lsh = lsh_candidate_edges(spark.read.parquet(str(tmp_path / "vocab")), persisted=persisted)
-    edges = spark.read.parquet(str(tmp_path / "same_as")).unionByName(lsh).distinct()
+    lsh = lsh_candidate_edges(spark.read.parquet(str(tmp_path / "vocab")))
+    edges = spark.read.parquet(str(tmp_path / "same_as")).unionByName(lsh.edges).distinct()
     before = spark_jobs()
     edges.write.parquet(str(tmp_path / "edges"))
     assert spark_jobs() - before <= 6
     got = {tuple(r) for r in spark.read.parquet(str(tmp_path / "edges")).collect()}
     assert ("alpha labs", "alpha labs inc") in got and ("alpha labs", "alpha labs ltd") in got
-    for frame in persisted:
-        stage_unpersist(frame)
+    stage_unpersist(lsh.sig)
 
 
 def test_stage_persist_modes(spark):
@@ -397,10 +393,10 @@ def test_asof_join_semantics(spark):
 def test_lsh_dropped_buckets_on_persisted_signature(spark):
     """VERDICT r2 minor #4: the observability path consumes the signature
     frame lsh_candidate_edges already computed (the one the pipeline stores
-    as link_sig; one MinHash computation total) and its dropped buckets are
+    in link_sig; one MinHash computation total) and its dropped buckets are
     exactly the ones drop_hot_buckets removes. Fed that signature back as
-    the stored one, the same composition yields the same signature and
-    edges (the pipeline's append path)."""
+    the stored one, the same composition MinHashes no key and yields the
+    same edges (the pipeline's append path)."""
     from importtoneo4j_spark.operators.link import (
         drop_hot_buckets,
         lsh_candidate_edges,
@@ -412,9 +408,8 @@ def test_lsh_dropped_buckets_on_persisted_signature(spark):
     vocab = spark.createDataFrame(
         [(f"acme corp {i}",) for i in range(40)], ["norm_key"]
     )
-    persisted, sig_box = [], []
-    edges = lsh_candidate_edges(vocab, persisted=persisted, sig_out=sig_box)
-    sig = sig_box[0]
+    first = lsh_candidate_edges(vocab)
+    sig = first.sig
     dropped = lsh_dropped_buckets(sig, max_bucket=5)
     rows = dropped.collect()
     assert rows and all(r["bsz"] > 5 for r in rows)
@@ -422,11 +417,11 @@ def test_lsh_dropped_buckets_on_persisted_signature(spark):
     assert kept.join(dropped, "band_key").count() == 0
 
     stored = spark.createDataFrame(sig.collect(), sig.schema)
-    again = lsh_candidate_edges(vocab, stored_sig=stored, persisted=persisted, sig_out=sig_box)
-    assert sorted(sig_box[1].collect()) == sorted(sig.collect())
-    assert sorted(again.collect()) == sorted(edges.collect())
-    for frame in persisted:
-        stage_unpersist(frame)
+    again = lsh_candidate_edges(vocab, stored_sig=stored)
+    assert again.sig.count() == 0  # every key's signature is stored
+    assert sorted(again.edges.collect()) == sorted(first.edges.collect())
+    for lsh in (first, again):
+        stage_unpersist(lsh.sig)
 
 
 def test_asof_join_dedup_col_and_map_payload(spark):

@@ -328,10 +328,11 @@ def _reference_lsh_edges(sig_rows, max_bucket, threshold):
 @example(case=([("Acme Corp", True), ("acme-corp.", False)], [("acme", 8)], 3, 2))
 @example(case=([("İstanbul Ölçer", True), ("ΣΟΦΙΑ ς", True)], [("zz", 5)], 4, 0))
 def test_lsh_candidate_edges_matches_reference(spark, case):
-    """lsh_candidate_edges == a pure-Python recomputation from the
-    signature frame it returns, whatever part of the vocabulary comes in
-    as stored signatures; and the tokens the linker takes from a norm_key
-    by splitting it equal token_shingles of that key."""
+    """lsh_candidate_edges == a pure-Python recomputation from the stored
+    signatures and the fresh ones it returns, whatever part of the
+    vocabulary comes in as stored signatures; and the tokens the linker
+    takes from a norm_key by splitting it equal token_shingles of that
+    key."""
     from pyspark.sql import functions as F
 
     from importtoneo4j_spark.functions.text import norm_key, token_shingles
@@ -354,22 +355,16 @@ def test_lsh_candidate_edges_matches_reference(spark, case):
 
     keys = sorted({r["k"] for r in keyed.collect()} - {""})
     vocab = spark.createDataFrame([(k,) for k in keys], "norm_key string")
-    persisted: list = []
-    stored = None
+    stored, stored_rows = None, []
     if n_stored:
-        first: list = []
-        lsh_candidate_edges(
-            vocab.filter(F.col("norm_key").isin(keys[:n_stored])),
-            persisted=persisted,
-            sig_out=first,
-        )
-        stored = spark.createDataFrame(first[0].collect(), first[0].schema)
-    sig_box: list = []
-    edges = lsh_candidate_edges(
-        vocab, stored_sig=stored, max_bucket=max_bucket, persisted=persisted, sig_out=sig_box
-    )
-    got = {(r["src"], r["dst"]) for r in edges.collect()}
-    want = _reference_lsh_edges(sig_box[0].collect(), max_bucket, JACCARD_THRESHOLD)
+        first = lsh_candidate_edges(vocab.filter(F.col("norm_key").isin(keys[:n_stored])))
+        stored_rows = first.sig.collect()
+        stored = spark.createDataFrame(stored_rows, first.sig.schema)
+        stage_unpersist(first.sig)
+    lsh = lsh_candidate_edges(vocab, stored_sig=stored, max_bucket=max_bucket)
+    got = {(r["src"], r["dst"]) for r in lsh.edges.collect()}
+    fresh_rows = lsh.sig.collect()
+    assert not {r["norm_key"] for r in fresh_rows} & {r["norm_key"] for r in stored_rows}
+    want = _reference_lsh_edges(stored_rows + fresh_rows, max_bucket, JACCARD_THRESHOLD)
     assert got == want
-    for frame in persisted:
-        stage_unpersist(frame)
+    stage_unpersist(lsh.sig)
