@@ -1,4 +1,4 @@
-"""Graph materialization: canonical triples + nodes + per-partition lineage.
+"""Graph materialization: canonical triples + nodes + their checksum.
 
 Replaces the reference's per-call-transaction graph sink (Neo4j.addNode
 Neo4j.java:96-115, createRelationship :190-211 with the hasRelationship
@@ -9,9 +9,10 @@ existence guard :192-194,212-229) with set-oriented writes:
   the reference's first-writer-wins and edge-uniqueness semantics.
 * nodes   — one row per canonical entity; canonical_surface = first surface
   form seen in stream order; labels = set-union of classification rules.
-* lineage — per-partition row counts + order-insensitive checksum
-  (bit_xor of row hashes), generalizing the new-variants delta sink
-  (VariantDatabase.java:235-263) into an auditable manifest.
+* lineage — written by the pipeline (plans/pipeline.py), one row per run:
+  the triples it added, counted and checksummed by ``row_hash_xor`` (an
+  order-insensitive bit_xor of row hashes), like the reference's
+  new-variants delta sink (VariantDatabase.java:235-263).
 """
 
 from __future__ import annotations
@@ -152,45 +153,17 @@ def canonical_nodes(extracted: DataFrame, links: DataFrame) -> DataFrame:
     )
 
 
-def lineage_manifest(
-    df: DataFrame, run_id: str, stage: str, hash_cols: list[str] | None = None
-) -> DataFrame:
-    """Per-partition lineage rows: (run_id, stage, partition_id, output_rows,
-    checksum). Checksum = bit_xor of xxhash64 over hash_cols — order- and
-    partitioning-insensitive when aggregated, so two runs at different
-    parallelism produce comparable manifests."""
-    cols = hash_cols or df.columns
-    hashed = df.select(
-        F.spark_partition_id().alias("partition_id"),
-        F.xxhash64(*[F.col(c).cast("string") for c in cols]).alias("h"),
-    )
-    return (
-        hashed.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("output_rows"),
-            F.expr("bit_xor(h)").cast("string").alias("checksum"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col("partition_id").cast("int"),
-            F.lit(None).cast("long").alias("input_rows"),
-            "output_rows",
-            F.lit(None).cast("long").alias("rejected_rows"),
-            "checksum",
-        )
-    )
+def row_hash_xor(cols: list[str]) -> Column:
+    """bit_xor of xxhash64 over the string casts of ``cols``: an
+    aggregate checksum that ignores row order and partitioning, and whose
+    value over disjoint parts xors to its value over their union."""
+    casts = ", ".join(f"cast({c} as string)" for c in cols)
+    return F.expr(f"bit_xor(xxhash64({casts}))")
 
 
 def global_checksum(df: DataFrame, hash_cols: list[str] | None = None) -> str:
     """Order-insensitive whole-table checksum (resume / idempotency tests)."""
-    cols = hash_cols or df.columns
     row = df.select(
-        F.expr(
-            "bit_xor("
-            + f"xxhash64({', '.join(f'cast({c} as string)' for c in cols)})"
-            + ")"
-        ).alias("x"),
-        F.count("*").alias("n"),
+        row_hash_xor(hash_cols or df.columns).alias("x"), F.count("*").alias("n")
     ).first()
     return f"{row['n']}:{row['x']}"

@@ -4,8 +4,8 @@ The reference declares its graph schema up front as two enums-as-arrays —
 7 node labels and 7 relationship types, several of which the importer never
 instantiates (VariantDatabase.java:33-65: the reserved Mt label, the
 HAS_MT_VARIANT rel-type, ...) — so "what types exist" is answerable without
-scanning the graph. This engine records the same thing as a queryable
-TABLE: every declared type (with its key constraint), every observed type
+scanning the graph. This engine answers the same question with a queryable
+DataFrame: every declared type (with its key constraint), every observed type
 (with instance counts), and the two flags that relate them. Dynamic
 rel-types (reference VariantDatabase.java:463,476 — predicate names built
 from data) appear as observed-but-undeclared rows, never silently.
@@ -58,10 +58,11 @@ def schema_registry(
 ) -> DataFrame:
     """The (declared ∪ observed) type catalog of a materialized graph.
 
-    Two tiny aggregations (explode labels / groupBy pred) full-outer-joined
-    with the declared vocabulary — output cardinality is the number of
-    TYPES, so this is safe to recompute on every materialize at any corpus
-    scale.
+    Two aggregations (explode labels / groupBy pred) merged with the
+    declared vocabulary; output cardinality is the number of TYPES. Each
+    reads its whole input once, so the pipeline stores no registry: it is
+    computed on demand from the stored graph (KGPipeline.schema_registry),
+    and materialize does not pay that scan on every run.
     """
     if declared_labels is None:
         declared_labels = DECLARED_NODE_LABELS

@@ -14,7 +14,7 @@ Stages::
     extract      JVM regexp_extract_all assertion extraction (fan-out)
     link         vocabulary + same_as + MinHash-LSH similarity edges
     canonicalize connected components -> (surface -> canonical_id)
-    materialize  triples + nodes + lineage manifest
+    materialize  triples + nodes + one lineage row per run
 
 Every stage has ONE code path: it appends this run's delta to the stored
 state. A rebuild (``mode="overwrite"``, the reference's ``-n``,
@@ -48,8 +48,8 @@ from importtoneo4j_spark.operators.link import (
 from importtoneo4j_spark.operators.materialize import (
     canonical_nodes,
     canonical_triples,
-    lineage_manifest,
     node_bucket,
+    row_hash_xor,
 )
 from importtoneo4j_spark.operators.merge import (
     assert_unique,
@@ -57,6 +57,7 @@ from importtoneo4j_spark.operators.merge import (
     new_keys_only,
 )
 from importtoneo4j_spark.operators.registry import schema_registry
+from importtoneo4j_spark.schemas import LINEAGE
 from importtoneo4j_spark.sources.tables import TableStore
 from importtoneo4j_spark.sources.transcripts import (
     assert_unique_turns,
@@ -85,7 +86,12 @@ RUN_TABLES = {
 # every table a run keeps; a rebuild deletes them (and the stage markers)
 # before its first stage. The rest are rewritten whole by every run
 # (``nodes`` per touched bucket).
-TABLES = [*RUN_TABLES, "ingested", "link_edges", "nodes", "schema_registry"]
+TABLES = [*RUN_TABLES, "ingested", "link_edges", "nodes"]
+
+# the layout of the stored tables, recorded in the materialize marker; bump
+# it whenever a table changes layout, so that an append onto a store this
+# code cannot read raises instead of importing a wrong graph
+LAYOUT = 1
 
 
 @dataclass
@@ -403,8 +409,14 @@ class KGPipeline:
         so its first-wins attribution over the delta equals its attribution
         over the full corpus.
 
-        A fold clears the triples and nodes and takes every run's partition
-        as its delta: it runs when ``nodes`` may no longer match the
+        The run's ``lineage`` row holds the count and row-hash xor of the
+        triples it added, observed on that write. The triple total and
+        checksum are the sum and xor over every run's row, the node total
+        comes from the node-key audit: a retry (its own row deleted first)
+        reports the same figures whatever its previous attempt left behind.
+
+        A fold clears the triples, nodes and lineage and takes every run's
+        partition as its delta: it runs when ``nodes`` may no longer match the
         imported runs. The ``nodes`` marker names the run that may have
         changed the graph since the last import: this stage upserts the
         nodes in place, and an auto-fold replaces the links they were
@@ -418,7 +430,7 @@ class KGPipeline:
         self._mark("nodes")
         self._drop_unimported("triples", "conv_watermarks", "lineage")
         if fold:
-            for name in ("triples", "nodes"):
+            for name in ("triples", "nodes", "lineage"):
                 self.store.drop(name)
             delta_ext = self._full("extracted")
         else:
@@ -447,7 +459,19 @@ class KGPipeline:
             # leads with the dynamic-partition column pred (_run is a
             # literal) so the writer adds no sort of its own (round 6,
             # guide §2.4: measured 3.51 -> 3.08 s write at sf1.0).
-            self._append(delta, "triples", "pred", order_by=("subj", "obj"))
+            added = Observation("triples_added")
+            n = self._append(
+                delta.observe(added, row_hash_xor(["subj", "pred", "obj"]).alias("x")),
+                "triples",
+                "pred",
+                order_by=("subj", "obj"),
+            )
+            # the run's lineage row; a run that adds no triple writes none
+            row = (self.run_id, "materialize", 0, None, n, None, str(added.get["x"]))
+            self._append(
+                self.spark.createDataFrame([row], LINEAGE).filter(F.col("output_rows") > 0),
+                "lineage",
+            )
 
         def _nodes() -> None:
             # node upsert (not insert-new-only): labels/surfaces/mention
@@ -510,88 +534,47 @@ class KGPipeline:
             for f in [pool.submit(fn) for fn in (_triples, _nodes, _watermarks)]:
                 f.result()
 
-        final = self.store.read("triples")
-
-        # the node total, the triple count and the global checksum are all
-        # taken from the tables as written — never from an earlier marker —
-        # so a retry of this stage under the same run_id reports the same
-        # figures whatever its previous attempt left behind
+        # node total + F4 on the graph sink in one pass: entity_id is the
+        # node MERGE key and must be unique (Neo4j.java:163-167 throws on >1
+        # index hit). Both ride an Observation ABOVE the per-key count —
+        # below a shuffle, AQE drops the metrics of a branch it finds empty
+        # at runtime — and the noop sink drains the counts without
+        # collecting them. The offender lookup runs only on the failure
+        # path.
         nodes_obs = Observation("nodes_audit")
-
-        def _t_nodes() -> None:
-            # node total + F4 on the graph sink in one pass: entity_id is
-            # the node MERGE key and must be unique (Neo4j.java:163-167
-            # throws on >1 index hit). Both ride an Observation ABOVE the
-            # per-key count — below a shuffle, AQE drops the metrics of a
-            # branch it finds empty at runtime — and the noop sink drains
-            # the counts without collecting them. The offender lookup runs
-            # only on the failure path.
-            nodes = self.store.read("nodes")
-            (
-                nodes.groupBy("entity_id")
-                .count()
-                .observe(
-                    nodes_obs, F.sum("count").alias("n"), F.max("count").alias("dup")
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            if self.fail_fast and (nodes_obs.get["dup"] or 0) > 1:
-                assert_unique(nodes, ["entity_id"], what="entity_id")
-
-        # the triple count + global checksum ride the lineage write as an
-        # Observation — no lineage read-back (bit_xor is associative: the
-        # xor of per-partition checksums == the xor of all row hashes)
+        nodes = self.store.read("nodes")
+        (
+            nodes.groupBy("entity_id")
+            .count()
+            .observe(nodes_obs, F.sum("count").alias("n"), F.max("count").alias("dup"))
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
+        if self.fail_fast and (nodes_obs.get["dup"] or 0) > 1:
+            assert_unique(nodes, ["entity_id"], what="entity_id")
+        # the triple total and global checksum, over every run's lineage
+        # row (at most one per run) in one scan job: bit_xor is
+        # associative, so the xor of the runs' checksums is the xor of all
+        # row hashes; no row at all reads "0:None"
         lin_obs = Observation("lineage_totals")
-
-        def _t_registry() -> None:
-            # schema registry as data (SURVEY §1.1): the declared vocabulary
-            # — including reserved, never-instantiated types, the reference's
-            # VariantDatabase.java:33-65 pattern — plus observed labels/
-            # rel-types with counts. Output cardinality = number of TYPES;
-            # recomputed on every materialize.
-            self.store.write(
-                schema_registry(self.store.read("nodes"), final),
-                "schema_registry",
-            )
-
-        def _t_lineage() -> None:
-            lineage = lineage_manifest(
-                final, self.run_id, "materialize", hash_cols=["subj", "pred", "obj"]
-            ).observe(
-                lin_obs,
-                F.count(F.lit(1)).alias("parts"),
-                F.sum("output_rows").alias("n"),
-                F.expr("bit_xor(cast(checksum as bigint))").alias("x"),
-            )
-            # a retry of this stage has deleted its own run's rows first
-            self._append(lineage, "lineage")
-
-        # the three post-write audits are mutually independent reads of the
-        # just-written tables — run them concurrently too (guide §2.6). A
-        # failing uniqueness assertion still aborts before the stage marker;
-        # the registry/lineage artifacts it may race with are rewritten by
-        # the re-run (no marker = stage incomplete).
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for f in [pool.submit(fn) for fn in (_t_nodes, _t_registry, _t_lineage)]:
-                f.result()
-        lin = lin_obs.get
-        n_triples = int(lin["n"] or 0)
-        checksum = f"{n_triples}:{int(lin['x'])}" if lin["parts"] else "0:None"
-        n_nodes = int(nodes_obs.get["n"] or 0)
+        self.store.read("lineage").observe(
+            lin_obs,
+            F.sum("output_rows").alias("n"),
+            F.expr("bit_xor(cast(checksum as bigint))").alias("x"),
+        ).write.format("noop").mode("overwrite").save()
+        n, x = int(lin_obs.get["n"] or 0), lin_obs.get["x"]
         self.metrics["materialize"] = {
-            "triples": n_triples,
-            "nodes": n_nodes,
-            "checksum": checksum,
+            "triples": n,
+            "nodes": int(nodes_obs.get["n"] or 0),
+            "checksum": f"{n}:{x}",
         }
         self._mark(
             "materialize",
-            triples=n_triples,
-            nodes=n_nodes,
-            checksum=checksum,
+            **self.metrics["materialize"],
             assertions=self.store.read_marker("extract")["assertions"],
             vocab=self.store.read_marker("link")["vocab"],
+            layout=LAYOUT,
             imported_runs=sorted(set(self._prev_runs()) | {self.run_id}),
         )
 
@@ -656,6 +639,16 @@ class KGPipeline:
         resuming = resume and any(self._done(s) for s in STAGES)
         if self.mode == "overwrite" and not resuming:
             self._clear_store()
+        else:
+            # an append or a resume builds on the stored tables: refuse a
+            # store this code would read wrong
+            marker = self.store.read_marker("materialize")
+            if marker is not None and marker.get("layout") != LAYOUT:
+                raise ValueError(
+                    f"the store at {self.workdir} has layout {marker.get('layout')}, "
+                    f"this code reads layout {LAYOUT}: rebuild it "
+                    '(mode="overwrite") or use a fresh workdir'
+                )
         return self._run_stages(STAGES, resume)
 
     # ----------------------------------------------------- streaming fold
@@ -688,6 +681,11 @@ class KGPipeline:
 
     def nodes(self) -> DataFrame:
         return self.store.read("nodes")
+
+    def schema_registry(self) -> DataFrame:
+        """The graph's declared ∪ observed type catalog, computed from the
+        stored nodes and triples (operators/registry.py)."""
+        return schema_registry(self.nodes(), self.triples())
 
     def rejects(self) -> DataFrame:
         return (

@@ -87,6 +87,9 @@ TRIPLES = T.StructType(
     ]
 )
 
+# one row per run that added triples: output_rows = the triples it added,
+# checksum = their row_hash_xor (operators/materialize.py); partition_id is
+# 0, input_rows and rejected_rows are null
 LINEAGE = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.datagen import TranscriptGenerator
+from importtoneo4j_spark.operators.materialize import global_checksum
 from importtoneo4j_spark.plans.pipeline import RUN_TABLES, STAGES, KGPipeline
 
 
@@ -81,6 +82,30 @@ def _run_triples(pipe, run_id):
     return pipe.store.read("triples").filter(F.col("_run") == run_id).count()
 
 
+def _assert_lineage_per_run(pipe):
+    """Each run's lineage row describes its own _run partition of triples,
+    by count and checksum, and the rows sum (count) and xor (checksum) to
+    the materialize marker's figures. Returns the runs that have a row:
+    exactly the runs that hold triples."""
+    rows = pipe.lineage().collect()
+    runs = [r["run_id"] for r in rows]
+    assert len(runs) == len(set(runs))  # one row per run
+    triples = pipe.store.read("triples")
+    held = {r[0] for r in triples.select("_run").distinct().collect()}
+    assert set(runs) == held
+    x = None
+    for r in rows:
+        part = triples.filter(F.col("_run") == r["run_id"])
+        assert global_checksum(part, ["subj", "pred", "obj"]) == (
+            f"{r['output_rows']}:{r['checksum']}"
+        ), r["run_id"]
+        x = int(r["checksum"]) ^ (x or 0)
+    marker = pipe.store.read_marker("materialize")
+    assert marker["checksum"] == f"{sum(r['output_rows'] for r in rows)}:{x}"
+    assert marker["triples"] == sum(r["output_rows"] for r in rows)
+    return set(runs)
+
+
 def test_append_layout_survives_new_session(spark, tmp_path_factory):
     """The triples layout does not depend on session state: an empty-input
     rebuild writes no triples file, and an append run in a new Spark
@@ -149,6 +174,7 @@ def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
         runs.add(run_id)
         assert _assert_unmixed_layout(work) == runs
         assert pn.store.read_marker("materialize")["triples"] == pn.triples().count()
+        assert _assert_lineage_per_run(pn) == runs
 
     fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
     want = fresh.run(resume=False)["materialize"]
@@ -160,9 +186,10 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     """A crash after the append's lineage write but before its materialize
     marker, retried under the same run_id: only materialize reruns, it
     reports the checksum, node count and mention total of a rebuild of the
-    superset, and lineage holds that run_id's rows exactly once (a second
-    append of them used to double the count and cancel the xor checksum to
-    0)."""
+    superset, and lineage holds that run_id's row exactly once (a second
+    append of it used to double the count and cancel the xor checksum to
+    0). The retry folds, so its row is the only one, as its partition is
+    the only one of triples."""
     root = tmp_path_factory.mktemp("retry")
     base, full = _superset_inputs(spark, root, [10, 20])
     work = str(root / "kg")
@@ -181,11 +208,7 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     mentions = F.sum("n_mentions")
     assert retry.nodes().agg(mentions).first() == fresh.nodes().agg(mentions).first()
 
-    lin = retry.lineage()
-    r2 = lin.filter(F.col("run_id") == "r2")
-    assert r2.count() == r2.select("partition_id").distinct().count()
-    assert r2.agg(F.sum("output_rows")).first()[0] == want["triples"]
-    assert lin.filter(F.col("run_id") == "r1").count() > 0  # r1 untouched
+    assert _assert_lineage_per_run(retry) == {"r2"}
 
 
 def _crashed_append(spark, path, work, run_id, last, **kw):
@@ -216,9 +239,10 @@ def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, r
     deletes its partitions: its watermarks do not hide its turns from the
     retry, its delta is not counted twice, and the retry does not merge
     onto its node upsert. Assertions, extracted rows, checksum, nodes,
-    mention total and lineage equal a rebuild of the superset, every
-    run-scoped table holds partitions of the imported runs only, and a
-    later append of the same input adds nothing."""
+    mention total equal a rebuild of the superset, each run's lineage row
+    describes its own triples, every run-scoped table holds partitions of
+    the imported runs only, and a later append of the same input adds
+    nothing."""
     root = tmp_path_factory.mktemp("crash")
     base, full = _superset_inputs(spark, root, [10, 20])
     work = str(root / "kg")
@@ -238,18 +262,62 @@ def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, r
     runs = sorted({"r1", retry_id})
     assert retry.store.read_marker("materialize")["imported_runs"] == runs
     assert m["link"]["vocab"] == want["link"]["vocab"] == retry._full("vocab").count()
-    # triples aside: a retry that folds rewrites them into its own partition
-    for name, col in RUN_TABLES.items() - {("triples", "_run")}:
-        got = retry.store.read(name).select(col).distinct().collect()
+    # triples and lineage aside: a retry that folds rewrites them into its
+    # own partition
+    for name in RUN_TABLES.keys() - {"triples", "lineage"}:
+        got = retry.store.read(name).select(RUN_TABLES[name]).distinct().collect()
         assert sorted(r[0] for r in got) == runs, name
-    lin = retry.lineage().filter(F.col("run_id") == retry_id)
-    assert lin.agg(F.sum("output_rows")).first()[0] == want["materialize"]["triples"]
+    lineage_runs = _assert_lineage_per_run(retry)
+    assert retry_id in lineage_runs and lineage_runs <= set(runs)
 
     again = KGPipeline(spark, full, work, run_id="r4", mode="append")
     m4 = again.run()
     assert m4["extract"]["assertions"] == n
     assert m4["materialize"]["checksum"] == want["materialize"]["checksum"]
     assert _run_triples(again, "r4") == 0
+
+
+def test_materialize_job_budget(spark, spark_jobs, tmp_path_factory):
+    """An append's materialize runs at most 28 Spark jobs on a small store:
+    it writes the run's lineage row from its triples write and reads the
+    totals back from the per-run rows, and it neither rescans the whole
+    triples table nor rebuilds a schema registry (that form ran 32)."""
+    root = tmp_path_factory.mktemp("mat_jobs")
+    base, full = _superset_inputs(spark, root, [10, 20])
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    _crashed_append(spark, full, work, "r2", "canonicalize")
+    pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    before = spark_jobs()
+    pipe.stage_materialize()
+    assert spark_jobs() - before <= 28
+    assert _assert_lineage_per_run(pipe) == {"r1", "r2"}
+
+
+def test_append_onto_store_without_layout_raises(spark, tmp_path_factory):
+    """A store whose materialize marker records no layout (written before
+    the marker carried one) cannot take an append: run() raises, naming
+    the rebuild, before it writes any file."""
+    root = tmp_path_factory.mktemp("layout")
+    base, full = _superset_inputs(spark, root, [10, 20])
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    marker = pipe.store.read_marker("materialize")
+    del marker["layout"]
+    pipe.store.write_marker("materialize", marker)
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, names in os.walk(work)
+            for f in names
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match='mode="overwrite"'):
+        pipe.run()
+    assert files() == before
 
 
 def test_rebuild_onto_used_store_forgets_old_runs(spark, tmp_path_factory):

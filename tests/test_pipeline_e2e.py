@@ -45,20 +45,18 @@ def test_triple_precision_recall(run, oracle):
 
 
 def test_schema_registry_written(run):
-    """Schema registry as data (SURVEY §1.1): materialize writes the type
-    catalog, including reserved-but-uninstantiated types (the reference
-    declares 7 labels + 7 rel-types it never creates,
-    VariantDatabase.java:33-65)."""
+    """Schema registry as data (SURVEY §1.1): the pipeline's type catalog,
+    a view over the stored graph (no stored table), includes
+    reserved-but-uninstantiated types (the reference declares 7 labels +
+    7 rel-types it never creates, VariantDatabase.java:33-65)."""
     from importtoneo4j_spark.operators.registry import (
         DECLARED_NODE_LABELS,
         DECLARED_REL_TYPES,
     )
 
     pipe, _ = run
-    reg = {
-        (r["kind"], r["name"]): r
-        for r in pipe.store.read("schema_registry").collect()
-    }
+    assert not pipe.store.exists("schema_registry")
+    reg = {(r["kind"], r["name"]): r for r in pipe.schema_registry().collect()}
     # every declared type is present; reserved ones are uninstantiated
     for name, key in DECLARED_NODE_LABELS:
         row = reg[("node_label", name)]
