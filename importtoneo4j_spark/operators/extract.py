@@ -32,7 +32,8 @@ ASSERTION_PATTERN_SQL = (
 
 
 def extract_assertions(transcripts: DataFrame) -> DataFrame:
-    """valid, stably-ordered transcripts -> exploded assertion rows.
+    """valid transcripts -> exploded assertion rows (row-local: each
+    turn's rows depend on that turn alone).
 
     Round 6 (guide §4.1: prefer built-ins when they exist): the assertion
     grammar runs entirely in the JVM — ``regexp_extract_all`` per capture
@@ -49,7 +50,6 @@ def extract_assertions(transcripts: DataFrame) -> DataFrame:
         "conv_id",
         "turn_idx",
         "role",
-        "seq",
         F.explode(
             F.arrays_zip(
                 F.regexp_extract_all("text", F.lit(ASSERTION_PATTERN_SQL), 1).alias("subj"),
@@ -64,7 +64,6 @@ def extract_assertions(transcripts: DataFrame) -> DataFrame:
         "conv_id",
         "turn_idx",
         "role",
-        "seq",
         F.trim(F.col("m.subj")).alias("subj_surface"),
         F.when(is_aka, "same_as")
         .otherwise(F.replace(F.col("m.verb"), F.lit(":"), F.lit("_")))

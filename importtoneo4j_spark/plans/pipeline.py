@@ -10,7 +10,7 @@ exactly-once-per-analysis semantics).
 
 Stages::
 
-    ingest       transcripts -> valid + rejects (quarantine w/ reason)
+    ingest       new transcripts -> valid + rejects (quarantine w/ reason)
     extract      JVM regexp_extract_all assertion extraction (fan-out)
     link         vocabulary + same_as + MinHash-LSH similarity edges
     canonicalize connected components -> (surface -> canonical_id)
@@ -19,10 +19,14 @@ Stages::
 Every stage has ONE code path: it appends this run's delta to the stored
 state. A rebuild (``mode="overwrite"``, the reference's ``-n``,
 Main.java:47-55) only deletes the store first and then runs that same path;
-on an empty store the delta is the whole corpus. A stored table that does
-not exist reads as ``<frame>.limit(0)``, which Catalyst folds to an empty
-relation, so the anti-joins, the full-outer node merge and the unions
-against it drop out of the plan and cost no Spark job.
+on an empty store the delta is the whole corpus. The delta is decided once,
+at ingest: only the turns above the imported runs' per-conversation
+watermarks are imported, so an append's input may repeat the imported turns
+or hold only the new ones, and no later stage compares against the
+watermarks again. A stored table that does not exist reads as
+``<frame>.limit(0)``, which Catalyst folds to an empty relation, so the
+anti-joins, the full-outer node merge and the unions against it drop out of
+the plan and cost no Spark job.
 """
 
 from __future__ import annotations
@@ -61,9 +65,9 @@ from importtoneo4j_spark.schemas import LINEAGE
 from importtoneo4j_spark.sources.tables import TableStore
 from importtoneo4j_spark.sources.transcripts import (
     assert_unique_turns,
+    flag_duplicate_turns,
     read_transcripts,
     tag_rejects,
-    with_stable_order_tagged,
 )
 
 STAGES = ["ingest", "extract", "link", "canonicalize", "materialize"]
@@ -73,6 +77,7 @@ STAGES = ["ingest", "extract", "link", "canonicalize", "materialize"]
 # the partitions of a run that never completed are deleted before the next
 # run writes (``_drop_unimported``)
 RUN_TABLES = {
+    "ingested": "_run",
     "extracted": "_run",
     "vocab": "_run",
     "link_sig": "_run",
@@ -86,12 +91,12 @@ RUN_TABLES = {
 # every table a run keeps; a rebuild deletes them (and the stage markers)
 # before its first stage. The rest are rewritten whole by every run
 # (``nodes`` per touched bucket).
-TABLES = [*RUN_TABLES, "ingested", "link_edges", "nodes"]
+TABLES = [*RUN_TABLES, "link_edges", "nodes"]
 
 # the layout of the stored tables, recorded in the materialize marker; bump
 # it whenever a table changes layout, so that an append onto a store this
 # code cannot read raises instead of importing a wrong graph
-LAYOUT = 1
+LAYOUT = 2
 
 
 @dataclass
@@ -203,84 +208,87 @@ class KGPipeline:
         return int(obs.get["n"])
 
     def stage_ingest(self) -> None:
-        """ONE input scan, one write: reject tagging, stable ordering, the
-        F4 duplicate flag and the valid/reject counters all ride the same
-        window + write job (a separate rejects pass would re-read the whole
-        corpus — 2x input I/O at 100 TB). The table lands partitioned by
-        validity, so downstream valid reads partition-prune and the
-        quarantine stays queryable (warn-and-skip F3, never dropped). An
-        empty input writes no partition; the schema sidecar keeps the table
-        readable."""
+        """Import the input turns no imported run has: an anti-join against
+        the stored per-conversation watermarks drops every turn at or below
+        its conversation's mark before anything else reads the rows, so the
+        rest of the stage sees only this run's delta, and the input may be
+        the superset of the imported turns or just the new ones. A row
+        without a conversation or turn number matches no mark and still
+        reaches the quarantine.
+
+        ONE input scan, one write: the watermark filter, reject tagging,
+        the F4 duplicate flag and the valid/reject counters all ride the
+        same window + write job (a separate rejects pass would re-read the
+        input); an append adds one small job that broadcasts the stored
+        watermarks. The delta lands
+        in this run's ``_run`` partition, partitioned by validity, so the
+        valid reads partition-prune and the quarantine stays queryable
+        (warn-and-skip F3, never dropped). The duplicate check covers the
+        imported delta only: a turn that repeats a (conv_id, turn_idx) at or
+        below its conversation's watermark is not imported, so it is not
+        checked. An empty delta writes no partition; the schema sidecar
+        keeps the table readable."""
+        self._drop_unimported("ingested", "conv_watermarks")
         raw = read_transcripts(self.spark, self.input_path, fmt=self.input_format)
-        tagged = with_stable_order_tagged(tag_rejects(raw), flag_dups=self.fail_fast)
-        # NO explicit repartition("conv_id") here (round 6, guide §2.4): the
-        # ordering window one line up already hash-partitions by conv_id, a
-        # parquet write/read does not preserve partitioning metadata anyway,
-        # and pinning the layout disabled AQE's post-window coalescing
-        # (measured: ingest noop 2.10 -> 1.69 s at sf1.0 bench corpus).
-        tagged = tagged.withColumn("_ok", F.col("reject_reason").isNull())
-        obs = Observation("ingest_rows")
-        metrics = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("_ok").cast("int")).alias("n_valid"),
-        ]
-        if self.fail_fast:
-            metrics.append(F.sum("_dup").alias("dups"))
-        self.store.write(
-            tagged.observe(obs, *metrics).drop("_dup"), "ingested", partition_by=["_ok"]
-        )
-        got = obs.get
-        n, n_valid = int(got["n"]), int(got["n_valid"] or 0)
-        if self.fail_fast and int(got["dups"] or 0) > 0:
-            # abort before the marker (Main.java:73-76); detailed offender
-            # lookup only on the failure path
-            assert_unique_turns(self._valid())  # raises with a sample
-            raise ValueError("duplicate (conv_id, turn_idx) detected")
-        self.metrics["ingest"] = {"valid": n_valid, "rejected": n - n_valid}
-        self._mark("ingest", valid=n_valid, rejected=n - n_valid)
-
-    def _valid(self) -> DataFrame:
-        """The valid-turn view of the ingested table (partition-pruned).
-        The validity flag compares as string: the schema sidecar gives a
-        real boolean column, while a read by inference (no sidecar) gets
-        the directory value back as 'true'/'false'."""
-        return (
-            self.store.read("ingested")
-            .filter(F.col("_ok").cast("string") == "true")
-            .drop("_ok", "reject_reason")
-        )
-
-    def _new_turns(self) -> DataFrame:
-        """The valid turns this run imports: those above the imported runs'
-        per-conversation watermarks. Each run writes its marks into its own
-        ``_run`` partition of conv_watermarks, and a run's marks only count
-        once the callers have deleted the partitions of runs that never
-        completed. A turn is imported iff SOME run's mark for its
-        conversation reaches it — an anti-join on conv_id with the mark
-        comparison as its condition, so no max over the runs (and no
-        shuffle for one) is needed."""
-        valid = self._valid()
         wm = self._snapshot(
-            "conv_watermarks",
-            like=valid.select("conv_id", F.col("turn_idx").alias("max_turn")),
+            "conv_watermarks", like=raw.select("conv_id", F.col("turn_idx").alias("max_turn"))
         ).select(F.col("conv_id").alias("wm_conv"), "max_turn")
-        return valid.join(
+        # a turn is imported iff SOME run's mark for its conversation
+        # reaches it: the mark comparison is the anti-join's condition, so
+        # no max over the runs (and no shuffle for one) is needed
+        new = raw.join(
             wm,
             (F.col("conv_id") == F.col("wm_conv")) & (F.col("turn_idx") <= F.col("max_turn")),
             "left_anti",
         )
+        tagged = tag_rejects(new)
+        if self.fail_fast:
+            tagged = flag_duplicate_turns(tagged)
+        # NO explicit repartition("conv_id") here (round 6, guide §2.4): the
+        # duplicate window above already hash-partitions the rows, a
+        # parquet write/read does not preserve partitioning metadata anyway,
+        # and pinning the layout disabled AQE's post-window coalescing
+        # (measured: ingest noop 2.10 -> 1.69 s at sf1.0 bench corpus).
+        tagged = tagged.withColumn("_ok", F.col("reject_reason").isNull())
+        obs = Observation("ingest_valid")
+        metrics = [F.sum(F.col("_ok").cast("int")).alias("n_valid")]
+        if self.fail_fast:
+            metrics.append(F.sum("_dup").alias("dups"))
+        n = self._append(tagged.observe(obs, *metrics).drop("_dup"), "ingested", "_ok")
+        got = obs.get
+        n_valid = int(got["n_valid"] or 0)
+        if self.fail_fast and int(got["dups"] or 0) > 0:
+            # abort before the marker (Main.java:73-76); detailed offender
+            # lookup only on the failure path
+            assert_unique_turns(self._new_turns())  # raises with a sample
+            raise ValueError("duplicate (conv_id, turn_idx) detected")
+        self.metrics["ingest"] = {"valid": n_valid, "rejected": n - n_valid}
+        self._mark("ingest", valid=n_valid, rejected=n - n_valid)
+
+    def _new_turns(self) -> DataFrame:
+        """The valid turns this run imports: its own partition of
+        ``ingested`` (stage_ingest wrote only the turns above the imported
+        watermarks there), partition-pruned to the valid rows. The validity
+        flag compares as string: the schema sidecar gives a real boolean
+        column, while a read by inference (no sidecar) gets the directory
+        value back as 'true'/'false'."""
+        return (
+            self._delta("ingested")
+            .filter(F.col("_ok").cast("string") == "true")
+            .drop("_ok", "reject_reason")
+        )
 
     def stage_extract(self) -> None:
-        """Extract the valid turns above the imported watermarks into this
-        run's ``_run=<run_id>`` partition; the other runs' partitions are
-        never rewritten. Per-turn extraction is row-local and deterministic
-        and an append input is a documented superset whose old turns are
-        byte-identical, so the stored partitions ∪ extract(delta) ==
-        extract(superset) bit-for-bit. A crashed attempt (of this run_id or
-        another) leaves at worst extraction and watermark partitions of an
-        unimported run; both are deleted first, so the delta filter
-        reproduces that run's rows — exactly-once."""
-        self._drop_unimported("extracted", "conv_watermarks")
+        """Extract this run's imported turns into its ``_run=<run_id>``
+        partition; the other runs' partitions are never rewritten.
+        Per-turn extraction is row-local and deterministic, so the stored
+        partitions ∪ extract(delta) == extract(every imported turn). A
+        crashed attempt (of this run_id or another) leaves at worst an
+        extraction partition of an unimported run, which is deleted first;
+        the ingested partition it reads is kept, since a resumed run reads
+        its own (only ingest deletes ``ingested`` partitions) —
+        exactly-once."""
+        self._drop_unimported("extracted")
         n = self._imported("assertions") + self._append(
             extract_assertions(self._new_turns()), "extracted"
         )
@@ -513,12 +521,18 @@ class KGPipeline:
 
         def _watermarks() -> None:
             # per-conversation high-water marks of the turns this run
-            # imports, into its own _run partition: the next run's extract
-            # delta filters against the max over the imported runs'
-            # partitions. Computed from the ingested valid turns (turns with
-            # zero assertions still count as imported); fold_epochs (no
-            # ingest) uses its extraction.
-            src = self._new_turns() if self.store.exists("ingested") else delta_ext
+            # imports, into its own _run partition: the next run's ingest
+            # drops every turn some imported run's mark reaches. Computed
+            # from every keyed row of the run's ingested partition, valid or
+            # rejected (turns with zero assertions still count as imported,
+            # and a quarantined turn is not quarantined again); fold_epochs
+            # (no ingest) uses its extraction.
+            if self.store.exists("ingested"):
+                src = self._delta("ingested").filter(
+                    F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+                )
+            else:
+                src = delta_ext
             self._append(
                 src.groupBy("conv_id").agg(F.max("turn_idx").alias("max_turn")),
                 "conv_watermarks",
@@ -688,10 +702,14 @@ class KGPipeline:
         return schema_registry(self.nodes(), self.triples())
 
     def rejects(self) -> DataFrame:
+        """The quarantined rows of every run. A row without a conversation
+        or turn number matches no watermark, so each run that reads it
+        quarantines it again: the rows are made distinct."""
         return (
             self.store.read("ingested")
             .filter(F.col("_ok").cast("string") == "false")
             .select("conv_id", "turn_idx", "reject_reason")
+            .distinct()
         )
 
     def lineage(self) -> DataFrame:

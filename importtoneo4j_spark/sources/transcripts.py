@@ -103,36 +103,15 @@ def assert_unique_turns(df: DataFrame) -> None:
         )
 
 
-def with_stable_order_tagged(df: DataFrame, flag_dups: bool = False) -> DataFrame:
-    """Stable ordering computed over a reject-TAGGED frame in the same
-    single pass that writes the ingest table (one input scan total — the
-    two-table split costs a second full read of the corpus at 100 TB):
-
-    * ``seq``  — cumulative count of VALID rows over (conv_id ORDER BY
-      turn_idx, ts); for valid rows this equals row_number over the valid
-      subset (rejects contribute 0); rejects carry seq NULL.
-    * ``_dup`` — valid row repeating the previous VALID row's turn_idx
-      (lag-equivalent via last(ignorenulls) over the preceding frame).
-
-    All expressions share one window spec -> Catalyst emits ONE Window node.
-    """
-    w = Window.partitionBy("conv_id").orderBy(
-        F.col("turn_idx").asc(), F.col("ts").asc()
-    )
+def flag_duplicate_turns(df: DataFrame) -> DataFrame:
+    """Attach ``_dup`` to a reject-TAGGED frame: 1 on a valid row whose
+    (conv_id, turn_idx) another valid row shares, else 0. One window over
+    (conv_id, turn_idx) that counts the valid rows, computed in the same
+    single pass that writes the ingest table (one input scan total — a
+    separate check costs a second full read of the corpus at 100 TB)."""
     ok = F.col("reject_reason").isNull()
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    out = df.withColumn(
-        "seq", F.when(ok, F.sum(ok.cast("int")).over(run)).cast("int")
-    )
-    if flag_dups:
-        prev = F.last(F.when(ok, F.col("turn_idx")), ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
-        )
-        out = out.withColumn(
-            "_dup",
-            F.coalesce((ok & (prev == F.col("turn_idx"))).cast("int"), F.lit(0)),
-        )
-    return out
+    n_valid = F.sum(ok.cast("int")).over(Window.partitionBy("conv_id", "turn_idx"))
+    return df.withColumn("_dup", (ok & (n_valid > 1)).cast("int"))
 
 
 def with_stable_order(df: DataFrame, flag_dups: bool = False) -> DataFrame:

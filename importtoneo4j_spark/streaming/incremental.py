@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from importtoneo4j_spark.operators.extract import extract_assertions
 from importtoneo4j_spark.schemas import TRANSCRIPTS
-from importtoneo4j_spark.sources.transcripts import split_valid_rejects, with_stable_order
+from importtoneo4j_spark.sources.transcripts import split_valid_rejects
 
 
 def make_process_batch(output_dir: str, rejects_dir: str):
@@ -33,8 +33,7 @@ def make_process_batch(output_dir: str, rejects_dir: str):
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         valid, rejects = split_valid_rejects(batch_df)
-        ordered = with_stable_order(valid)
-        extracted = extract_assertions(ordered)
+        extracted = extract_assertions(valid)
         for df, dest in ((extracted, output_dir), (rejects, rejects_dir)):
             (
                 df.withColumn("epoch", F.lit(int(epoch_id)))

@@ -683,6 +683,41 @@ def test_fail_fast_duplicate_turns_aborts(spark, data, tmp_path_factory):
     assert m["materialize"]["triples"] > 0
 
 
+def _ingested_runs(pipe):
+    return {r[0] for r in pipe.store.read("ingested").select("_run").distinct().collect()}
+
+
+def test_fail_fast_duplicate_new_turns_aborts_append(spark, tmp_path_factory):
+    """The duplicate check covers the turns an append imports: a new turn
+    repeated in the input aborts the append before its ingest marker, and
+    its retry under a new run_id deletes the aborted run's ingested
+    partition. A repeat of an already imported turn is not imported, so
+    it is not checked: that retry, whose input repeats a base turn, equals
+    a rebuild of the superset."""
+    root = tmp_path_factory.mktemp("dup_append")
+    base, full = _superset_inputs(spark, root, [10, 20])
+    t = spark.read.parquet(full)
+    dup_new, dup_old = str(root / "dup_new"), str(root / "dup_old")
+    valid = F.col("text").contains("[[")  # a valid turn, not a quarantined one
+    new, old = F.col("conv_id") >= "conv-0000010", F.col("conv_id") < "conv-0000010"
+    t.unionByName(t.filter(new & valid).limit(1)).write.parquet(dup_new)
+    t.unionByName(t.filter(old & valid).limit(1)).write.parquet(dup_old)
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+
+    bad = KGPipeline(spark, dup_new, work, run_id="r2", mode="append")
+    with pytest.raises(ValueError, match="duplicate"):
+        bad.run(resume=False)
+    assert bad.store.read_marker("ingest")["run_id"] == "r1"  # aborted pre-marker
+    assert _ingested_runs(bad) == {"r1", "r2"}
+
+    retry = KGPipeline(spark, dup_old, work, run_id="r3", mode="append")
+    m = retry.run(resume=False)
+    assert _ingested_runs(retry) == {"r1", "r3"}
+    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
+    assert m["materialize"]["checksum"] == fresh.run(resume=False)["materialize"]["checksum"]
+
+
 def test_enrich_first_wins_and_idempotent(spark, data, tmp_path_factory):
     """EP2: attrs join adds new property keys, never overwrites existing
     ones; re-applying the same attrs is a no-op (checksum-stable)."""
@@ -911,6 +946,8 @@ def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):
     import glob
     import hashlib
 
+    from importtoneo4j_spark.sources.transcripts import read_transcripts
+
     gen = TranscriptGenerator(seed=11, n_entities=60)
     base_p = str(tmp_path_factory.mktemp("dsc") / "base")
     gen.write_parquet(base_p, n_convs=24)
@@ -932,6 +969,7 @@ def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):
     # a rebuild is an append onto an empty store: its delta is every triple
     assert _run_triples(p1, "b") == m1["materialize"]["triples"] > 0
     ext_before = fsig(os.path.join(work, "extracted"))
+    ing_before = fsig(os.path.join(work, "ingested"))
     nodes_before = fsig(os.path.join(work, "nodes"))
 
     pa = KGPipeline(spark, super_p, work, run_id="a", mode="append")
@@ -943,6 +981,16 @@ def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):
     for rel, h in ext_before.items():
         assert ext_after[rel] == h, f"base extraction partition rewritten: {rel}"
     assert any("_run=a" in rel for rel in ext_after if rel not in ext_before)
+    # ... and so are the base ingested partitions: the append's partition
+    # holds exactly the superset's turns that the base lacks
+    ing_after = fsig(os.path.join(work, "ingested"))
+    for rel, h in ing_before.items():
+        assert ing_after[rel] == h, f"base ingested partition rewritten: {rel}"
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    want = read_transcripts(spark, super_p).exceptAll(read_transcripts(spark, base_p))
+    got = pa._delta("ingested").select(*cols)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 == want.exceptAll(got).count()
 
     # (c) node buckets untouched by the delta keep their exact files
     nodes_after = fsig(os.path.join(work, "nodes"))
@@ -965,3 +1013,88 @@ def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):
     assert ma["materialize"]["checksum"] == m2["materialize"]["checksum"]
     assert ma["materialize"]["nodes"] == m2["materialize"]["nodes"]
     assert ma["extract"]["assertions"] == m2["extract"]["assertions"]
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_append_of_new_turns_only_matches_superset_append(spark, tmp_path_factory):
+    """An append's input may hold only the turns the store lacks: the
+    imported turns are dropped at ingest either way. A base of 10 whole
+    conversations and the first two turns of 5 more; the appends add the
+    rest of those 5 and 5 new conversations, one as the superset and one
+    as only those turns. Both report the same checksum, node count,
+    assertion total and quarantine."""
+    root = tmp_path_factory.mktemp("delta_only")
+    (full,) = _superset_inputs(spark, root, [20])
+    t = spark.read.parquet(full)
+    part = (F.col("conv_id") < "conv-0000010") | (
+        (F.col("conv_id") < "conv-0000015") & (F.col("turn_idx") < 2)
+    )
+    base, delta = str(root / "base"), str(root / "delta")
+    t.filter(part).write.parquet(base)
+    t.filter(~part).write.parquet(delta)
+    got = []
+    for name, path in (("superset", full), ("delta", delta)):
+        work = str(root / f"kg_{name}")
+        KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+        pipe = KGPipeline(spark, path, work, run_id="r2", mode="append")
+        m = pipe.run(resume=False)
+        got.append(
+            (
+                m["materialize"]["checksum"],
+                m["materialize"]["nodes"],
+                m["extract"]["assertions"],
+                _rows(pipe.rejects()),
+            )
+        )
+    assert got[0] == got[1]
+    assert got[0][3]  # the corpus has rejects
+
+
+def test_append_rejects_stored_once(spark, tmp_path_factory):
+    """A base whose conversation ends in a quarantined turn: that turn
+    counts toward the conversation's watermark, so a superset append does
+    not quarantine it again. A row without a conversation id matches no
+    watermark and is quarantined by each run; rejects() lists it once. The
+    append's rejects() equals a rebuild's, and every keyed reject is
+    stored once across the runs."""
+    import datetime
+
+    t0 = datetime.datetime(2025, 1, 1)
+    base = [
+        ("conv-a", 0, "user", "[[acme corp]] works_at [[big co]]", None, t0),
+        ("conv-a", 1, "assistant", "[[big co]] located_in [[metropolis]]", None, t0),
+        ("conv-a", 2, "user", ".", None, t0),
+        (None, 0, "user", "[[nobody]] uses [[nothing]]", None, t0),
+    ]
+    more = [
+        ("conv-a", 3, "user", "[[acme corp]] uses [[gizmo]]", None, t0),
+        ("conv-b", 0, "user", "[[big co]] uses [[gadget]]", None, t0),
+        ("conv-b", 1, "user", ".", None, t0),
+    ]
+    root = tmp_path_factory.mktemp("rej_once")
+    base_p, full_p = str(root / "base"), str(root / "full")
+    # a DDL schema, unlike TRANSCRIPTS, lets conv_id be null
+    ddl = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    spark.createDataFrame(base, ddl).write.parquet(base_p)
+    spark.createDataFrame(base + more, ddl).write.parquet(full_p)
+    work = str(root / "kg")
+    KGPipeline(spark, base_p, work, run_id="r1").run(resume=False)
+    pipe = KGPipeline(spark, full_p, work, run_id="r2", mode="append")
+    m = pipe.run(resume=False)
+    # the append quarantines conv-b's sentinel turn and the keyless row
+    assert m["ingest"] == {"valid": 2, "rejected": 2}
+    fresh = KGPipeline(spark, full_p, str(root / "rebuild"), run_id="fresh")
+    fresh.run(resume=False)
+    assert _rows(pipe.rejects()) == _rows(fresh.rejects())
+    assert len(_rows(pipe.rejects())) == 3
+    keyed = (
+        pipe.store.read("ingested")
+        .filter((F.col("_ok").cast("string") == "false") & F.col("conv_id").isNotNull())
+        .groupBy("conv_id", "turn_idx")
+        .count()
+    )
+    assert keyed.filter(F.col("count") > 1).count() == 0
+    assert keyed.count() == 2
