@@ -435,8 +435,9 @@ def _tpch_graph(spark: SparkSession, sf_dir: str):
     from importtoneo4j_spark.operators.graph import GraphView
 
     t = _load(spark, sf_dir, "customer", "supplier", "part", "orders", "lineitem")
+    # merge hint: orders is too big a broadcast build (see kg_flagship)
     li_ord = t["lineitem"].join(
-        t["orders"], F.col("l_orderkey") == F.col("o_orderkey")
+        t["orders"].hint("merge"), F.col("l_orderkey") == F.col("o_orderkey")
     )
     ordered = li_ord.select(
         F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("subj"),

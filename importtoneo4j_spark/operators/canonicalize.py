@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(
+    edges: DataFrame, max_iter: int = 25, stats: dict | None = None
+) -> DataFrame:
     """(src, dst) string edges -> (id, comp) with comp = min id in component.
 
     Vertices appearing only as singletons are NOT included — callers union
@@ -34,13 +36,23 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     1 needs no labels: it is min(id, min neighbour) straight off the edges.
     Superseded rounds are released as soon as the next one is checkpointed;
     the returned frame is backed by the last round's checkpoint, which the
-    caller releases with ``session.stage_unpersist``.
+    caller releases with ``session.stage_unpersist``. ``stats``, when
+    given, receives ``rounds``: the number of label rounds run.
     """
     from importtoneo4j_spark.session import stage_unpersist
 
+    # both directions from one scan of the edges (a union of the two
+    # projections would scan every edge file twice per round)
     sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct("src", "dst"),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .filter(F.col("src") != F.col("dst"))
     )
     # round 1: every label starts as the node's own id
@@ -50,7 +62,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         .select("id", F.least("id", "nbr").alias("comp"), F.col("id").alias("old"))
     )
     labels = None
-    for _ in range(max_iter):
+    for rounds in range(1, max_iter + 1):
         obs = Observation("cc_changed")
         nxt = step.observe(
             obs, F.sum((F.col("comp") != F.col("old")).cast("long")).alias("n")
@@ -59,6 +71,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             stage_unpersist(labels)
         labels = nxt.select("id", "comp")
         if not obs.get["n"]:  # None on an edgeless graph
+            if stats is not None:
+                stats["rounds"] = rounds
             return labels
         # next round: the node's own label and its neighbours' labels, one
         # groupBy — the new label is their min, the old one rides along

@@ -11,19 +11,25 @@ The reference's node identity is exact-string MERGE on a natural key
   10^12 turns the vocabulary is orders of magnitude smaller), grouped by
   band key, each bucket's pairs enumerated and token-Jaccard verified inside
   its own reduce task with native array ops. Hot buckets are capped (skew
-  mitigation — SURVEY.md §7 hard part 3) and the dropped count is observed
-  on the same pass.
+  mitigation — SURVEY.md §7 hard part 3) and counted on the same pass.
 
-Everything here is native Spark SQL expressions; the only shuffle after the
-MinHash aggregate is the one groupBy on band_key, a derived high-entropy
-key.
+Linking is incremental: a call MinHashes only the keys its stored
+signatures lack, and groups only the buckets those fresh keys touch, so an
+append costs O(delta), not O(vocabulary). It emits the pairs with a fresh
+member, with their bucket support, and retracts the stored pairs of a
+bucket its fresh keys push over the cap; the pairs whose support exceeds
+their retractions are the edges a run over every key finds.
+
+Everything here is native Spark SQL expressions; the only shuffles after
+the MinHash aggregate are the groupBy on band_key, a derived high-entropy
+key, over the touched buckets, and the pair aggregate.
 """
 
 from __future__ import annotations
 
 from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.session import stage_persist
@@ -80,60 +86,87 @@ def same_as_edges(extracted: DataFrame) -> DataFrame:
 class LSH(NamedTuple):
     """What ``lsh_candidate_edges`` returns.
 
-    ``edges``: the verified (src, dst) pairs, src < dst, once per shared
-    bucket. ``sig``: the (norm_key, band_key) signatures of this call's
-    fresh keys, the only frame it persists: the caller stores it and then
-    releases it with ``session.stage_unpersist``. ``hot_buckets_dropped()``:
-    how many buckets the cap skipped; it blocks until ``edges`` has run and
-    is read before ``sig`` is released."""
+    ``edges``: (src, dst, support), src < dst: each verified pair with at
+    least one fresh member, once, with ``support`` the number of buckets
+    under the cap that emit it. ``retracted``: (src, dst), one row per
+    verified pair of stored keys in each bucket the fresh keys push over
+    the cap. ``sig``: the (norm_key, band_key) signatures of the fresh
+    keys, the only frame it persists: the caller stores it and then
+    releases it with ``session.stage_unpersist``. ``counts()``: read once
+    ``edges`` has run and before ``sig`` is released; ``touched_buckets``
+    (the buckets the grouped pass formed), ``hot_buckets_dropped`` (those
+    the fresh keys pushed over the cap), ``retracting_buckets`` (those of
+    them with two or more stored members, whose verified pairs are
+    retracted) and ``pairs`` (the distinct pairs among ``edges`` and
+    ``asserted``)."""
 
     edges: DataFrame
+    retracted: DataFrame
     sig: DataFrame
-    hot_buckets_dropped: Callable[[], int]
+    counts: Callable[[], dict]
 
 
 def lsh_candidate_edges(
     vocab: DataFrame,
     stored_sig: DataFrame | None = None,
+    asserted: DataFrame | None = None,
     num_perm: int = NUM_PERM,
     bands: int = BANDS,
     rows_per_band: int = ROWS_PER_BAND,
     threshold: float = JACCARD_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
 ) -> LSH:
-    """Distinct norm_keys -> verified similarity edges (src < dst).
+    """The similarity evidence that the keys of ``vocab`` absent from
+    ``stored_sig`` (the fresh keys) add to a store holding ``stored_sig``.
 
-    shingle -> minhash signature -> band keys -> one groupBy(band_key) ->
-    per bucket: sort members, enumerate pairs, exact token-Jaccard verify.
-    Each bucket's pairs are enumerated inside its own reduce task: no band
-    self-join and no pair ``distinct``. A pair that shares several buckets
-    comes out once per shared bucket, so the caller dedups (the pipeline's
-    union with same_as takes one ``distinct``).
+    ``stored_sig``: the (norm_key, band_key) signatures of the keys linked
+    earlier (the pipeline's ``link_sig`` table); without it every key is
+    fresh. Only the fresh keys are shingled and MinHashed: a key's
+    signature is a pure function of the key.
 
-    Each bucket's member list is sorted once, as (key, tokens): a norm_key
-    is already normalized, so ``array_distinct(split(key, " "))`` equals its
-    token_shingles (tests/test_property.py pins this), computed once per
-    member rather than once per collision. The pairs i < j of the sorted
-    list are the src < dst pairs.
+    Probe, don't regroup: the grouped pass takes the fresh signatures and
+    the stored ones whose band_key some fresh key has, a left-semi join
+    against a broadcast of the fresh band keys, so the stored signatures
+    are scanned but never shuffled. One groupBy(band_key) then forms each
+    touched bucket (``n`` members, ``n_old`` of them stored), and its pairs
+    are enumerated and token-Jaccard verified inside its reduce task. A
+    norm_key is already normalized, so ``array_distinct(split(key, " "))``
+    equals its token_shingles (tests/test_property.py pins this). A bucket
+    of B members lands whole in one reduce task: O(B) memory, never its
+    O(B^2) pairs.
 
-    Hot buckets (more than ``max_bucket`` members) yield no pair. A bucket's
-    member list lands whole in one reduce task: O(B) memory for a bucket of
-    B members, never its O(B^2) pairs. The dropped-bucket count rides an
-    Observation on the aggregate, above its shuffle, at no extra job.
+    * ``n <= max_bucket``: its verified pairs with a fresh member are
+      emitted. A pair of two stored keys was emitted by the call that added
+      the later of them: bucket membership only grows, so the bucket was
+      under the cap then too.
+    * ``n_old <= max_bucket < n``: the fresh keys push the bucket over the
+      cap (a hot bucket yields no pair), so it emits nothing and retracts
+      each verified pair of its stored members. Across calls, a pair is
+      live while its support exceeds its retractions: a pair that another
+      bucket still supports stays live, as in a run over every key.
+    * ``n_old > max_bucket``: dropped by an earlier call already.
 
-    ``stored_sig``: (norm_key, band_key) signatures computed earlier (the
-    pipeline's ``link_sig`` table). Only keys absent from it are MinHashed;
-    candidate generation and verification run over stored ∪ fresh and are
-    bit-identical to a run from scratch, because a key's signature is a pure
-    function of the key. Without it every key is fresh.
+    So over successive calls, each fed the earlier calls' signatures, the
+    live pairs and the summed ``hot_buckets_dropped`` equal one call over
+    every key. On an empty store every key is fresh, the stored side folds
+    out of the plan, and the pass is the one a run from scratch needs.
+
+    ``asserted``: (src, dst) edges the caller holds from other evidence
+    (the pipeline's same_as edges of the run). They join the pair
+    aggregate with no support, so ``pairs`` counts the distinct edges among
+    them and the emitted pairs at no extra job. The bucket counters ride
+    the same aggregate as rows keyed (null, <counter>), so they reach the
+    caller's write however many pairs survive; an Observation inside a
+    shuffle stage that wrote no row would be dropped with that stage.
     """
     keys = lsh_keys(vocab)
     if stored_sig is None:
-        # an empty relation with the signature columns: the anti-join and
-        # union below fold away (cheaper to analyze than an empty MinHash)
+        # an empty relation with the signature columns: the anti-join, the
+        # semi-join and the union below fold away (cheaper to analyze than
+        # an empty MinHash)
         stored_sig = keys.select("norm_key", F.lit("").alias("band_key")).limit(0)
     stored_sig = stored_sig.select("norm_key", "band_key")
-    fresh = keys.join(stored_sig.select("norm_key").distinct(), "norm_key", "left_anti")
+    fresh = keys.join(stored_sig.select("norm_key"), "norm_key", "left_anti")
     # read twice: by the grouped pass and by the caller's link_sig write.
     # memory, not localCheckpoint: a checkpoint hides the frame's size and
     # partitioning from AQE, which then planned fewer, longer tasks
@@ -143,60 +176,124 @@ def lsh_candidate_edges(
         minhash_bands_agg(fresh, "norm_key", "shingles", num_perm, bands, rows_per_band),
         mode="memory",
     )
-    sig = stored_sig.unionByName(fresh_sig)
+    # a norm_key is trimmed, so a leading space marks a stored member
+    touched = stored_sig.join(
+        F.broadcast(fresh_sig.select("band_key")), "band_key", "left_semi"
+    ).select("band_key", F.concat(F.lit(" "), "norm_key").alias("norm_key"))
 
-    obs = Observation()
+    def stored(k: Column) -> Column:
+        return k.startswith(" ")
+
+    def row(src: Column, dst: Column, retract: Column) -> Column:
+        return F.struct(
+            src.alias("src"),
+            dst.alias("dst"),
+            F.lit(1).cast("long").alias("w"),
+            retract.alias("retract"),
+        )
+
+    n = F.size("keys")
+    over = n > max_bucket
+    # only a bucket over the cap needs its stored members counted
+    n_old = F.when(over, F.size(F.filter("keys", stored)))
+    retracting = over & n_old.between(2, max_bucket)
+    counters = {
+        "touched": F.lit(True),
+        "hot": over & (n_old <= max_bucket),
+        "retracting": retracting,
+    }
+    # the members to pair: all of a bucket under the cap, the stored ones
+    # of a bucket the fresh keys push over it, none of any other
+    pool = (
+        F.when(n.between(2, max_bucket), F.col("keys"))
+        .when(retracting, F.filter("keys", stored))
+        .otherwise(F.array().cast("array<string>"))
+    )
+    # the member list is a column of its own: the pair lambdas below read
+    # it once per member, and an inlined expression would be re-evaluated
+    # each time (SCALE.md, Round 6)
     buckets = (
-        sig.groupBy("band_key")
+        touched.unionByName(fresh_sig)
+        .groupBy("band_key")
         .agg(F.collect_list("norm_key").alias("keys"))
-        .observe(obs, F.count_if(F.size("keys") > max_bucket).alias("hot"))
-        .filter(F.size("keys").between(2, max_bucket))
         .select(
-            F.array_sort(
-                F.transform(
-                    "keys",
-                    lambda k: F.struct(
-                        k.alias("k"), F.array_distinct(F.split(k, " ")).alias("t")
-                    ),
+            over.alias("over"),
+            F.array_compact(
+                F.array(
+                    *[
+                        F.when(holds, row(F.lit(None).cast("string"), F.lit(name), F.lit(False)))
+                        for name, holds in counters.items()
+                    ]
                 )
-            ).alias("m")
+            ).alias("counters"),
+            F.transform(
+                pool,
+                lambda k: F.struct(
+                    F.ltrim(k).alias("k"),
+                    stored(k).alias("old"),
+                    F.array_distinct(F.split(F.ltrim(k), " ")).alias("t"),
+                ),
+            ).alias("m"),
         )
     )
+    m, over = F.col("m"), F.col("over")
     # member i pairs with members i+1..n-1 (transform hands a two-argument
-    # lambda the element's 0-based index)
-    m, n = F.col("m"), F.size("m")
+    # lambda the element's 0-based index); a retracting bucket keeps every
+    # pair of its stored members, any other the pairs with a fresh member
     pairs = F.flatten(
         F.transform(
             m,
             lambda x, i: F.transform(
-                F.slice(m, i + 2, n - i - 1),
+                F.slice(m, i + 2, F.size(m) - i - 1),
                 lambda y: F.struct(
-                    x["k"].alias("src"),
-                    y["k"].alias("dst"),
+                    F.least(x["k"], y["k"]).alias("src"),
+                    F.greatest(x["k"], y["k"]).alias("dst"),
+                    (over | ~(x["old"] & y["old"])).alias("keep"),
                     x["t"].alias("ta"),
                     y["t"].alias("tb"),
                 ),
             ),
         )
     )
-    # src < dst also drops a key listed twice in one bucket, as the self-join
-    # did
-    out = (
-        buckets.select(F.inline(pairs))
-        .filter((F.col("src") < F.col("dst")) & (jaccard(F.col("ta"), F.col("tb")) >= threshold))
-        .select("src", "dst")
+    # src < dst also drops a key listed twice in one bucket
+    verified = F.filter(
+        pairs,
+        lambda p: p["keep"] & (p["src"] < p["dst"]) & (jaccard(p["ta"], p["tb"]) >= threshold),
     )
+    emits = F.transform(verified, lambda p: row(p["src"], p["dst"], over))
+    rows = buckets.select(F.inline(F.concat("counters", emits)))
+    emitted = rows.filter(~F.col("retract")).select("src", "dst", "w")
+    if asserted is not None:
+        emitted = emitted.unionByName(
+            asserted.select("src", "dst", F.lit(0).cast("long").alias("w"))
+        )
+    is_counter = F.col("src").isNull()
+    obs = Observation()
+    edges = (
+        emitted.groupBy("src", "dst")
+        .agg(F.sum("w").alias("support"))
+        .observe(
+            obs,
+            F.count_if(~is_counter).alias("pairs"),
+            *[
+                F.sum(F.when(is_counter & (F.col("dst") == name), F.col("support"))).alias(name)
+                for name in counters
+            ],
+        )
+        .filter(~is_counter & (F.col("support") > 0))
+    )
+    retracted = rows.filter(F.col("retract")).select("src", "dst")
 
-    def hot() -> int:
-        # AQE drops a shuffle stage that wrote no row from the final plan,
-        # and the Observation inside it: its metrics row comes back empty.
-        # The grouped pass then emitted no pair, and the dropped buckets are
-        # counted on the signatures instead (two small jobs).
-        if obs._jo.getRow().length() == 0:
-            return lsh_dropped_buckets(sig, max_bucket).count()
-        return int(obs.get["hot"])
+    def counts() -> dict:
+        got = {k: int(v or 0) for k, v in obs.get.items()}
+        return {
+            "touched_buckets": got["touched"],
+            "hot_buckets_dropped": got["hot"],
+            "retracting_buckets": got["retracting"],
+            "pairs": got["pairs"],
+        }
 
-    return LSH(out, fresh_sig, hot)
+    return LSH(edges, retracted, fresh_sig, counts)
 
 
 def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:

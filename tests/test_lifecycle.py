@@ -265,6 +265,8 @@ def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, r
     # triples and lineage aside: a retry that folds rewrites them into its
     # own partition
     for name in RUN_TABLES.keys() - {"triples", "lineage"}:
+        if name == "link_retractions" and not retry.store.exists(name):
+            continue  # created by the first run that retracts an LSH edge
         got = retry.store.read(name).select(RUN_TABLES[name]).distinct().collect()
         assert sorted(r[0] for r in got) == runs, name
     lineage_runs = _assert_lineage_per_run(retry)
@@ -888,13 +890,15 @@ def test_caller_cache_survives(spark, data, tmp_path_factory):
     mine.unpersist()
 
 
-def _prefix_cluster_input(spark, path, n_convs, alias_pair=False):
+def _prefix_cluster_input(spark, path, n_convs, alias_pair=False, hub=False):
     """``n_convs`` one-turn conversations; conversation i says "Acme Corp i"
     uses "Acme Corp i+1". The "acme corp <n>" keys share most of their char
     4-grams, so some LSH buckets pass the 64-member cap, and no two of them
     link (token Jaccard 1/2). ``alias_pair`` adds a conversation naming
-    "Zeta Works" and its alias "Zeta Works Inc", which do. Prefix-stable: a
-    larger ``n_convs`` writes a superset."""
+    "Zeta Works" and its alias "Zeta Works Inc", which do. ``hub`` adds one
+    naming "Acme Corp" and "Acme Corp Inc", which link to each other and to
+    every "acme corp <n>" (token Jaccard 2/3). Prefix-stable: a larger
+    ``n_convs`` writes a superset."""
     from datetime import datetime
 
     from importtoneo4j_spark.schemas import TRANSCRIPTS
@@ -905,6 +909,8 @@ def _prefix_cluster_input(spark, path, n_convs, alias_pair=False):
     ]
     if alias_pair:
         texts.append(("conv-zeta", "note [[Zeta Works]] uses [[Zeta Works Inc]] ."))
+    if hub:
+        texts.append(("conv-hub", "note [[Acme Corp]] uses [[Acme Corp Inc]] ."))
     rows = [(c, 0, "user", t, None, datetime(2026, 1, 1)) for c, t in texts]
     spark.createDataFrame(rows, TRANSCRIPTS).write.parquet(path)
 
@@ -913,9 +919,9 @@ def test_link_reports_hot_buckets_dropped(spark, tmp_path_factory):
     """The link stage's hot-bucket counter (metrics and marker) equals the
     buckets lsh_dropped_buckets finds on the stored signatures, after a
     rebuild and after an append onto it. The rebuild's LSH verifies no
-    pair, so Spark prunes the stage holding the counter's Observation and
-    the count comes from the signatures; the append's alias pair keeps
-    that stage, and the count comes from the Observation."""
+    pair, and its count still reaches the write's Observation (the bucket
+    counters ride the pair aggregate); the append's is the imported total
+    plus the buckets its fresh keys push over the cap."""
     from importtoneo4j_spark.operators.link import lsh_dropped_buckets
 
     root = tmp_path_factory.mktemp("hotb")
@@ -934,6 +940,118 @@ def test_link_reports_hot_buckets_dropped(spark, tmp_path_factory):
         assert pipe.store.read_marker("link")["hot_buckets_dropped"] == want
         counts.append(want)
     assert counts[1] > counts[0]  # the append counts stored and fresh keys
+
+
+def _last_execution(spark) -> int:
+    """The newest SQL execution id the driver's status store holds."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
+
+
+def _scans_under_shuffle(spark, since: int, table: str) -> tuple[int, int]:
+    """Over the final plans of the SQL executions after ``since``: how many
+    scans read ``table``, and how many of them feed a shuffle Exchange. A
+    scan that feeds a broadcast reaches what lies above it only as a hash
+    relation, so the walk up stops there."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    scans = shuffled = 0
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= since:
+            continue
+        graph = store.planGraph(eid)
+        seq = graph.allNodes()
+        nodes = {n.id(): n for n in (seq.apply(j) for j in range(seq.size()))}
+        parents: dict = {}
+        for j in range(graph.edges().size()):
+            e = graph.edges().apply(j)
+            parents.setdefault(e.fromId(), []).append(e.toId())
+        for nid, node in nodes.items():
+            if "Scan" not in node.name() or f"/{table}]" not in node.desc():
+                continue
+            scans += 1
+            seen, todo = set(), list(parents.get(nid, []))
+            while todo:
+                up = todo.pop()
+                if up in seen or nodes[up].name() == "BroadcastExchange":
+                    continue
+                seen.add(up)
+                todo += parents.get(up, [])
+            shuffled += any(nodes[up].name() == "Exchange" for up in seen)
+    return scans, shuffled
+
+
+def test_append_without_new_surface_shuffles_no_signature(
+    spark, spark_jobs, tmp_path_factory
+):
+    """An append whose new turns repeat known surfaces only: stage_link
+    writes no signature and no LSH edge, runs at most 12 Spark jobs, and
+    no plan it runs has a shuffle Exchange above a scan of the stored
+    signatures (the grouped pass probes them with the fresh band keys
+    instead of regrouping them). The run then ends at the graph of a
+    rebuild."""
+    root = tmp_path_factory.mktemp("no_surface")
+    base, again = str(root / "base"), str(root / "again")
+    TranscriptGenerator(seed=5, n_entities=60).write_parquet(base, n_convs=20)
+    turns = spark.read.parquet(base)
+    # the same conversations once more under new ids: new turns, known
+    # surfaces
+    turns.unionByName(
+        turns.withColumn("conv_id", F.concat("conv_id", F.lit("-again")))
+    ).write.parquet(again)
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    pipe = KGPipeline(spark, again, work, run_id="r2", mode="append")
+    pipe.stage_ingest()
+    pipe.stage_extract()
+
+    since, before = _last_execution(spark), spark_jobs()
+    pipe.stage_link()
+    assert spark_jobs() - before <= 12
+    scans, shuffled = _scans_under_shuffle(spark, since, "link_sig")
+    assert scans > 0 and shuffled == 0
+    m = pipe.metrics["link"]
+    assert m["fresh_keys"] == m["touched_buckets"] == 0
+    assert pipe._delta("link_sig").count() == pipe._delta("link_edges").count() == 0
+
+    got = pipe.run()["materialize"]
+    want = KGPipeline(spark, again, str(root / "rebuild"), run_id="fresh").run(resume=False)
+    assert got["checksum"] == want["materialize"]["checksum"]
+    assert m["edges"] == want["link"]["edges"]
+    assert m["hot_buckets_dropped"] == want["link"]["hot_buckets_dropped"]
+
+
+def test_append_over_the_cap_retracts_to_rebuild(spark, tmp_path_factory):
+    """An append whose fresh "acme corp <n>" keys push buckets of linked
+    stored keys over the 64-member cap: it retracts their stored pairs, and
+    its live evidence, edge count and hot-bucket count equal a rebuild of
+    the same input, though some pairs keep the support of a bucket still
+    under the cap and others lose all of theirs."""
+    root = tmp_path_factory.mktemp("retract")
+    base, sup = str(root / "base"), str(root / "super")
+    _prefix_cluster_input(spark, base, 40, hub=True)
+    _prefix_cluster_input(spark, sup, 140, hub=True)
+    work = str(root / "kg")
+    KGPipeline(spark, base, work, run_id="b").run(resume=False)
+    pipe = KGPipeline(spark, sup, work, run_id="a", mode="append")
+    m = pipe.run(resume=False)["link"]
+    fresh = KGPipeline(spark, sup, str(root / "rebuild"), run_id="f")
+    want = fresh.run(resume=False)["link"]
+    assert (m["edges"], m["hot_buckets_dropped"]) == (want["edges"], want["hot_buckets_dropped"])
+
+    def evidence(p):
+        edges = p._full("same_as_edges").unionByName(p._live_link_edges(p._full("same_as_edges")))
+        return {tuple(r) for r in edges.collect()}
+
+    assert evidence(pipe) == evidence(fresh)
+    assert len(evidence(fresh)) == want["edges"]
+    retracted = {tuple(r) for r in pipe._delta("link_retractions").collect()}
+    stored = {tuple(r) for r in pipe._full("link_edges").select("src", "dst").collect()}
+    assert retracted & evidence(pipe) and retracted - evidence(pipe)
+    assert retracted <= stored
 
 
 def test_append_delta_scoped_and_rebuild_parity(spark, tmp_path_factory):

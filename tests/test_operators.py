@@ -286,31 +286,44 @@ def test_drop_hot_buckets_partial_agg_skew(spark):
 
 
 def test_lsh_grouped_pass_drops_planted_hot_bucket(spark):
-    """Skew guard for the linker: a planted 10^5-member band key, fed in as
-    a stored signature, yields no pair and counts as one dropped bucket.
-    The plan has no Window and no join on band_key: the bucket is dropped
-    after one groupBy, holding its member list (O(B)), never its pairs."""
-    from importtoneo4j_spark.operators.link import lsh_candidate_edges
+    """Skew guard for the linker: a fresh key whose band keys hold a
+    planted 10^5-member stored bucket and a planted bucket of exactly
+    max_bucket stored members yields no pair. The first bucket was over
+    the cap already; the second crosses it and counts as the one dropped
+    bucket. The plan has no Window, and its only join on band_key is the
+    broadcast semi-join that picks the touched buckets: no band self-join,
+    each bucket is dropped after one groupBy, holding its member list
+    (O(B)), never its pairs."""
+    from importtoneo4j_spark.operators.link import MAX_BUCKET, lsh_candidate_edges
     from importtoneo4j_spark.session import stage_unpersist
 
-    hot = spark.range(100_000).select(
-        F.concat(F.lit("k"), F.col("id").cast("string")).alias("norm_key"),
-        F.lit("HOT").alias("band_key"),
-    )
     vocab = spark.createDataFrame([("acme corp",)], ["norm_key"])
+    probe = lsh_candidate_edges(vocab)
+    band_keys = sorted(r["band_key"] for r in probe.sig.collect())
+    stage_unpersist(probe.sig)
+    hot = spark.range(100_000 + MAX_BUCKET).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("norm_key"),
+        F.when(F.col("id") < 100_000, F.lit(band_keys[0]))
+        .otherwise(F.lit(band_keys[1]))
+        .alias("band_key"),
+    )
     lsh = lsh_candidate_edges(vocab, stored_sig=hot)
     plan = lsh.edges._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
-    assert not [line for line in plan.splitlines() if "Join" in line and "band_key" in line]
+    band_joins = [line for line in plan.splitlines() if "Join" in line and "band_key" in line]
+    assert band_joins and all("BroadcastHashJoin" in j and "LeftSemi" in j for j in band_joins)
     assert lsh.edges.collect() == []
-    assert lsh.hot_buckets_dropped() == 1
+    assert lsh.counts()["hot_buckets_dropped"] == 1
+    assert lsh.retracted.collect() == []  # "k1" and "k2" share no token
     stage_unpersist(lsh.sig)
 
 
 def test_link_edges_job_budget(spark, spark_jobs, tmp_path):
-    """link_edges as the pipeline builds it — LSH edges ∪ same_as, one
-    distinct — written from a parquet-scanned vocabulary runs at most 6
-    Spark jobs (the band self-join form ran 12)."""
+    """link_edges as the pipeline builds it — the LSH pairs, with the run's
+    same_as edges riding the pair aggregate that counts the distinct edges
+    — written from a parquet-scanned vocabulary runs at most 6 Spark jobs
+    (the band self-join form ran 12). Only LSH pairs are written, each
+    with its bucket support."""
     from importtoneo4j_spark.operators.link import lsh_candidate_edges
     from importtoneo4j_spark.session import stage_unpersist
 
@@ -325,13 +338,18 @@ def test_link_edges_job_budget(spark, spark_jobs, tmp_path):
     spark.createDataFrame(
         [("alpha labs", "alpha labs ltd")], "src string, dst string"
     ).write.parquet(str(tmp_path / "same_as"))
-    lsh = lsh_candidate_edges(spark.read.parquet(str(tmp_path / "vocab")))
-    edges = spark.read.parquet(str(tmp_path / "same_as")).unionByName(lsh.edges).distinct()
+    lsh = lsh_candidate_edges(
+        spark.read.parquet(str(tmp_path / "vocab")),
+        asserted=spark.read.parquet(str(tmp_path / "same_as")),
+    )
     before = spark_jobs()
-    edges.write.parquet(str(tmp_path / "edges"))
+    lsh.edges.write.parquet(str(tmp_path / "edges"))
     assert spark_jobs() - before <= 6
-    got = {tuple(r) for r in spark.read.parquet(str(tmp_path / "edges")).collect()}
-    assert ("alpha labs", "alpha labs inc") in got and ("alpha labs", "alpha labs ltd") in got
+    rows = spark.read.parquet(str(tmp_path / "edges")).collect()
+    got = {(r["src"], r["dst"]): r["support"] for r in rows}
+    assert got[("alpha labs", "alpha labs inc")] >= 1
+    assert ("alpha labs", "alpha labs ltd") not in got
+    assert lsh.counts()["pairs"] == len(got) + 1
     stage_unpersist(lsh.sig)
 
 
@@ -395,8 +413,8 @@ def test_lsh_dropped_buckets_on_persisted_signature(spark):
     frame lsh_candidate_edges already computed (the one the pipeline stores
     in link_sig; one MinHash computation total) and its dropped buckets are
     exactly the ones drop_hot_buckets removes. Fed that signature back as
-    the stored one, the same composition MinHashes no key and yields the
-    same edges (the pipeline's append path)."""
+    the stored one, the same composition MinHashes no key, touches no
+    bucket and adds no edge (the pipeline's append of no new surface)."""
     from importtoneo4j_spark.operators.link import (
         drop_hot_buckets,
         lsh_candidate_edges,
@@ -419,7 +437,9 @@ def test_lsh_dropped_buckets_on_persisted_signature(spark):
     stored = spark.createDataFrame(sig.collect(), sig.schema)
     again = lsh_candidate_edges(vocab, stored_sig=stored)
     assert again.sig.count() == 0  # every key's signature is stored
-    assert sorted(again.edges.collect()) == sorted(first.edges.collect())
+    assert first.edges.collect() == again.edges.collect() == []
+    assert first.counts()["touched_buckets"] > 0
+    assert again.counts() == dict.fromkeys(again.counts(), 0)
     for lsh in (first, again):
         stage_unpersist(lsh.sig)
 

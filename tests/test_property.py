@@ -297,7 +297,8 @@ lsh_cases = st.tuples(
     # most char 4-grams, so their band buckets overflow a small cap
     st.lists(st.tuples(_words, st.integers(min_value=2, max_value=9)), max_size=3),
     st.integers(min_value=2, max_value=4),  # max_bucket
-    st.integers(min_value=0, max_value=40),  # keys carried in as stored_sig
+    # where the keys, in order of appearance, are cut into 2-4 calls
+    st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=3),
 )
 
 
@@ -325,14 +326,29 @@ def _reference_lsh_edges(sig_rows, max_bucket, threshold):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(case=lsh_cases)
-@example(case=([("Acme Corp", True), ("acme-corp.", False)], [("acme", 8)], 3, 2))
-@example(case=([("İstanbul Ölçer", True), ("ΣΟΦΙΑ ς", True)], [("zz", 5)], 4, 0))
+@example(case=([("Acme Corp", True), ("acme-corp.", False)], [("acme", 8)], 3, [2]))
+@example(case=([("İstanbul Ölçer", True), ("ΣΟΦΙΑ ς", True)], [("zz", 5)], 4, [0, 3]))
+# the second call's key pushes the 6 buckets that "alpha beta" shares with
+# "alpha beta two" (and with "alpha beta inc") over the cap of 3: the first
+# pair has no other bucket and drops, the second keeps 2 buckets and stays
+@example(
+    case=(
+        [(s, False) for s in ("alpha beta", "alpha beta inc", "alpha beta two", "alpha beta co")],
+        [],
+        3,
+        [3],
+    )
+)
 def test_lsh_candidate_edges_matches_reference(spark, case):
-    """lsh_candidate_edges == a pure-Python recomputation from the stored
-    signatures and the fresh ones it returns, whatever part of the
-    vocabulary comes in as stored signatures; and the tokens the linker
-    takes from a norm_key by splitting it equal token_shingles of that
-    key."""
+    """Successive lsh_candidate_edges calls, each fed the earlier calls'
+    signatures as stored_sig, add up to one call over every key: the
+    pairs whose summed support exceeds their retractions are its edges, and
+    the summed hot-bucket counts its count; that call's edges equal a
+    pure-Python recomputation from the signatures. No call MinHashes a
+    stored key again, and the tokens the linker takes from a norm_key by
+    splitting it equal token_shingles of that key."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
     from importtoneo4j_spark.functions.text import norm_key, token_shingles
@@ -342,7 +358,7 @@ def test_lsh_candidate_edges_matches_reference(spark, case):
     )
     from importtoneo4j_spark.session import stage_unpersist
 
-    surfaces, clusters, max_bucket, n_stored = case
+    surfaces, clusters, max_bucket, cuts = case
     texts = [t for s, alias in surfaces for t in ([s, f"{s} Inc"] if alias else [s])]
     texts += [f"{p} corp {j}" for p, n in clusters for j in range(n)]
     keyed = spark.createDataFrame([(t,) for t in texts], "text string").select(
@@ -353,18 +369,31 @@ def test_lsh_candidate_edges_matches_reference(spark, case):
     )
     assert all(r["ok"] for r in split_ok.collect())
 
-    keys = sorted({r["k"] for r in keyed.collect()} - {""})
-    vocab = spark.createDataFrame([(k,) for k in keys], "norm_key string")
+    keys = [k for k in dict.fromkeys(r["k"] for r in keyed.collect()) if k]
+    bounds = [0, *sorted(min(c, len(keys)) for c in cuts), len(keys)]
     stored, stored_rows = None, []
-    if n_stored:
-        first = lsh_candidate_edges(vocab.filter(F.col("norm_key").isin(keys[:n_stored])))
-        stored_rows = first.sig.collect()
-        stored = spark.createDataFrame(stored_rows, first.sig.schema)
-        stage_unpersist(first.sig)
-    lsh = lsh_candidate_edges(vocab, stored_sig=stored, max_bucket=max_bucket)
-    got = {(r["src"], r["dst"]) for r in lsh.edges.collect()}
-    fresh_rows = lsh.sig.collect()
-    assert not {r["norm_key"] for r in fresh_rows} & {r["norm_key"] for r in stored_rows}
-    want = _reference_lsh_edges(stored_rows + fresh_rows, max_bucket, JACCARD_THRESHOLD)
-    assert got == want
-    stage_unpersist(lsh.sig)
+    support, retractions, hot = Counter(), Counter(), 0
+    for lo, hi in zip(bounds, bounds[1:]):
+        vocab = spark.createDataFrame([(k,) for k in keys[lo:hi]], "norm_key string")
+        lsh = lsh_candidate_edges(vocab, stored_sig=stored, max_bucket=max_bucket)
+        for r in lsh.edges.collect():
+            assert r["support"] > 0 and not support[(r["src"], r["dst"])]
+            support[(r["src"], r["dst"])] = r["support"]
+        hot += lsh.counts()["hot_buckets_dropped"]
+        retractions.update((r["src"], r["dst"]) for r in lsh.retracted.collect())
+        fresh_rows = lsh.sig.collect()
+        stage_unpersist(lsh.sig)
+        assert not {r["norm_key"] for r in fresh_rows} & {r["norm_key"] for r in stored_rows}
+        stored_rows += fresh_rows
+        if stored_rows:
+            stored = spark.createDataFrame(stored_rows, "norm_key string, band_key string")
+    live = {p for p, n in support.items() if n > retractions[p]}
+
+    every = spark.createDataFrame([(k,) for k in keys], "norm_key string")
+    whole = lsh_candidate_edges(every, max_bucket=max_bucket)
+    got = {(r["src"], r["dst"]) for r in whole.edges.collect()}
+    assert live == got
+    assert hot == whole.counts()["hot_buckets_dropped"]
+    assert set(whole.sig.collect()) == set(stored_rows)
+    assert got == _reference_lsh_edges(stored_rows, max_bucket, JACCARD_THRESHOLD)
+    stage_unpersist(whole.sig)
