@@ -864,12 +864,12 @@ def _sql_text_fp() -> str:
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash, keep-min-doc_id semantics."""
+    from importtoneo4j_spark.operators.dedup import exact_dedup
+
     d = _load(spark, sf_dir, "documents")["documents"]
-    hashed = d.select(F.md5("text").alias("h"), "doc_id")
-    kept = hashed.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
-    return kept.agg(
+    return exact_dedup(d, "doc_id", "text").agg(
         F.count("*").alias("n_kept"),
-        F.countDistinct("h").alias("n_unique"),
+        F.countDistinct("content_hash").alias("n_unique"),
     )
 
 

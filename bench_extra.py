@@ -1,13 +1,12 @@
 """Round-6 optimization measurement harness (bench.py is FROZEN — this file
 carries the extra instrumentation the optimization guide §1 asks for).
 
-Modes:
+Usage:
   python bench_extra.py queries [name ...]   — per-query noop-sink timing,
       min-of-N (default 3), plus .explain("formatted") captured to
       plans/r06/<name>_<tag>.txt (tag via --tag, default 'cur').
-  python bench_extra.py pipeline             — KGPipeline stage_secs breakdown
-      (min-of-N full runs on tmpfs scratch, same data sizing as bench.py).
-  python bench_extra.py append               — seeded append leg timing.
+
+Pipeline and append timings come from bench.py and kgbench/run.py.
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as bench.py).
 Prints one JSON line at the end; progress on stderr.
@@ -17,9 +16,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -82,106 +79,17 @@ def run_queries(names: list[str], tag: str, repeats: int, explain: bool) -> dict
     return out
 
 
-def run_pipeline(repeats: int) -> dict:
-    from importtoneo4j_spark.datagen import TranscriptGenerator
-    from importtoneo4j_spark.plans.pipeline import KGPipeline
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        sf = float(base.replace("sf", ""))
-    except ValueError:
-        sf = 0.1
-    n_convs = max(200, int(120_000 * sf))
-    data = os.path.join(REPO, ".bench_data", f"convs_{n_convs}")
-    if not os.path.exists(os.path.join(data, "_DONE")):
-        gen = TranscriptGenerator(seed=42, n_entities=1500)
-        gen.write_parquet(data, n_convs=n_convs)
-        with open(os.path.join(data, "_DONE"), "w") as fh:
-            fh.write("ok")
-    spark = _spark()
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    best = None
-    for rep in range(repeats):
-        work = tempfile.mkdtemp(prefix="kg_extra_", dir=shm)
-        pipe = KGPipeline(spark, data, work, run_id="bench")
-        m = pipe.run(resume=False)
-        shutil.rmtree(work, ignore_errors=True)
-        rec = {
-            "wall": round(m["wall_sec"], 3),
-            "stages": m["stage_secs"],
-            "checksum": m["materialize"]["checksum"],
-        }
-        print(f"[extra] pipeline rep {rep}: {rec}", file=sys.stderr)
-        if best is None or rec["wall"] < best["wall"]:
-            best = rec
-    return best
-
-
-def run_append(repeats: int) -> dict:
-    from importtoneo4j_spark.datagen import TranscriptGenerator
-    from importtoneo4j_spark.plans.pipeline import KGPipeline
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        sf = float(base.replace("sf", ""))
-    except ValueError:
-        sf = 0.1
-    n_convs = max(200, int(120_000 * sf))
-
-    def data_path(n: int) -> str:
-        p = os.path.join(REPO, ".bench_data", f"convs_{n}")
-        if not os.path.exists(os.path.join(p, "_DONE")):
-            gen = TranscriptGenerator(seed=42, n_entities=1500)
-            gen.write_parquet(p, n_convs=n)
-            with open(os.path.join(p, "_DONE"), "w") as fh:
-                fh.write("ok")
-        return p
-
-    data = data_path(n_convs)
-    data_app = data_path(int(n_convs * 1.1))
-    spark = _spark()
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    seed = tempfile.mkdtemp(prefix="kg_extra_seed_", dir=shm)
-    KGPipeline(spark, data, seed, run_id="base").run(resume=False)
-    best = None
-    for rep in range(repeats):
-        work = tempfile.mkdtemp(prefix="kg_extra_app_", dir=shm)
-        shutil.rmtree(work, ignore_errors=True)
-        shutil.copytree(seed, work)
-        pa = KGPipeline(spark, data_app, work, run_id="incr", mode="append")
-        m = pa.run(resume=False)
-        rec = {
-            "wall": round(m["wall_sec"], 3),
-            "stages": m["stage_secs"],
-            "checksum": m["materialize"]["checksum"],
-        }
-        shutil.rmtree(work, ignore_errors=True)
-        print(f"[extra] append rep {rep}: {rec}", file=sys.stderr)
-        if best is None or rec["wall"] < best["wall"]:
-            best = rec
-    shutil.rmtree(seed, ignore_errors=True)
-    return best
-
-
 def main() -> None:
     import argparse
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("mode", choices=["queries", "pipeline", "append"])
+    ap.add_argument("mode", choices=["queries"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="cur")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--no-explain", action="store_true")
     args = ap.parse_args()
-    if args.mode == "queries":
-        names = args.names or HEADLINE
-        out = run_queries(names, args.tag, args.repeats, not args.no_explain)
-    elif args.mode == "pipeline":
-        out = run_pipeline(args.repeats)
-    else:
-        out = run_append(args.repeats)
+    out = run_queries(args.names or HEADLINE, args.tag, args.repeats, not args.no_explain)
     print(json.dumps({"mode": args.mode, "result": out}))
 
 

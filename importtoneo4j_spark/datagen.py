@@ -271,23 +271,3 @@ class TranscriptGenerator:
                 [(self, lengths, lo, hi, path, part) for lo, hi, part in ranges],
             )
         return sum(counts)
-
-    # ------------------------------------------------------------- conv_meta
-    def conv_meta_pandas(self, n_convs: int, run_id: str = "run-001") -> pd.DataFrame:
-        """Side metadata per conversation — analog of ##SAMPLE header lines
-        (reference VariantDatabase.java:119-163). analysis_id pattern from
-        VariantDatabase.java:140 (worklist_id + "_" + id + "_" + run)."""
-        rng = np.random.default_rng([self.seed, 3])
-        conv = [f"conv-{c:07d}" for c in range(n_convs)]
-        channel = rng.choice(["web", "api", "mobile", "batch"], size=n_convs)
-        worklist = [f"wl{int(x):03d}" for x in rng.integers(0, 20, size=n_convs)]
-        return pd.DataFrame(
-            {
-                "conv_id": conv,
-                "channel": channel,
-                "worklist_id": worklist,
-                "run_id": run_id,
-                "analysis_id": [f"{w}_{c}_{run_id}" for w, c in zip(worklist, conv)],
-                "pipeline_version": rng.integers(1, 5, size=n_convs).astype("int32"),
-            }
-        )

@@ -1,7 +1,6 @@
 from importtoneo4j_spark.functions.text import (  # noqa: F401
     char_shingles,
     jaccard,
-    minhash_signature,
     norm_key,
     normalize_text,
     nullify_sentinels,

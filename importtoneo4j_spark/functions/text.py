@@ -7,9 +7,9 @@ VariantDatabase.java:204,211,218) and the canonical key format
 "<contig>:<pos><ref>><alt>" (VariantDatabase.java:331-334): a deterministic
 pure function from surface form to MERGE key.
 
-MinHash here is built from ``md5`` hex strings compared lexicographically:
-min(md5(seed || shingle)) is a valid min-wise hash per seed, and — key design
-point — ``md5`` produces identical lowercase hex in Spark and DuckDB, so the
+MinHash here hashes each shingle once with ``md5`` and derives its
+permutations by affine universal hashing (minhash_bands_agg). Key design
+point: ``md5`` produces identical lowercase hex in Spark and DuckDB, so the
 LSH pipeline is oracle-checkable end-to-end in plain SQL.
 """
 
@@ -57,26 +57,6 @@ def char_shingles(col: Column, k: int = 3) -> Column:
     n = F.greatest(F.length(s) - F.lit(k - 1), F.lit(1))
     idx = F.sequence(F.lit(1), n)
     return F.array_distinct(F.transform(idx, lambda i: F.substring(s, i, k)))
-
-
-def minhash_signature(shingles: Column, num_perm: int = 32) -> Column:
-    """array<string> shingles -> array<string> of ``num_perm`` min-hashes.
-
-    Hash family: md5(seed || ':' || shingle), minimum taken lexicographically
-    over the hex string. Deterministic, identical in DuckDB
-    (``min(md5(seed || ':' || shingle))``).
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    shingles,
-                    lambda x, s=s: F.md5(F.concat(F.lit(f"{s}:"), x)),
-                )
-            )
-            for s in range(num_perm)
-        ]
-    )
 
 
 # universal-hash MinHash family: one md5 per shingle, then num_perm affine
@@ -135,35 +115,6 @@ def minhash_bands_agg(
         for b in range(bands)
     ]
     return sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key"))
-
-
-def split_fraction(col: Column) -> tuple[Column, Column]:
-    """'n/m' -> (numerator, denominator) as smallint, null-safe (reference
-    C5: exon/intron rank parsing, VariantDatabase.java:412,425-426)."""
-    parts = F.split(col, "/")
-    num = F.element_at(parts, 1).cast("smallint")
-    den = F.when(F.size(parts) > 1, F.element_at(parts, 2)).cast("smallint")
-    return num, den
-
-
-def sign_to_bool(col: Column) -> Column:
-    """+1/-1 -> true/false, anything else null (reference C7: strand
-    mapping, VariantDatabase.java:407-411 — made total instead of crashing)."""
-    i = col.try_cast("int")  # ANSI mode: plain cast would throw on junk
-    return (
-        F.when(i == 1, F.lit(True))
-        .when(i == -1, F.lit(False))
-        .otherwise(F.lit(None).cast("boolean"))
-    )
-
-
-def scalar_or_list(col: Column) -> Column:
-    """Normalize a value that may be scalar or list into a list (reference
-    C11: the CSQ single-vs-list ClassCastException dispatch,
-    VariantDatabase.java:361-385 — normalized at ingest instead of caught)."""
-    return F.when(col.startswith("["), F.from_json(col, "array<string>")).otherwise(
-        F.array(col)
-    )
 
 
 def jaccard(a: Column, b: Column) -> Column:

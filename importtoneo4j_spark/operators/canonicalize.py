@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, stats: dict | None = None
-) -> DataFrame:
+MAX_ITER = 25  # hash-min rounds before giving up: > any alias-cluster diameter
+
+
+def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     """(src, dst) string edges -> (id, comp) with comp = min id in component.
 
     Vertices appearing only as singletons are NOT included — callers union
@@ -62,7 +63,7 @@ def connected_components(
         .select("id", F.least("id", "nbr").alias("comp"), F.col("id").alias("old"))
     )
     labels = None
-    for rounds in range(1, max_iter + 1):
+    for rounds in range(1, MAX_ITER + 1):
         obs = Observation("cc_changed")
         nxt = step.observe(
             obs, F.sum((F.col("comp") != F.col("old")).cast("long")).alias("n")
@@ -85,7 +86,7 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
         )
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iters")
+    raise RuntimeError(f"connected_components did not converge in {MAX_ITER} iters")
 
 
 def assign_canonical_ids(vocab: DataFrame, comp: DataFrame) -> DataFrame:

@@ -110,10 +110,6 @@ def lsh_candidate_edges(
     vocab: DataFrame,
     stored_sig: DataFrame | None = None,
     asserted: DataFrame | None = None,
-    num_perm: int = NUM_PERM,
-    bands: int = BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-    threshold: float = JACCARD_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
 ) -> LSH:
     """The similarity evidence that the keys of ``vocab`` absent from
@@ -173,7 +169,7 @@ def lsh_candidate_edges(
     # (measured on wide_vocab, 4 vCPUs, with the band self-join this pass
     # replaced: 3.4-4.0 s vs 2.4-3.0 s per LSH)
     fresh_sig = stage_persist(
-        minhash_bands_agg(fresh, "norm_key", "shingles", num_perm, bands, rows_per_band),
+        minhash_bands_agg(fresh, "norm_key", "shingles", NUM_PERM, BANDS, ROWS_PER_BAND),
         mode="memory",
     )
     # a norm_key is trimmed, so a leading space marks a stored member
@@ -258,7 +254,9 @@ def lsh_candidate_edges(
     # src < dst also drops a key listed twice in one bucket
     verified = F.filter(
         pairs,
-        lambda p: p["keep"] & (p["src"] < p["dst"]) & (jaccard(p["ta"], p["tb"]) >= threshold),
+        lambda p: p["keep"]
+        & (p["src"] < p["dst"])
+        & (jaccard(p["ta"], p["tb"]) >= JACCARD_THRESHOLD),
     )
     emits = F.transform(verified, lambda p: row(p["src"], p["dst"], over))
     rows = buckets.select(F.inline(F.concat("counters", emits)))
@@ -296,12 +294,12 @@ def lsh_candidate_edges(
     return LSH(edges, retracted, fresh_sig, counts)
 
 
-def lsh_keys(vocab: DataFrame, k: int = SHINGLE_K) -> DataFrame:
+def lsh_keys(vocab: DataFrame) -> DataFrame:
     """Distinct norm_keys with their blocking shingles."""
     return (
         vocab.select("norm_key")
         .distinct()
-        .withColumn("shingles", char_shingles(F.col("norm_key"), k))
+        .withColumn("shingles", char_shingles(F.col("norm_key"), SHINGLE_K))
         .filter(F.size("shingles") > 0)
     )
 

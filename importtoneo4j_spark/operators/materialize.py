@@ -159,11 +159,3 @@ def row_hash_xor(cols: list[str]) -> Column:
     value over disjoint parts xors to its value over their union."""
     casts = ", ".join(f"cast({c} as string)" for c in cols)
     return F.expr(f"bit_xor(xxhash64({casts}))")
-
-
-def global_checksum(df: DataFrame, hash_cols: list[str] | None = None) -> str:
-    """Order-insensitive whole-table checksum (resume / idempotency tests)."""
-    row = df.select(
-        row_hash_xor(hash_cols or df.columns).alias("x"), F.count("*").alias("n")
-    ).first()
-    return f"{row['n']}:{row['x']}"

@@ -1,4 +1,4 @@
-"""Deterministic sampling / dataset splitting (round 4).
+"""Deterministic dataset splitting (round 4).
 
 A training-data pipeline needs train/val/test assignment that is (a)
 deterministic across runs, clusters, and engines — never `rand()`, whose
@@ -55,11 +55,3 @@ def hash_split(
     # last split takes the remainder, so the thresholds always cover 10000
     expr = F.lit(names[-1]) if expr is None else expr.otherwise(F.lit(names[-1]))
     return df.withColumn(out_col, expr)
-
-
-def deterministic_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Keep ~fraction of rows, chosen by the same hash construction —
-    repeatable across engines/runs, unlike df.sample()."""
-    return df.filter(hash_bucket(F.col(id_col), salt) < int(round(fraction * BUCKETS)))

@@ -266,31 +266,6 @@ def ivf_topk(
     return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def ivf_append(
-    assigned: DataFrame,
-    cents: DataFrame,
-    new_embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """O(delta) IVF index maintenance (round 5): assign ONLY the new
-    vectors against the FROZEN centroid table and union with the stored
-    assignment — the continuously-growing-corpus path (a training
-    pipeline appends embeddings daily; re-clustering the full corpus per
-    batch is the accidental O(N) this avoids). Ids already present keep
-    their stored row (anti-join guard — the same exactly-once contract as
-    the pipeline's append mode), so re-running a batch is idempotent.
-
-    Because assignment is per-vector independent, the result is
-    IDENTICAL to a full rebuild against the same centroids
-    (test-asserted); what drifts over time is centroid QUALITY —
-    re-derive centroids (assign_buckets/kmeans_refine) when the
-    dropped-bucket or recall monitors degrade (the documented rebuild
-    trigger, like the pipeline's append-staleness fold)."""
-    fresh = new_embeddings.join(assigned.select(id_col), id_col, "left_anti")
-    return assigned.unionByName(_argmax_assign(fresh, cents, id_col, vec_col))
-
-
 def multiprobe_assign(
     embeddings: DataFrame,
     cents: DataFrame,

@@ -1,4 +1,4 @@
-"""Transcript source: read, validate, quarantine, stable ordering.
+"""Transcript source: read, validate, quarantine.
 
 Mirrors the reference's ingest discipline:
 * record filter F1 + warn-and-skip F3 (VariantDatabase.java:178,189-192):
@@ -6,10 +6,6 @@ Mirrors the reference's ingest discipline:
   never silently dropped, never a crash.
 * fail-fast F4 (VariantDatabase.java:193-195): structural violations
   (duplicate (conv_id, turn_idx)) raise in the driver.
-* stable per-conversation turn ordering (input_hint invariant): the
-  reference gets order for free from its sequential iterator
-  (VariantDatabase.java:174); we make it explicit with a window over
-  (conv_id, turn_idx) before any grouped extraction.
 """
 
 from __future__ import annotations
@@ -112,25 +108,3 @@ def flag_duplicate_turns(df: DataFrame) -> DataFrame:
     ok = F.col("reject_reason").isNull()
     n_valid = F.sum(ok.cast("int")).over(Window.partitionBy("conv_id", "turn_idx"))
     return df.withColumn("_dup", (ok & (n_valid > 1)).cast("int"))
-
-
-def with_stable_order(df: DataFrame, flag_dups: bool = False) -> DataFrame:
-    """Attach a global per-conversation sequence number.
-
-    row_number over (conv_id ORDER BY turn_idx, ts) — the explicit form of
-    the reference's input-order dependence. Downstream first-wins merges
-    order by this column, which is what makes them deterministic under
-    parallelism (SURVEY.md §7 hard part 1).
-
-    flag_dups=True adds ``_dup`` (1 when this row repeats the previous
-    row's turn_idx within the conversation) computed by a lag over the SAME
-    window spec — Catalyst fuses it into the one Window node, so the F4
-    duplicate check rides the ordering pass for free instead of costing a
-    second full scan (it would be a second pass over 100 TB).
-    """
-    w = Window.partitionBy("conv_id").orderBy(F.col("turn_idx").asc(), F.col("ts").asc())
-    out = df.withColumn("seq", F.row_number().over(w))
-    if flag_dups:
-        dup = (F.lag("turn_idx").over(w) == F.col("turn_idx")).cast("int")
-        out = out.withColumn("_dup", F.coalesce(dup, F.lit(0)))
-    return out

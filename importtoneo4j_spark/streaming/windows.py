@@ -1,7 +1,7 @@
 """Streaming windowed metrics over the transcript stream.
 
 The reference is batch-only; this is the engine's forward-looking streaming
-surface: tumbling, hopping and session-window turn metrics with a watermark
+surface: tumbling and session-window turn metrics with a watermark
 for late data. The streams run under availableNow triggers in tests, driven to completion
 synchronously against a parquet directory.
 """
@@ -39,35 +39,6 @@ def turn_rate_stream(
     )
 
 
-def turn_rate_stream_hopping(
-    spark: SparkSession,
-    input_dir: str,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Hopping-window twin of turn_rate_stream: overlapping windows every
-    ``slide`` (each event lands in window/slide windows). Streaming form of
-    the t5_hopping_window batch gate — same F.window operator, same
-    epoch-aligned assignment, so the batch oracle check carries over.
-
-    Scale note: state size multiplies by window/slide versus tumbling
-    (every event belongs to that many open windows); the watermark bounds
-    how long each stays open."""
-    stream = spark.readStream.schema(TRANSCRIPTS).parquet(input_dir)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("win"), "role")
-        .agg(F.count("*").alias("n_turns"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "role",
-            "n_turns",
-        )
-    )
-
-
 def session_window_stream(
     spark: SparkSession,
     input_dir: str,
@@ -95,17 +66,3 @@ def session_window_stream(
             "n_turns",
         )
     )
-
-
-def run_to_memory(df: DataFrame, name: str, checkpoint: str):
-    """Drive a streaming DataFrame to completion into an in-memory table."""
-    q = (
-        df.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return q

@@ -792,30 +792,6 @@ def test_quantize_embeddings_roundtrip_bound(spark):
     assert deq[2] == [3.0, 3.0, 3.0]  # constant vector exact
 
 
-def test_ivf_append_matches_full_rebuild(spark, emb):
-    """Appending a corpus slice to an existing assignment against frozen
-    centroids yields EXACTLY the full-corpus assignment (per-vector
-    independence), and re-appending the same batch is idempotent."""
-    from importtoneo4j_spark.operators.similarity import assign_buckets, ivf_append
-
-    old = emb.filter(F.col("vec_id") % 5 != 0)
-    new = emb.filter(F.col("vec_id") % 5 == 0)
-    # centroids from the FULL corpus (frozen index definition)
-    cents, full = assign_buckets(emb, n_centroids=16)
-    _, old_assigned = assign_buckets(old, n_centroids=16)
-    # old_assigned used different centroids (lowest ids of the old slice);
-    # rebuild it against the frozen cents for a fair append base
-    from importtoneo4j_spark.operators.similarity import _argmax_assign
-
-    base = _argmax_assign(old, cents, "vec_id", "embedding")
-    appended = ivf_append(base, cents, new)
-    want = {(r["vec_id"], r["bucket"]) for r in full.collect()}
-    got = {(r["vec_id"], r["bucket"]) for r in appended.collect()}
-    assert got == want
-    again = ivf_append(appended, cents, new)  # idempotent re-run
-    assert again.count() == appended.count()
-
-
 def test_ivf_topk_quantized_recall(spark, emb):
     """The int8-code search path loses little recall vs full precision:
     >= 80% overlap of the returned neighbour sets on the testdata."""

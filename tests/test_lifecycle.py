@@ -6,12 +6,13 @@ from __future__ import annotations
 import glob
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.datagen import TranscriptGenerator
-from importtoneo4j_spark.operators.materialize import global_checksum
+from importtoneo4j_spark.operators.materialize import row_hash_xor
 from importtoneo4j_spark.plans.pipeline import RUN_TABLES, STAGES, KGPipeline
 
 
@@ -23,13 +24,70 @@ def data(tmp_path_factory):
     return path
 
 
-def test_append_same_input_is_noop(spark, data, tmp_path_factory):
+@pytest.fixture(scope="module")
+def data_store(spark, data, tmp_path_factory):
+    """(pipeline, metrics) of a run r1 over ``data``, built once. Tests
+    only read it; one that writes works on a ``copy_store`` copy."""
+    pipe = KGPipeline(spark, data, str(tmp_path_factory.mktemp("lcbase") / "kg"), run_id="r1")
+    return pipe, pipe.run(resume=False)
+
+
+@pytest.fixture(scope="module")
+def superset(spark, tmp_path_factory):
+    """The _superset_inputs corpora, by conversation count."""
+    sizes = [0, 10, 20, 30]
+    return dict(zip(sizes, _superset_inputs(spark, tmp_path_factory.mktemp("sup"), sizes)))
+
+
+@pytest.fixture(scope="module")
+def seeded_store(spark, superset, tmp_path_factory):
+    """A run r1 over the 10-conversation superset input, built once."""
+    work = str(tmp_path_factory.mktemp("seeded") / "kg")
+    KGPipeline(spark, superset[10], work, run_id="r1").run(resume=False)
+    return work
+
+
+@pytest.fixture
+def seeded(seeded_store, tmp_path):
+    """The test's own copy of the seeded store."""
+    return copy_store(seeded_store, tmp_path)
+
+
+@pytest.fixture(scope="module")
+def rebuilt(spark, superset, tmp_path_factory):
+    """rebuilt(n) -> (pipeline, metrics) of a rebuild of the n-conversation
+    superset input under run_id "fresh", built on first use. Read only."""
+    built = {}
+
+    def get(n):
+        if n not in built:
+            work = str(tmp_path_factory.mktemp(f"rebuild{n}") / "kg")
+            pipe = KGPipeline(spark, superset[n], work, run_id="fresh")
+            built[n] = pipe, pipe.run(resume=False)
+        return built[n]
+
+    return get
+
+
+def copy_store(src, tmp_path, name="kg") -> str:
+    """A private copy of a shared store, for a test that writes to it."""
+    dst = str(tmp_path / name)
+    shutil.copytree(src, dst)
+    return dst
+
+
+def global_checksum(df, cols) -> str:
+    """Order-insensitive checksum of ``cols``, "<rows>:<row_hash_xor>"."""
+    row = df.select(row_hash_xor(cols).alias("x"), F.count("*").alias("n")).first()
+    return f"{row['n']}:{row['x']}"
+
+
+def test_append_same_input_is_noop(spark, data, data_store, tmp_path):
     """Second run (new run_id, append mode) over the same input must leave
     the triple set unchanged — the anti-join delta is empty
     (Main.java:73-76 / delta sink semantics)."""
-    work = str(tmp_path_factory.mktemp("lcwork") / "kg")
-    p1 = KGPipeline(spark, data, work, run_id="r1")
-    m1 = p1.run()
+    p1, m1 = data_store
+    work = copy_store(p1.workdir, tmp_path)
     n1 = m1["materialize"]["triples"]
 
     p2 = KGPipeline(spark, data, work, run_id="r2", mode="append")
@@ -106,17 +164,16 @@ def _assert_lineage_per_run(pipe):
     return set(runs)
 
 
-def test_append_layout_survives_new_session(spark, tmp_path_factory):
+def test_append_layout_survives_new_session(spark, superset, rebuilt, tmp_path):
     """The triples layout does not depend on session state: an empty-input
     rebuild writes no triples file, and an append run in a new Spark
     session (its own catalog and SQL conf) onto it writes every triple into
     its own _run/pred directories — no flat files — with the materialize
     marker counting exactly the rows the table holds, and the graph equal
     to a rebuild of the same input."""
-    root = tmp_path_factory.mktemp("lay")
-    base, full = _superset_inputs(spark, root, [0, 20])
-    work = str(root / "kg")
-    p1 = KGPipeline(spark, base, work, run_id="r1")
+    full = superset[20]
+    work = str(tmp_path / "kg")
+    p1 = KGPipeline(spark, superset[0], work, run_id="r1")
     assert p1.run(resume=False)["materialize"]["triples"] == 0
     assert _assert_unmixed_layout(work) == set()
 
@@ -126,23 +183,20 @@ def test_append_layout_survives_new_session(spark, tmp_path_factory):
     marker = p2.store.read_marker("materialize")
     assert marker["triples"] == p2.triples().count() == _run_triples(p2, "r2") > 0
 
-    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
-    want = fresh.run(resume=False)["materialize"]
+    want = rebuilt(20)[1]["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"]
 
 
-def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
+def test_double_append_after_demotion_stays_flat(spark, superset, rebuilt, tmp_path):
     """Two appends onto an empty-input rebuild: each writes its triples
     into its own _run partition, unmixed with flat files, so the table
     holds exactly the sum of the two deltas (no row lost or counted twice)
     and base + two appends equals a rebuild over the union."""
-    root = tmp_path_factory.mktemp("dd")
-    inputs = _superset_inputs(spark, root, [0, 20, 30])
-    work = str(root / "kg")
-    KGPipeline(spark, inputs[0], work, run_id="r1").run(resume=False)
+    work = str(tmp_path / "kg")
+    KGPipeline(spark, superset[0], work, run_id="r1").run(resume=False)
     n = 0
-    for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
+    for run_id, path in [("r2", superset[20]), ("r3", superset[30])]:
         pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
         m = pn.run(resume=False)
         n += _run_triples(pn, run_id)
@@ -150,25 +204,20 @@ def test_double_append_after_demotion_stays_flat(spark, tmp_path_factory):
     assert pn.triples().count() == n  # nothing silently dropped
     assert pn.store.read_marker("materialize")["triples"] == n
 
-    fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
-    want = fresh.run(resume=False)["materialize"]
+    want = rebuilt(30)[1]["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"] == pn.nodes().count()
 
 
-@pytest.mark.parametrize("base_convs", [10], ids=["base10"])
-def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
+def test_two_appends_match_rebuild(spark, superset, seeded, rebuilt):
     """A 10-conversation base plus two superset appends equals a rebuild
     over the union. Each run's triples land in its own _run partition,
     unmixed with flat files, and the materialize marker counts exactly the
     rows the table holds (nothing silently dropped). The empty-base case
     is test_double_append_after_demotion_stays_flat."""
-    root = tmp_path_factory.mktemp("two_appends")
-    inputs = _superset_inputs(spark, root, [base_convs, 20, 30])
-    work = str(root / "kg")
-    KGPipeline(spark, inputs[0], work, run_id="r1").run(resume=False)
+    work = seeded
     runs = {"r1"}
-    for run_id, path in [("r2", inputs[1]), ("r3", inputs[2])]:
+    for run_id, path in [("r2", superset[20]), ("r3", superset[30])]:
         pn = KGPipeline(spark, path, work, run_id=run_id, mode="append")
         m = pn.run(resume=False)
         runs.add(run_id)
@@ -176,13 +225,12 @@ def test_two_appends_match_rebuild(spark, tmp_path_factory, base_convs):
         assert pn.store.read_marker("materialize")["triples"] == pn.triples().count()
         assert _assert_lineage_per_run(pn) == runs
 
-    fresh = KGPipeline(spark, inputs[2], str(root / "rebuild"), run_id="fresh")
-    want = fresh.run(resume=False)["materialize"]
+    want = rebuilt(30)[1]["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"] == pn.nodes().count()
 
 
-def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
+def test_materialize_retry_same_run_id_reports_rebuild(spark, superset, seeded, rebuilt):
     """A crash after the append's lineage write but before its materialize
     marker, retried under the same run_id: only materialize reruns, it
     reports the checksum, node count and mention total of a rebuild of the
@@ -190,18 +238,15 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, tmp_path_factory):
     append of it used to double the count and cancel the xor checksum to
     0). The retry folds, so its row is the only one, as its partition is
     the only one of triples."""
-    root = tmp_path_factory.mktemp("retry")
-    base, full = _superset_inputs(spark, root, [10, 20])
-    work = str(root / "kg")
-    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    full, work = superset[20], seeded
     _crashed_append(spark, full, work, "r2", "materialize")
 
     retry = KGPipeline(spark, full, work, run_id="r2", mode="append")
     m = retry.run()
     assert not m.get("skipped")
     assert all(m[s].get("resumed") for s in ("ingest", "extract", "link", "canonicalize"))
-    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
-    want = fresh.run(resume=False)["materialize"]
+    fresh, want = rebuilt(20)
+    want = want["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"] == retry.nodes().count()
     # the node upsert is not repeated: mention counts are not added twice
@@ -231,7 +276,7 @@ def _crashed_append(spark, path, work, run_id, last, **kw):
         pytest.param("materialize", "r2", False, id="after_materialize-same_run_id_no_resume"),
     ],
 )
-def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, resume):
+def test_append_retry_matches_rebuild(spark, superset, seeded, rebuilt, last, retry_id, resume):
     """An append that dies after stage ``last`` (after materialize: after
     every write — watermarks, triples, the node upsert, lineage — but
     before its marker), retried under a new run_id or under the same run_id
@@ -243,16 +288,12 @@ def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, r
     describes its own triples, every run-scoped table holds partitions of
     the imported runs only, and a later append of the same input adds
     nothing."""
-    root = tmp_path_factory.mktemp("crash")
-    base, full = _superset_inputs(spark, root, [10, 20])
-    work = str(root / "kg")
-    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    full, work = superset[20], seeded
     _crashed_append(spark, full, work, "r2", last)
 
     retry = KGPipeline(spark, full, work, run_id=retry_id, mode="append")
     m = retry.run(resume=resume)
-    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
-    want = fresh.run(resume=False)
+    fresh, want = rebuilt(20)
     n = want["extract"]["assertions"]
     assert m["extract"]["assertions"] == retry._full("extracted").count() == n
     assert m["materialize"]["checksum"] == want["materialize"]["checksum"]
@@ -279,15 +320,12 @@ def test_append_retry_matches_rebuild(spark, tmp_path_factory, last, retry_id, r
     assert _run_triples(again, "r4") == 0
 
 
-def test_materialize_job_budget(spark, spark_jobs, tmp_path_factory):
+def test_materialize_job_budget(spark, spark_jobs, superset, seeded):
     """An append's materialize runs at most 28 Spark jobs on a small store:
     it writes the run's lineage row from its triples write and reads the
     totals back from the per-run rows, and it neither rescans the whole
     triples table nor rebuilds a schema registry (that form ran 32)."""
-    root = tmp_path_factory.mktemp("mat_jobs")
-    base, full = _superset_inputs(spark, root, [10, 20])
-    work = str(root / "kg")
-    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    full, work = superset[20], seeded
     _crashed_append(spark, full, work, "r2", "canonicalize")
     pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
     before = spark_jobs()
@@ -296,15 +334,12 @@ def test_materialize_job_budget(spark, spark_jobs, tmp_path_factory):
     assert _assert_lineage_per_run(pipe) == {"r1", "r2"}
 
 
-def test_append_onto_store_without_layout_raises(spark, tmp_path_factory):
+def test_append_onto_store_without_layout_raises(spark, superset, seeded):
     """A store whose materialize marker records no layout (written before
     the marker carried one) cannot take an append: run() raises, naming
     the rebuild, before it writes any file."""
-    root = tmp_path_factory.mktemp("layout")
-    base, full = _superset_inputs(spark, root, [10, 20])
-    work = str(root / "kg")
-    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
-    pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    work = seeded
+    pipe = KGPipeline(spark, superset[20], work, run_id="r2", mode="append")
     marker = pipe.store.read_marker("materialize")
     del marker["layout"]
     pipe.store.write_marker("materialize", marker)
@@ -322,20 +357,17 @@ def test_append_onto_store_without_layout_raises(spark, tmp_path_factory):
     assert files() == before
 
 
-def test_rebuild_onto_used_store_forgets_old_runs(spark, tmp_path_factory):
+def test_rebuild_onto_used_store_forgets_old_runs(spark, superset, seeded, tmp_path):
     """A rebuild (the reference's -n) into a workdir holding a base and an
     append first clears the store: checksum, node count and lineage equal
     a rebuild into a fresh directory, only the new run is imported, and
     re-importing the old base run_id afterwards is not skipped."""
-    root = tmp_path_factory.mktemp("reuse")
-    base, full = _superset_inputs(spark, root, [10, 20])
-    work = str(root / "kg")
-    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    base, full, work = superset[10], superset[20], seeded
     KGPipeline(spark, full, work, run_id="r2", mode="append").run(resume=False)
 
     again = KGPipeline(spark, full, work, run_id="r3")
     m = again.run()
-    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="r3")
+    fresh = KGPipeline(spark, full, str(tmp_path / "rebuild"), run_id="r3")
     want = fresh.run()["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"] == again.nodes().count()
@@ -359,14 +391,11 @@ def test_rebuild_onto_used_store_forgets_old_runs(spark, tmp_path_factory):
     assert old.store.read_marker("materialize")["imported_runs"] == ["r1", "r3"]
 
 
-def test_resume_mid_stage_identical(spark, data, tmp_path_factory):
+def test_resume_mid_stage_identical(spark, data, data_store, tmp_path):
     """Kill after stage k, resume -> identical final checksum."""
-    w_full = str(tmp_path_factory.mktemp("lc1") / "kg")
-    full = KGPipeline(spark, data, w_full, run_id="r1")
-    full.run()
-    want = full.store.read_marker("materialize")["checksum"]
+    want = data_store[0].store.read_marker("materialize")["checksum"]
 
-    w_part = str(tmp_path_factory.mktemp("lc2") / "kg")
+    w_part = str(tmp_path / "kg")
     part = KGPipeline(spark, data, w_part, run_id="r1")
     part.stage_ingest()
     part.stage_extract()  # "killed" after extract
@@ -385,7 +414,6 @@ def test_streaming_incremental_matches_batch(spark, data, tmp_path_factory):
     from importtoneo4j_spark.sources.transcripts import (
         read_transcripts,
         split_valid_rejects,
-        with_stable_order,
     )
     from importtoneo4j_spark.streaming.incremental import incremental_extract_stream
 
@@ -395,14 +423,14 @@ def test_streaming_incremental_matches_batch(spark, data, tmp_path_factory):
     q.awaitTermination(120)
 
     batch_valid, _ = split_valid_rejects(read_transcripts(spark, data))
-    batch = extract_assertions(with_stable_order(batch_valid))
+    batch = extract_assertions(batch_valid)
     key = ["conv_id", "turn_idx", "subj_surface", "pred", "obj_surface"]
     got = sorted(map(tuple, spark.read.parquet(out).select(*key).collect()))
     want = sorted(map(tuple, batch.select(*key).collect()))
     assert got == want
 
 
-def test_fold_epochs_matches_batch(spark, data, tmp_path_factory):
+def test_fold_epochs_matches_batch(spark, data, data_store, tmp_path_factory):
     """VERDICT r2 #4: the lambda fold is executable — stream the corpus,
     fold the epoch-partitioned extraction into the batch link ->
     canonicalize -> materialize stages, and the folded graph's triple
@@ -418,9 +446,7 @@ def test_fold_epochs_matches_batch(spark, data, tmp_path_factory):
     folded = KGPipeline(spark, data, fold_work, run_id="fold")
     m_fold = folded.fold_epochs(out)
 
-    batch_work = str(tmp_path_factory.mktemp("fold") / "kg_batch")
-    batch = KGPipeline(spark, data, batch_work, run_id="batch")
-    m_batch = batch.run()
+    m_batch = data_store[1]
     assert m_fold["materialize"]["triples"] > 0
     assert m_fold["materialize"]["checksum"] == m_batch["materialize"]["checksum"]
 
@@ -437,10 +463,13 @@ def test_fold_epochs_matches_batch(spark, data, tmp_path_factory):
     )
 
 
-def _staleness_corpora(spark, tmp_path_factory):
-    """Run-1 corpus: two 'acme' surfaces with no linking evidence (token
-    Jaccard 1/3 < 0.6, no aka) -> two entities. Run-2 superset adds an aka
-    bridge that merges them — evidence an append cannot apply."""
+@pytest.fixture(scope="module")
+def stale_store(spark, tmp_path_factory):
+    """(half, full, store): the run-1 corpus names two 'acme' surfaces with
+    no linking evidence (token Jaccard 1/3 < 0.6, no aka) -> two entities;
+    the run-2 superset adds an aka bridge that merges them — evidence an
+    append cannot apply. The store is a run r1 over the first, built
+    once."""
     import datetime
 
     from importtoneo4j_spark.schemas import TRANSCRIPTS
@@ -454,11 +483,12 @@ def _staleness_corpora(spark, tmp_path_factory):
     bridge = base + [
         ("conv-b", 0, "user", "[[acme corp]] aka [[acme incorporated]]", None, t0),
     ]
-    half = str(tmp_path_factory.mktemp("stale") / "half")
-    full = str(tmp_path_factory.mktemp("stale") / "full")
+    root = tmp_path_factory.mktemp("stale")
+    half, full, work = str(root / "half"), str(root / "full"), str(root / "kg")
     spark.createDataFrame(base, TRANSCRIPTS).write.parquet(half)
     spark.createDataFrame(bridge, TRANSCRIPTS).write.parquet(full)
-    return half, full
+    KGPipeline(spark, half, work, run_id="r1").run(resume=False)
+    return half, full, work
 
 
 def _append_run(spark, path, work, run_id, **kw):
@@ -469,16 +499,15 @@ def _append_run(spark, path, work, run_id, **kw):
     return p
 
 
-def test_append_staleness_detected(spark, tmp_path_factory):
+def test_append_staleness_detected(spark, stale_store, tmp_path):
     """VERDICT r3 #4 (detection half): an append whose new evidence would
     merge two existing entities reports stale_surfaces > 0 in the
     canonicalize metrics — riding the fresh-keys write's Observation, no
     extra counting job — while the graph itself (correctly, by the id
     stability contract) keeps the entities split."""
-    half, full = _staleness_corpora(spark, tmp_path_factory)
-    work = str(tmp_path_factory.mktemp("stale") / "kg")
+    half, full, base = stale_store
+    work = copy_store(base, tmp_path)
     p1 = KGPipeline(spark, half, work, run_id="r1")
-    p1.run()
     assert p1.nodes().count() == 4  # acme x2, big co, metropolis
 
     p2 = _append_run(spark, full, work, "r2")
@@ -487,21 +516,19 @@ def test_append_staleness_detected(spark, tmp_path_factory):
     assert p2.nodes().count() == 4  # append cannot merge — documented
 
 
-def test_append_auto_fold_reaches_fixpoint(spark, tmp_path_factory):
+def test_append_auto_fold_reaches_fixpoint(spark, stale_store, tmp_path):
     """VERDICT r3 #4 (auto-fold half): with fold_threshold set, the same
     append trips the threshold, rebuilds at the full fixpoint, and the
     final checksum equals a fresh overwrite run over the same superset."""
-    half, full = _staleness_corpora(spark, tmp_path_factory)
-    work = str(tmp_path_factory.mktemp("fold") / "kg")
-    KGPipeline(spark, half, work, run_id="r1").run()
+    _, full, base = stale_store
+    work = copy_store(base, tmp_path)
 
     p2 = _append_run(spark, full, work, "r2", fold_threshold=0)
     assert p2.metrics["canonicalize"]["auto_folded"] is True
     assert p2.metrics["canonicalize"]["stale_surfaces"] >= 1
     assert p2.nodes().count() == 3  # acme pair merged at the fixpoint
 
-    fresh_work = str(tmp_path_factory.mktemp("fold") / "kg_fresh")
-    fresh = KGPipeline(spark, full, fresh_work, run_id="rf")
+    fresh = KGPipeline(spark, full, str(tmp_path / "kg_fresh"), run_id="rf")
     fresh.run()
     assert (
         p2.store.read_marker("materialize")["checksum"]
@@ -515,18 +542,15 @@ def test_append_auto_fold_reaches_fixpoint(spark, tmp_path_factory):
     assert p3.metrics["canonicalize"]["stale_surfaces"] == 0
 
 
-def test_append_retry_after_auto_fold_matches_clean_history(spark, tmp_path_factory):
+def test_append_retry_after_auto_fold_matches_clean_history(spark, stale_store, tmp_path):
     """An auto-folding append that dies after canonicalize, when its full
     assignment has already replaced links, retried under a new run_id: the
     retry finds the graph touched by a run that never completed and
     re-materializes from every run's extraction instead of merging its
     delta onto triples and nodes that still carry the pre-fold ids. The
     checksum and node count equal the same history without the crash."""
-    half, full = _staleness_corpora(spark, tmp_path_factory)
-    root = tmp_path_factory.mktemp("fold_crash")
-    work, clean = str(root / "kg"), str(root / "clean")
-    for w in (work, clean):
-        KGPipeline(spark, half, w, run_id="r1").run(resume=False)
+    _, full, base = stale_store
+    work, clean = copy_store(base, tmp_path), copy_store(base, tmp_path, "clean")
     _crashed_append(spark, full, work, "r2", "canonicalize", fold_threshold=0)
 
     got, want = (
@@ -539,11 +563,13 @@ def test_append_retry_after_auto_fold_matches_clean_history(spark, tmp_path_fact
     assert got["nodes"] == want["nodes"] == 3  # the acme pair merged
 
 
-def _alias_corpora(spark, tmp_path_factory):
-    """A base naming "acme corp"; the input of an append that adds "acme
-    corp aka acme corporation"; and the input of a later append that names
-    "acme corporation" with no aka. The two acme keys share one of three
-    tokens, so only the aka links them."""
+@pytest.fixture(scope="module")
+def alias_store(spark, tmp_path_factory):
+    """(base, aka, plain, store): a base naming "acme corp"; the input of an
+    append that adds "acme corp aka acme corporation"; the input of a later
+    append that names "acme corporation" with no aka; and a run r1 over the
+    base, built once. The two acme keys share one of three tokens, so only
+    the aka links them."""
     import datetime
 
     from importtoneo4j_spark.schemas import TRANSCRIPTS
@@ -560,22 +586,21 @@ def _alias_corpora(spark, tmp_path_factory):
     for name, rows in [("base", base), ("aka", base + [aka]), ("plain", base + [plain])]:
         paths.append(str(root / name))
         spark.createDataFrame(rows, TRANSCRIPTS).write.parquet(paths[-1])
+    paths.append(str(root / "kg"))
+    KGPipeline(spark, paths[0], paths[-1], run_id="r1").run(resume=False)
     return paths
 
 
 @pytest.mark.parametrize("last", ["link", "canonicalize"])
-def test_crashed_append_link_evidence_not_kept(spark, tmp_path_factory, last):
+def test_crashed_append_link_evidence_not_kept(spark, alias_store, tmp_path, last):
     """An append that read an aka turn and died after ``last`` leaves no
     evidence behind: its retry under a new run_id, whose input lacks that
     turn, does not merge "acme corporation" into "acme corp". Its
     vocabulary, signatures, same_as edges and links were in its own
     partitions, which the retry deletes, so the checksum and the node set
     equal the same history without the crash."""
-    base, aka, plain = _alias_corpora(spark, tmp_path_factory)
-    root = tmp_path_factory.mktemp("stale_evidence")
-    work, clean = str(root / "kg"), str(root / "clean")
-    for w in (work, clean):
-        KGPipeline(spark, base, w, run_id="r1").run(resume=False)
+    _, aka, plain, base = alias_store
+    work, clean = copy_store(base, tmp_path), copy_store(base, tmp_path, "clean")
     _crashed_append(spark, aka, work, "r2", last)
 
     got, want = (KGPipeline(spark, plain, w, run_id="r3", mode="append") for w in (work, clean))
@@ -618,16 +643,13 @@ def test_fold_epochs_watermarks_from_folded_extraction(spark, data, tmp_path_fac
     assert n_wm > stale_convs  # ...not just the stale batch ingest
 
 
-def test_enrich_duplicate_attrs_guard(spark, data, tmp_path_factory):
+def test_enrich_duplicate_attrs_guard(spark, data_store):
     """ADVICE r2: an attribute table with duplicate keys must not fan out
     node rows. Default aborts; on_duplicate='min_wins' pre-aggregates to one
     deterministic map per key."""
     from importtoneo4j_spark.operators.enrich import enrich_nodes
 
-    work = str(tmp_path_factory.mktemp("enrdup") / "kg")
-    pipe = KGPipeline(spark, data, work, run_id="r1")
-    pipe.run()
-    nodes = pipe.nodes()
+    nodes = data_store[0].nodes()
     some_id = nodes.select("entity_id").first()["entity_id"]
     attrs = spark.createDataFrame(
         [(some_id, "zeta"), (some_id, "alpha")],
@@ -689,23 +711,20 @@ def _ingested_runs(pipe):
     return {r[0] for r in pipe.store.read("ingested").select("_run").distinct().collect()}
 
 
-def test_fail_fast_duplicate_new_turns_aborts_append(spark, tmp_path_factory):
+def test_fail_fast_duplicate_new_turns_aborts_append(spark, superset, seeded, rebuilt, tmp_path):
     """The duplicate check covers the turns an append imports: a new turn
     repeated in the input aborts the append before its ingest marker, and
     its retry under a new run_id deletes the aborted run's ingested
     partition. A repeat of an already imported turn is not imported, so
     it is not checked: that retry, whose input repeats a base turn, equals
     a rebuild of the superset."""
-    root = tmp_path_factory.mktemp("dup_append")
-    base, full = _superset_inputs(spark, root, [10, 20])
-    t = spark.read.parquet(full)
-    dup_new, dup_old = str(root / "dup_new"), str(root / "dup_old")
+    t = spark.read.parquet(superset[20])
+    dup_new, dup_old = str(tmp_path / "dup_new"), str(tmp_path / "dup_old")
     valid = F.col("text").contains("[[")  # a valid turn, not a quarantined one
     new, old = F.col("conv_id") >= "conv-0000010", F.col("conv_id") < "conv-0000010"
     t.unionByName(t.filter(new & valid).limit(1)).write.parquet(dup_new)
     t.unionByName(t.filter(old & valid).limit(1)).write.parquet(dup_old)
-    work = str(root / "kg")
-    KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+    work = seeded
 
     bad = KGPipeline(spark, dup_new, work, run_id="r2", mode="append")
     with pytest.raises(ValueError, match="duplicate"):
@@ -716,18 +735,13 @@ def test_fail_fast_duplicate_new_turns_aborts_append(spark, tmp_path_factory):
     retry = KGPipeline(spark, dup_old, work, run_id="r3", mode="append")
     m = retry.run(resume=False)
     assert _ingested_runs(retry) == {"r1", "r3"}
-    fresh = KGPipeline(spark, full, str(root / "rebuild"), run_id="fresh")
-    assert m["materialize"]["checksum"] == fresh.run(resume=False)["materialize"]["checksum"]
+    assert m["materialize"]["checksum"] == rebuilt(20)[1]["materialize"]["checksum"]
 
 
-def test_enrich_first_wins_and_idempotent(spark, data, tmp_path_factory):
+def test_enrich_first_wins_and_idempotent(spark, data, data_store, tmp_path):
     """EP2: attrs join adds new property keys, never overwrites existing
     ones; re-applying the same attrs is a no-op (checksum-stable)."""
-    from importtoneo4j_spark.operators.materialize import global_checksum
-
-    work = str(tmp_path_factory.mktemp("enr") / "kg")
-    pipe = KGPipeline(spark, data, work, run_id="r1")
-    pipe.run()
+    pipe = KGPipeline(spark, data, copy_store(data_store[0].workdir, tmp_path), run_id="r1")
     # materialize attrs eagerly: a lazy plan over the nodes parquet would
     # dangle once enrich overwrites that table
     ids = [r["entity_id"] for r in pipe.nodes().select("entity_id").collect()]
@@ -751,12 +765,10 @@ def test_enrich_first_wins_and_idempotent(spark, data, tmp_path_factory):
     assert again["s"] == "ext"
 
 
-def test_enrich_miss_aborts_or_counts(spark, data, tmp_path_factory):
+def test_enrich_miss_aborts_or_counts(spark, data, data_store, tmp_path):
     """Crash-on-miss (VariantDatabase.java:336): an attribute keyed on a
     nonexistent node aborts under fail_fast and is counted otherwise."""
-    work = str(tmp_path_factory.mktemp("enrmiss") / "kg")
-    pipe = KGPipeline(spark, data, work, run_id="r1")
-    pipe.run()
+    pipe = KGPipeline(spark, data, copy_store(data_store[0].workdir, tmp_path), run_id="r1")
     ghost = spark.createDataFrame(
         [("__no_such_entity__", "x")], "entity_id string, source_db string"
     )
@@ -786,13 +798,11 @@ def test_streaming_retry_is_idempotent(spark, data, tmp_path_factory):
     assert spark.read.parquet(out).count() > n1
 
 
-def test_append_accumulates_node_attributes(spark, tmp_path_factory):
+def test_append_accumulates_node_attributes(spark, data, data_store, tmp_path_factory):
     """ADVICE r1: on append, existing nodes must gain new labels and mention
     counts from the new run (reference addNodeLabel accumulation), and
     surfaces keep their run-1 canonical ids."""
-    gen = TranscriptGenerator(seed=7, n_entities=60)
-    full_path = str(tmp_path_factory.mktemp("acc") / "full")
-    gen.write_parquet(full_path, n_convs=30)
+    full_path = data
     half_path = str(tmp_path_factory.mktemp("acc") / "half")
     spark.read.parquet(full_path).filter(
         F.col("conv_id") < "conv-0000015"
@@ -828,10 +838,7 @@ def test_append_accumulates_node_attributes(spark, tmp_path_factory):
     # twice. Every mention lands on exactly one entity regardless of how
     # linking grouped surfaces, so sum(n_mentions) is an exact invariant:
     # append-total must equal a fresh full-corpus run's total.
-    fresh_work = str(tmp_path_factory.mktemp("acc") / "kg_fresh")
-    p_fresh = KGPipeline(spark, full_path, fresh_work, run_id="rf")
-    p_fresh.run()
-    total_fresh = p_fresh.nodes().agg(F.sum("n_mentions")).first()[0]
+    total_fresh = data_store[0].nodes().agg(F.sum("n_mentions")).first()[0]
     total_append = p2.nodes().agg(F.sum("n_mentions")).first()[0]
     assert total_append == total_fresh
 
@@ -1137,15 +1144,14 @@ def _rows(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
-def test_append_of_new_turns_only_matches_superset_append(spark, tmp_path_factory):
+def test_append_of_new_turns_only_matches_superset_append(spark, superset, tmp_path):
     """An append's input may hold only the turns the store lacks: the
     imported turns are dropped at ingest either way. A base of 10 whole
     conversations and the first two turns of 5 more; the appends add the
     rest of those 5 and 5 new conversations, one as the superset and one
     as only those turns. Both report the same checksum, node count,
     assertion total and quarantine."""
-    root = tmp_path_factory.mktemp("delta_only")
-    (full,) = _superset_inputs(spark, root, [20])
+    root, full = tmp_path, superset[20]
     t = spark.read.parquet(full)
     part = (F.col("conv_id") < "conv-0000010") | (
         (F.col("conv_id") < "conv-0000015") & (F.col("turn_idx") < 2)
@@ -1153,10 +1159,10 @@ def test_append_of_new_turns_only_matches_superset_append(spark, tmp_path_factor
     base, delta = str(root / "base"), str(root / "delta")
     t.filter(part).write.parquet(base)
     t.filter(~part).write.parquet(delta)
+    KGPipeline(spark, base, str(root / "kg_base"), run_id="r1").run(resume=False)
     got = []
     for name, path in (("superset", full), ("delta", delta)):
-        work = str(root / f"kg_{name}")
-        KGPipeline(spark, base, work, run_id="r1").run(resume=False)
+        work = copy_store(str(root / "kg_base"), root, f"kg_{name}")
         pipe = KGPipeline(spark, path, work, run_id="r2", mode="append")
         m = pipe.run(resume=False)
         got.append(

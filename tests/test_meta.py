@@ -1,39 +1,6 @@
-"""conv_meta side-input tests (FIXTURES.md §2)."""
+"""TableStore tests: scheme-qualified roots and schema-free reads."""
 
 from __future__ import annotations
-
-import pytest
-
-from importtoneo4j_spark.sources.meta import (
-    enrich_transcripts,
-    reject_duplicate_analyses,
-)
-
-
-@pytest.fixture(scope="module")
-def meta_df(spark, gen):
-    return spark.createDataFrame(gen.conv_meta_pandas(20))
-
-
-def test_analysis_id_pattern(meta_df):
-    row = meta_df.first()
-    assert row["analysis_id"] == f"{row['worklist_id']}_{row['conv_id']}_{row['run_id']}"
-
-
-def test_duplicate_analysis_rejected(spark, meta_df):
-    dup = meta_df.union(meta_df.limit(1))
-    with pytest.raises(ValueError, match="analysis_id"):
-        reject_duplicate_analyses(dup)
-    reject_duplicate_analyses(meta_df)  # clean input passes
-
-
-def test_enrich_broadcast_join(spark, gen, meta_df):
-    turns = spark.createDataFrame(gen.turns_pandas(20))
-    enriched = enrich_transcripts(turns, meta_df)
-    assert enriched.count() == turns.count()  # left join preserves stream
-    assert enriched.filter("channel IS NULL").count() == 0
-    plan = enriched._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # the dim actually broadcasts
 
 
 def test_tablestore_scheme_qualified_paths(spark, tmp_path):

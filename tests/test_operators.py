@@ -237,31 +237,6 @@ def test_oracle_extraction_agrees_with_udf(spark, gen):
     assert len(got) == n_oracle
 
 
-def test_split_fraction(spark):
-    from importtoneo4j_spark.functions.text import split_fraction
-
-    df = spark.createDataFrame([("3/11",), ("5",), (None,)], ["f"])
-    num, den = split_fraction(F.col("f"))
-    got = [tuple(r) for r in df.select(num.alias("n"), den.alias("d")).collect()]
-    assert got == [(3, 11), (5, None), (None, None)]
-
-
-def test_sign_to_bool(spark):
-    from importtoneo4j_spark.functions.text import sign_to_bool
-
-    df = spark.createDataFrame([("1",), ("-1",), ("0",), ("x",)], ["s"])
-    got = [r["b"] for r in df.select(sign_to_bool(F.col("s")).alias("b")).collect()]
-    assert got == [True, False, None, None]
-
-
-def test_scalar_or_list(spark):
-    from importtoneo4j_spark.functions.text import scalar_or_list
-
-    df = spark.createDataFrame([('["a","b"]',), ("c",)], ["v"])
-    got = [r["l"] for r in df.select(scalar_or_list(F.col("v")).alias("l")).collect()]
-    assert got == [["a", "b"], ["c"]]
-
-
 def test_drop_hot_buckets_partial_agg_skew(spark):
     """Skew guard (SURVEY.md §7 hard part 3): a planted 10^5-member hot band
     key must be dropped by a plan with NO window over band_key — the count
@@ -610,7 +585,7 @@ def test_point_in_interval_join_semantics(spark):
 def test_hash_split_deterministic_and_stable(spark):
     """Same ids -> same assignment across calls and corpus growth; salt
     re-randomizes; proportions land near the weights."""
-    from importtoneo4j_spark.operators.sampling import deterministic_sample, hash_split
+    from importtoneo4j_spark.operators.sampling import hash_split
 
     df = spark.range(2000).toDF("id")
     w = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -624,10 +599,6 @@ def test_hash_split_deterministic_and_stable(spark):
     assert abs(c["val"] / 2000 - 0.1) < 0.03
     salted = {r["id"]: r["split"] for r in hash_split(df, "id", w, salt="x").collect()}
     assert any(a[i] != salted[i] for i in a)  # salt namespaces experiments
-    samp = deterministic_sample(df, "id", 0.25)
-    n = samp.count()
-    assert abs(n / 2000 - 0.25) < 0.05
-    assert samp.intersect(deterministic_sample(df, "id", 0.25)).count() == n
 
 
 def test_tf_idf_hand_computed(spark):
