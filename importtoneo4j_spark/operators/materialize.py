@@ -17,12 +17,10 @@ existence guard :192-194,212-229) with set-oriented writes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql import Column
-
-from importtoneo4j_spark.operators.merge import first_wins, label_union
+from importtoneo4j_spark.operators.merge import first_wins
 
 # Materialized-layout knobs — the distributed analog of the reference's
 # index-before-load (Main.java:69, VariantDatabase.java:96-111): triples are
@@ -92,6 +90,21 @@ def canonical_triples(extracted: DataFrame, links: DataFrame) -> DataFrame:
     )
 
 
+def entity_mentions(extracted: DataFrame, links: DataFrame) -> DataFrame:
+    """Every subject and object mention of the extracted triples with the
+    canonical_id its surface links to: what ``canonical_nodes`` aggregates,
+    and (by ``node_bucket(canonical_id)``) the node buckets a delta
+    touches. The join strategy is AQE-chosen (see canonical_triples)."""
+    t = extracted.filter(F.col("kind") == "triple")
+    subj, obj = (
+        t.select(
+            F.col(c).alias("surface"), "conv_id", "turn_idx", F.lit(p).alias("pos_label"), "role"
+        )
+        for c, p in (("subj_surface", "Subject"), ("obj_surface", "Object"))
+    )
+    return subj.unionByName(obj).join(links, "surface")
+
+
 def canonical_nodes(extracted: DataFrame, links: DataFrame) -> DataFrame:
     """Canonical entity nodes with first-wins surface + label set-union.
 
@@ -107,26 +120,8 @@ def canonical_nodes(extracted: DataFrame, links: DataFrame) -> DataFrame:
     n_surfaces comes from the vocabulary-sized links table, not a
     mention-scale countDistinct.
     """
-    t = extracted.filter(F.col("kind") == "triple")
-    subj = t.select(
-        F.col("subj_surface").alias("surface"),
-        "conv_id",
-        "turn_idx",
-        F.lit("Subject").alias("pos_label"),
-        "role",
-    )
-    obj = t.select(
-        F.col("obj_surface").alias("surface"),
-        "conv_id",
-        "turn_idx",
-        F.lit("Object").alias("pos_label"),
-        "role",
-    )
-    # join strategy AQE-chosen (see canonical_triples docstring): links is
-    # vocabulary-sized, not guaranteed broadcastable at 100 TB
-    mentions = subj.unionByName(obj).join(links, "surface")
     role_label = F.concat(F.lit("MENTIONED_BY_"), F.upper(F.col("role")))
-    agg = mentions.groupBy("canonical_id").agg(
+    agg = entity_mentions(extracted, links).groupBy("canonical_id").agg(
         F.min(F.struct("conv_id", "turn_idx", "surface")).alias("_first"),
         F.array_sort(
             F.array_distinct(

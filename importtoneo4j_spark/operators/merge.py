@@ -84,15 +84,15 @@ def label_union(
 
 def new_keys_only(df: DataFrame, snapshot: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of df whose key is absent from snapshot (the reference's
-    new-variants delta, VariantDatabase.java:235-263,312) — left_anti join."""
-    return df.join(snapshot.select(*keys).distinct(), on=keys, how="left_anti")
+    new-variants delta, VariantDatabase.java:235-263,312) — left_anti join,
+    which ignores repeated keys on the snapshot side, so no distinct."""
+    return df.join(snapshot.select(*keys), on=keys, how="left_anti")
 
 
 def merge_nodes(snapshot: DataFrame, delta: DataFrame) -> DataFrame:
     """Cross-run node upsert — the reference accumulates onto existing nodes
     on re-runs (labels via addNodeLabel Neo4j.java:243-253, properties
-    first-wins via the :236 guard); round 1 froze node attributes at first
-    import (ADVICE r1), this is the fix.
+    first-wins via the :236 guard).
 
     Full-outer on entity_id:
       canonical_surface  first-wins (snapshot side — it was seen earlier)

@@ -53,6 +53,7 @@ from importtoneo4j_spark.operators.link import (
 from importtoneo4j_spark.operators.materialize import (
     canonical_nodes,
     canonical_triples,
+    entity_mentions,
     node_bucket,
     row_hash_xor,
 )
@@ -67,6 +68,7 @@ from importtoneo4j_spark.sources.tables import TableStore
 from importtoneo4j_spark.sources.transcripts import (
     assert_unique_turns,
     flag_duplicate_turns,
+    keyless_key,
     read_transcripts,
     tag_rejects,
 )
@@ -98,7 +100,7 @@ TABLES = [*RUN_TABLES, "nodes"]
 # the layout of the stored tables, recorded in the materialize marker; bump
 # it whenever a table changes layout, so that an append onto a store this
 # code cannot read raises instead of importing a wrong graph
-LAYOUT = 3
+LAYOUT = 4
 
 
 @dataclass
@@ -117,13 +119,9 @@ class KGPipeline:
     # (catalog table vs parquet path); 'json' (JSON-lines) and 'csv' go
     # through the same schema enforcement + quarantine (sources/transcripts)
     fold_threshold: int | None = None  # when more than this many EXISTING
-    # surfaces would move to a different canonical entity under this run's
-    # full fixpoint (cross-snapshot merge evidence that per-run appends must
-    # discard), the run auto-folds — full re-canonicalization instead of the
-    # new-keys-only append. None (the default) keeps detection-only: the
-    # count is always exposed as metrics['canonicalize']['stale_surfaces'],
-    # so a deployment can watch staleness accrue even without auto-fold
-    # (VERDICT r3 #4).
+    # surfaces would move to another canonical entity under this run's full
+    # fixpoint, the run auto-folds (full re-canonicalization). None (the
+    # default) only reports that count, metrics['canonicalize']['stale_surfaces'].
     metrics: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -148,8 +146,7 @@ class KGPipeline:
     def _snapshot(self, name: str, like: DataFrame | None = None) -> DataFrame | None:
         """The stored table ``name``. When the store has none: ``like``
         with no rows (``limit(0)``: an empty relation that Catalyst folds out
-        of joins, unions and aggregates, and that a checkpoint materializes
-        without a job), or None without ``like``."""
+        of joins, unions and aggregates), or None without ``like``."""
         if self.store.exists(name):
             return self.store.read(name)
         return None if like is None else like.limit(0)
@@ -202,47 +199,45 @@ class KGPipeline:
         return self.store.read(name).filter(F.col(col) == self.run_id).drop(col)
 
     # ---------------------------------------------------------------- stages
-    def _write_counted(self, df: DataFrame, name: str, **write_kwargs) -> int:
-        """Write a stage table and return its row count from an Observation
-        attached to the same action — no second counting job."""
-        obs = Observation(f"{name}_rows")
-        self.store.write(df.observe(obs, F.count(F.lit(1)).alias("n")), name, **write_kwargs)
-        return int(obs.get["n"])
-
     def stage_ingest(self) -> None:
         """Import the input turns no imported run has: an anti-join against
         the stored per-conversation watermarks drops every turn at or below
         its conversation's mark before anything else reads the rows, so the
         rest of the stage sees only this run's delta, and the input may be
         the superset of the imported turns or just the new ones. A row
-        without a conversation or turn number matches no mark and still
-        reaches the quarantine.
+        without a conversation or turn number is matched by the mark of its
+        row hash (``keyless_key``) instead, so a re-exported one is
+        quarantined, stored and counted once.
 
         ONE input scan, one write: the watermark filter, reject tagging,
         the F4 duplicate flag and the valid/reject counters all ride the
         same window + write job (a separate rejects pass would re-read the
         input); an append adds one small job that broadcasts the stored
-        watermarks. The delta lands
-        in this run's ``_run`` partition, partitioned by validity, so the
-        valid reads partition-prune and the quarantine stays queryable
-        (warn-and-skip F3, never dropped). The duplicate check covers the
-        imported delta only: a turn that repeats a (conv_id, turn_idx) at or
-        below its conversation's watermark is not imported, so it is not
-        checked. An empty delta writes no partition; the schema sidecar
-        keeps the table readable."""
+        watermarks. The delta lands in this run's ``_run`` partition,
+        partitioned by validity, so the valid reads partition-prune and the
+        quarantine stays queryable (warn-and-skip F3, never dropped). The
+        duplicate check covers the imported delta only: a turn that repeats
+        a (conv_id, turn_idx) at or below its conversation's watermark is
+        not imported, so it is not checked. An empty delta writes no
+        partition; the schema sidecar keeps the table readable."""
         self._drop_unimported("ingested", "conv_watermarks")
         raw = read_transcripts(self.spark, self.input_path, fmt=self.input_format)
-        wm = self._snapshot(
-            "conv_watermarks", like=raw.select("conv_id", F.col("turn_idx").alias("max_turn"))
-        ).select(F.col("conv_id").alias("wm_conv"), "max_turn")
+        raw = raw.withColumn("keyless", keyless_key())
+        marks = raw.select("conv_id", "keyless", F.col("turn_idx").alias("max_turn"))
+        wm = self._snapshot("conv_watermarks", like=marks).withColumnsRenamed(
+            {"conv_id": "wm_conv", "keyless": "wm_keyless"}
+        )
         # a turn is imported iff SOME run's mark for its conversation
         # reaches it: the mark comparison is the anti-join's condition, so
-        # no max over the runs (and no shuffle for one) is needed
+        # no max over the runs (and no shuffle for one) is needed. A keyless
+        # row meets only its own mark (max_turn null), in the same hash join
         new = raw.join(
             wm,
-            (F.col("conv_id") == F.col("wm_conv")) & (F.col("turn_idx") <= F.col("max_turn")),
+            F.col("conv_id").eqNullSafe(F.col("wm_conv"))
+            & F.col("keyless").eqNullSafe(F.col("wm_keyless"))
+            & F.coalesce(F.col("turn_idx") <= F.col("max_turn"), F.lit(True)),
             "left_anti",
-        )
+        ).drop("keyless")
         tagged = tag_rejects(new)
         if self.fail_fast:
             tagged = flag_duplicate_turns(tagged)
@@ -515,14 +510,12 @@ class KGPipeline:
         reports the same figures whatever its previous attempt left behind.
 
         A fold clears the triples, nodes and lineage and takes every run's
-        partition as its delta: it runs when ``nodes`` may no longer match the
-        imported runs. The ``nodes`` marker names the run that may have
-        changed the graph since the last import: this stage upserts the
-        nodes in place, and an auto-fold replaces the links they were
-        derived from. So an auto-folded run folds here, and a retry after a
-        crash in this stage or after an auto-fold, under this run_id or
-        another, cannot merge a delta onto them again and re-materializes
-        from every run's extraction instead."""
+        partition as its delta. It runs when the ``nodes`` marker names a
+        run that is not imported: this stage upserts the nodes in place, and
+        an auto-fold replaces the links they were derived from, so an
+        auto-folded run, and a retry after a crash in this stage or after an
+        auto-fold, re-materializes from every run's extraction instead of
+        merging a delta onto them again."""
         links = self._full("links")
         touched = self.store.read_marker("nodes")
         fold = touched is not None and touched["run_id"] not in self._prev_runs()
@@ -575,30 +568,25 @@ class KGPipeline:
         def _nodes() -> None:
             # node upsert (not insert-new-only): labels/surfaces/mention
             # counts accumulate onto stored nodes across runs, matching the
-            # reference's re-run MERGE (addNodeLabel) — ADVICE r1 fix.
-            # BUCKET-SCOPED (round 6, VERDICT r5 #1c/#4): only the _bucket
-            # partitions holding entities the delta touches are merged and
-            # rewritten (dynamic partition overwrite); untouched bucket
-            # directories keep their files byte-for-byte (contract-tested).
+            # reference's re-run MERGE (addNodeLabel). BUCKET-SCOPED: only
+            # the _bucket partitions of entities the delta mentions are
+            # merged and rewritten (dynamic partition overwrite); untouched
+            # bucket directories keep their files byte-for-byte. One query
+            # for a rebuild, an append and a fold: with no stored nodes the
+            # snapshot is empty and Catalyst folds the stored side away. The
+            # write may read the table it overwrites: the dynamic overwrite
+            # swaps the partitions only at job commit, after every read.
+            touched = entity_mentions(delta_ext, links).select(
+                node_bucket(F.col("canonical_id")).alias("_bucket")
+            )
             delta_nodes = canonical_nodes(delta_ext, links)
-            if self.store.exists("nodes"):
-                # the delta has two consumers (touched buckets, merge):
-                # checkpoint it ONCE. The stored side's checkpoint also cuts
-                # the nodes path out of the write's lineage, which is what
-                # lets the overwrite target the table it read (V1 refuses to
-                # overwrite a path it scans).
-                delta_nodes = delta_nodes.localCheckpoint()
-                touched = delta_nodes.select(
-                    node_bucket(F.col("entity_id")).alias("_bucket")
-                ).distinct()
-                stored = (
-                    self.store.read("nodes")
-                    .join(F.broadcast(touched), "_bucket")
-                    .drop("_bucket")
-                    .localCheckpoint()
+            stored = (
+                self._snapshot(
+                    "nodes", like=delta_nodes.withColumn("_bucket", node_bucket(F.col("entity_id")))
                 )
-            else:
-                stored = delta_nodes.limit(0)
+                .join(F.broadcast(touched.distinct()), "_bucket", "left_semi")
+                .drop("_bucket")
+            )
             merged = merge_nodes(stored, delta_nodes).withColumn(
                 "_bucket", node_bucket(F.col("entity_id"))
             )
@@ -614,18 +602,18 @@ class KGPipeline:
             # per-conversation high-water marks of the turns this run
             # imports, into its own _run partition: the next run's ingest
             # drops every turn some imported run's mark reaches. Computed
-            # from every keyed row of the run's ingested partition, valid or
-            # rejected (turns with zero assertions still count as imported,
-            # and a quarantined turn is not quarantined again); fold_epochs
-            # (no ingest) uses its extraction.
-            if self.store.exists("ingested"):
-                src = self._delta("ingested").filter(
-                    F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-                )
-            else:
-                src = delta_ext
+            # from every row of the run's ingested partition, valid or
+            # rejected, a keyless one by its row hash (a turn with zero
+            # assertions still counts as imported, and a quarantined turn is
+            # not quarantined again); fold_epochs (no ingest) uses its
+            # extraction, whose turns all have keys.
+            src = (
+                self._delta("ingested").withColumn("keyless", keyless_key())
+                if self._done("ingest")
+                else delta_ext.withColumn("keyless", F.lit(None).cast("long"))
+            )
             self._append(
-                src.groupBy("conv_id").agg(F.max("turn_idx").alias("max_turn")),
+                src.groupBy("conv_id", "keyless").agg(F.max("turn_idx").alias("max_turn")),
                 "conv_watermarks",
             )
 
@@ -708,13 +696,17 @@ class KGPipeline:
             nodes, attrs, fail_on_miss=fom, on_duplicate=on_duplicate
         )
         n_miss = 0 if fom else missing_keys(nodes, attrs).count()
-        # stage through a sibling table (parquet can't overwrite a path
-        # while scanning it) and install it by rename-promote (round 6): the
+        # stage through a sibling table and install it by rename-promote
+        # (round 6): an in-place write of every bucket that died between
+        # deleting a bucket and moving its new files in would silently
+        # lose those nodes, while a failed promote leaves no table. The
         # staged write is laid out exactly as the destination, so the swap
-        # is pure metadata instead of a second full write
-        n_nodes = self._write_counted(
-            enriched, "nodes_enriched", partition_by=["_bucket"]
-        )
+        # is pure metadata instead of a second full write; the row count
+        # rides the write as an Observation
+        obs = Observation("nodes_enriched_rows")
+        enriched = enriched.observe(obs, F.count(F.lit(1)).alias("n"))
+        self.store.write(enriched, "nodes_enriched", partition_by=["_bucket"])
+        n_nodes = int(obs.get["n"])
         self.store.promote("nodes_enriched", "nodes")
         self.metrics["enrich"] = {"nodes": n_nodes, "misses": n_miss}
         self._mark("enrich", nodes=n_nodes, misses=n_miss)
@@ -794,14 +786,13 @@ class KGPipeline:
         return schema_registry(self.nodes(), self.triples())
 
     def rejects(self) -> DataFrame:
-        """The quarantined rows of every run. A row without a conversation
-        or turn number matches no watermark, so each run that reads it
-        quarantines it again: the rows are made distinct."""
+        """The quarantined rows of every run, each stored once: a run
+        imports only the rows that no imported run's watermark marks, a
+        keyless row's own mark included."""
         return (
             self.store.read("ingested")
             .filter(F.col("_ok").cast("string") == "false")
             .select("conv_id", "turn_idx", "reject_reason")
-            .distinct()
         )
 
     def lineage(self) -> DataFrame:

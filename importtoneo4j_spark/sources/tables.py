@@ -164,8 +164,9 @@ class TableStore:
         so it never leaks to writes running concurrently in the same
         session. Iceberg: overwritePartitions. A missing table is created
         partitioned by ``partition_by``.
-        The caller must ensure ``df``'s lineage does not scan ``name``
-        itself (checkpoint first) — V1 rejects overwriting a read path."""
+        ``df`` may read ``name`` itself: the dynamic overwrite stages its
+        output and replaces the partitions only at job commit, after every
+        read (tests/test_meta.py pins this)."""
         if self.iceberg:
             if self.exists(name):
                 df.writeTo(f"kg.db.{name}").overwritePartitions()

@@ -10,7 +10,7 @@ Mirrors the reference's ingest discipline:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from importtoneo4j_spark.functions.text import nullify_sentinels
@@ -66,6 +66,16 @@ def tag_rejects(df: DataFrame) -> DataFrame:
         .when(nullify_sentinels(F.col("text")).isNull(), "null_or_sentinel_text")
     )
     return df.withColumn("reject_reason", reason)
+
+
+def keyless_key() -> Column:
+    """The watermark key of a turn without a conversation or turn number
+    (null for a keyed turn): xxhash64 of its six input columns, kept in a
+    column of its own, so it never equals a conv_id."""
+    return F.when(
+        F.col("conv_id").isNull() | F.col("turn_idx").isNull(),
+        F.xxhash64(*TRANSCRIPTS.fieldNames()),
+    )
 
 
 def split_valid_rejects(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -320,17 +320,24 @@ def test_append_retry_matches_rebuild(spark, superset, seeded, rebuilt, last, re
     assert _run_triples(again, "r4") == 0
 
 
-def test_materialize_job_budget(spark, spark_jobs, superset, seeded):
-    """An append's materialize runs at most 28 Spark jobs on a small store:
+def test_materialize_job_budget(spark, spark_jobs, superset, seeded, monkeypatch):
+    """An append's materialize runs at most 25 Spark jobs on a small store:
     it writes the run's lineage row from its triples write and reads the
-    totals back from the per-run rows, and it neither rescans the whole
-    triples table nor rebuilds a schema registry (that form ran 32)."""
+    totals back from the per-run rows, it neither rescans the whole
+    triples table nor rebuilds a schema registry (that form ran 32), and
+    its node upsert takes no local checkpoint (that form ran 27)."""
     full, work = superset[20], seeded
     _crashed_append(spark, full, work, "r2", "canonicalize")
     pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
+
+    def refuse(*_a, **_k):
+        raise AssertionError("materialize took a local checkpoint")
+
+    monkeypatch.setattr(type(spark.range(0)), "localCheckpoint", refuse)
     before = spark_jobs()
     pipe.stage_materialize()
-    assert spark_jobs() - before <= 28
+    assert spark_jobs() - before <= 25
+    monkeypatch.undo()
     assert _assert_lineage_per_run(pipe) == {"r1", "r2"}
 
 
@@ -1181,9 +1188,9 @@ def test_append_rejects_stored_once(spark, tmp_path_factory):
     """A base whose conversation ends in a quarantined turn: that turn
     counts toward the conversation's watermark, so a superset append does
     not quarantine it again. A row without a conversation id matches no
-    watermark and is quarantined by each run; rejects() lists it once. The
-    append's rejects() equals a rebuild's, and every keyed reject is
-    stored once across the runs."""
+    watermark; it is marked by its row hash instead, so the append does
+    not quarantine or count it again either. The append's rejects() equals
+    a rebuild's, and every reject is stored once across the runs."""
     import datetime
 
     t0 = datetime.datetime(2025, 1, 1)
@@ -1208,17 +1215,17 @@ def test_append_rejects_stored_once(spark, tmp_path_factory):
     KGPipeline(spark, base_p, work, run_id="r1").run(resume=False)
     pipe = KGPipeline(spark, full_p, work, run_id="r2", mode="append")
     m = pipe.run(resume=False)
-    # the append quarantines conv-b's sentinel turn and the keyless row
-    assert m["ingest"] == {"valid": 2, "rejected": 2}
+    # the append quarantines conv-b's sentinel turn only
+    assert m["ingest"] == {"valid": 2, "rejected": 1}
     fresh = KGPipeline(spark, full_p, str(root / "rebuild"), run_id="fresh")
     fresh.run(resume=False)
     assert _rows(pipe.rejects()) == _rows(fresh.rejects())
     assert len(_rows(pipe.rejects())) == 3
-    keyed = (
+    stored = (
         pipe.store.read("ingested")
-        .filter((F.col("_ok").cast("string") == "false") & F.col("conv_id").isNotNull())
+        .filter(F.col("_ok").cast("string") == "false")
         .groupBy("conv_id", "turn_idx")
         .count()
     )
-    assert keyed.filter(F.col("count") > 1).count() == 0
-    assert keyed.count() == 2
+    assert stored.filter(F.col("count") > 1).count() == 0
+    assert stored.count() == 3

@@ -78,3 +78,48 @@ def test_tablestore_reads_skip_schema_inference(spark, spark_jobs, tmp_path):
     df.write.parquet(st.path("foreign"))  # written around the store
     assert not os.path.exists(os.path.join(st.path("foreign"), SCHEMA_FILE))
     assert sorted(st.read("foreign").collect()) == sorted(df.collect())
+
+
+def test_overwrite_partitions_may_read_its_own_table(spark, tmp_path):
+    """A dynamic partition overwrite whose frame reads the table it
+    overwrites (the node upsert's shape: a scan of the replaced buckets, a
+    shuffle, the write) replaces just those partitions with the new rows
+    and leaves every other partition's files byte-identical. The overwrite
+    stages its output and swaps the partitions at job commit, after every
+    read; a Spark that checked the read path again would fail here."""
+    import hashlib
+    import os
+
+    from pyspark.sql import functions as F
+
+    from importtoneo4j_spark.sources.tables import TableStore
+
+    st = TableStore(spark, str(tmp_path / "store"))
+    df = spark.range(40).selectExpr("id", "CAST(id % 4 AS INT) AS _bucket")
+    st.write(df, "t", partition_by=["_bucket"])
+
+    def files():
+        root = st.path("t")
+        return {
+            os.path.relpath(os.path.join(d, f), root): hashlib.md5(
+                open(os.path.join(d, f), "rb").read()
+            ).hexdigest()
+            for d, _, names in os.walk(root)
+            for f in names
+            if d != root
+        }
+
+    before = files()
+    stored = st.read("t").filter(F.col("_bucket").isin(1, 2))
+    st.overwrite_partitions(
+        stored.withColumn("id", F.col("id") + 1000).repartition(3), "t", ["_bucket"]
+    )
+    got = {(r.id, r._bucket) for r in st.read("t").collect()}
+    assert got == {(i + 1000 * (i % 4 in (1, 2)), i % 4) for i in range(40)}
+    after = files()
+    for bucket in (0, 3):
+        kept = {k: v for k, v in before.items() if k.startswith(f"_bucket={bucket}/")}
+        assert kept and kept == {k: v for k, v in after.items() if k.startswith(f"_bucket={bucket}/")}
+    for bucket in (1, 2):
+        prefix = f"_bucket={bucket}/"
+        assert not {k for k in before if k.startswith(prefix)} & set(after)
