@@ -117,8 +117,11 @@ def canonical_nodes(extracted: DataFrame, links: DataFrame) -> DataFrame:
     collect_set label-union and count all have partial (map-side) merge, so
     the hot entity's mentions pre-combine inside each map task before the
     single shuffle — the skew never reaches one reducer un-reduced.
-    n_surfaces comes from the vocabulary-sized links table, not a
-    mention-scale countDistinct.
+    n_surfaces counts the canonical id's rows of the vocabulary-sized
+    links table, which holds each surface once (a run appends only the
+    surfaces the stored vocabulary lacks; ``entity_mentions`` relies on the
+    same, or n_mentions would double): one aggregate, not a mention-scale
+    or two-shuffle countDistinct.
     """
     role_label = F.concat(F.lit("MENTIONED_BY_"), F.upper(F.col("role")))
     agg = entity_mentions(extracted, links).groupBy("canonical_id").agg(
@@ -130,9 +133,7 @@ def canonical_nodes(extracted: DataFrame, links: DataFrame) -> DataFrame:
         ).alias("labels"),
         F.count("*").alias("n_mentions"),
     )
-    n_surfaces = links.groupBy("canonical_id").agg(
-        F.countDistinct("surface").alias("n_surfaces")
-    )
+    n_surfaces = links.groupBy("canonical_id").agg(F.count("*").alias("n_surfaces"))
     return agg.join(n_surfaces, "canonical_id").select(
         F.col("canonical_id").alias("entity_id"),
         F.col("_first.surface").alias("canonical_surface"),

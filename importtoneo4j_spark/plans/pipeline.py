@@ -530,16 +530,19 @@ class KGPipeline:
 
         def _triples() -> None:
             cand = canonical_triples(delta_ext, links)
-            # exactly-once guard, delta-sized: the stored side of the
-            # anti-join is first semi-joined down to rows sharing a subj
-            # with the delta (a matching key necessarily shares subj, so
-            # nothing droppable is lost) — AQE then broadcasts the shrunken
-            # side and the stored triples are never shuffled (guide §3.2
-            # semi-join pre-filter; no forced broadcast).
-            stored = self._snapshot("triples", like=cand).join(
-                cand.select("subj").distinct(), "subj", "left_semi"
+            # exactly-once guard: the delta's candidates anti-join the
+            # stored (subj, pred, obj) keys straight from their scan, the
+            # reference's per-edge index probe (Neo4j.hasRelationship) done
+            # set-wise. No join hint: the stored scan is broadcast when its
+            # static estimate is under autoBroadcastJoinThreshold, so the
+            # stored triples are never shuffled. Above it, one sort-merge
+            # anti-join shuffles the stored keys once; cand is already
+            # hash-partitioned on the three keys by first_wins, so its
+            # side adds no exchange. On a rebuild or fold the snapshot is
+            # limit(0) and Catalyst folds the join away.
+            delta = new_keys_only(
+                cand, self._snapshot("triples", like=cand), ["subj", "pred", "obj"]
             )
-            delta = new_keys_only(cand, stored, ["subj", "pred", "obj"])
             # the run's _run=<run_id> partition is the reference's new-keys
             # delta sink (VariantDatabase.java:235-263). pred partitioning
             # lets rel-type scans prune; sortWithinPartitions = the

@@ -164,6 +164,15 @@ def _assert_lineage_per_run(pipe):
     return set(runs)
 
 
+def _assert_links_unique(pipe):
+    """``links`` holds each surface once across every run's partition: a
+    run appends only the surfaces the stored vocabulary lacks. The node
+    aggregates rely on it (``canonical_nodes`` counts n_surfaces as rows,
+    and a surface twice would double its n_mentions)."""
+    dup = pipe._full("links").groupBy("surface").count().filter(F.col("count") > 1)
+    assert dup.count() == 0, dup.limit(5).collect()
+
+
 def test_append_layout_survives_new_session(spark, superset, rebuilt, tmp_path):
     """The triples layout does not depend on session state: an empty-input
     rebuild writes no triples file, and an append run in a new Spark
@@ -224,8 +233,11 @@ def test_two_appends_match_rebuild(spark, superset, seeded, rebuilt):
         assert _assert_unmixed_layout(work) == runs
         assert pn.store.read_marker("materialize")["triples"] == pn.triples().count()
         assert _assert_lineage_per_run(pn) == runs
+        _assert_links_unique(pn)
 
-    want = rebuilt(30)[1]["materialize"]
+    fresh, metrics = rebuilt(30)
+    _assert_links_unique(fresh)
+    want = metrics["materialize"]
     assert m["materialize"]["checksum"] == want["checksum"]
     assert m["materialize"]["nodes"] == want["nodes"] == pn.nodes().count()
 
@@ -254,6 +266,7 @@ def test_materialize_retry_same_run_id_reports_rebuild(spark, superset, seeded, 
     assert retry.nodes().agg(mentions).first() == fresh.nodes().agg(mentions).first()
 
     assert _assert_lineage_per_run(retry) == {"r2"}
+    _assert_links_unique(retry)
 
 
 def _crashed_append(spark, path, work, run_id, last, **kw):
@@ -312,6 +325,7 @@ def test_append_retry_matches_rebuild(spark, superset, seeded, rebuilt, last, re
         assert sorted(r[0] for r in got) == runs, name
     lineage_runs = _assert_lineage_per_run(retry)
     assert retry_id in lineage_runs and lineage_runs <= set(runs)
+    _assert_links_unique(retry)
 
     again = KGPipeline(spark, full, work, run_id="r4", mode="append")
     m4 = again.run()
@@ -321,11 +335,14 @@ def test_append_retry_matches_rebuild(spark, superset, seeded, rebuilt, last, re
 
 
 def test_materialize_job_budget(spark, spark_jobs, superset, seeded, monkeypatch):
-    """An append's materialize runs at most 25 Spark jobs on a small store:
+    """An append's materialize runs at most 19 Spark jobs on a small store:
     it writes the run's lineage row from its triples write and reads the
     totals back from the per-run rows, it neither rescans the whole
-    triples table nor rebuilds a schema registry (that form ran 32), and
-    its node upsert takes no local checkpoint (that form ran 27)."""
+    triples table nor rebuilds a schema registry (that form ran 32), its
+    node upsert takes no local checkpoint (that form ran 27), its
+    exactly-once guard anti-joins the stored triple keys with no subject
+    semi-join first, and n_surfaces is one aggregate, not a countDistinct
+    (with both, it ran 25)."""
     full, work = superset[20], seeded
     _crashed_append(spark, full, work, "r2", "canonicalize")
     pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
@@ -336,9 +353,43 @@ def test_materialize_job_budget(spark, spark_jobs, superset, seeded, monkeypatch
     monkeypatch.setattr(type(spark.range(0)), "localCheckpoint", refuse)
     before = spark_jobs()
     pipe.stage_materialize()
-    assert spark_jobs() - before <= 25
+    assert spark_jobs() - before <= 19
     monkeypatch.undo()
     assert _assert_lineage_per_run(pipe) == {"r1", "r2"}
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["default", "no_broadcast"])
+def test_append_guard_never_regroups_stored_triples(
+    spark, superset, seeded_store, rebuilt, tmp_path_factory, threshold
+):
+    """An append's exactly-once guard anti-joins the delta's triples to the
+    stored keys straight from their scan. Under the default broadcast
+    threshold the stored triples reach the anti-join as a broadcast, with
+    no shuffle Exchange below it (a subject semi-join first used to shuffle
+    every stored triple). With broadcasts off, one shuffle Exchange sits
+    over the stored scan (the semi-join form took two), and the graph still
+    equals a rebuild's."""
+    # a short store path: the plan shows at most 100 characters of it
+    full, work = superset[20], copy_store(seeded_store, tmp_path_factory.mktemp("guard"))
+    _crashed_append(spark, full, work, "r2", "canonicalize")
+    pipe = KGPipeline(spark, full, work, run_id="r2", mode="append")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    since = _last_execution(spark)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        pipe.stage_materialize()
+    finally:
+        spark.conf.set(key, default)
+    (path,) = _paths_to_anti_join(spark, since, "triples")
+    assert "Join" in path[-1], path
+    if threshold is None:
+        assert "BroadcastExchange" in path and "Exchange" not in path, path
+    else:
+        assert path.count("Exchange") == 1, path
+    want = rebuilt(20)[1]["materialize"]
+    assert pipe.metrics["materialize"]["checksum"] == want["checksum"]
 
 
 def test_append_onto_store_without_layout_raises(spark, superset, seeded):
@@ -534,6 +585,7 @@ def test_append_auto_fold_reaches_fixpoint(spark, stale_store, tmp_path):
     assert p2.metrics["canonicalize"]["auto_folded"] is True
     assert p2.metrics["canonicalize"]["stale_surfaces"] >= 1
     assert p2.nodes().count() == 3  # acme pair merged at the fixpoint
+    _assert_links_unique(p2)
 
     fresh = KGPipeline(spark, full, str(tmp_path / "kg_fresh"), run_id="rf")
     fresh.run()
@@ -547,6 +599,7 @@ def test_append_auto_fold_reaches_fixpoint(spark, stale_store, tmp_path):
     p3 = _append_run(spark, full, work, "r3", fold_threshold=0)
     assert _run_triples(p3, "r3") == 0
     assert p3.metrics["canonicalize"]["stale_surfaces"] == 0
+    _assert_links_unique(p3)
 
 
 def test_append_retry_after_auto_fold_matches_clean_history(spark, stale_store, tmp_path):
@@ -963,15 +1016,14 @@ def _last_execution(spark) -> int:
     return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
 
 
-def _scans_under_shuffle(spark, since: int, table: str) -> tuple[int, int]:
-    """Over the final plans of the SQL executions after ``since``: how many
-    scans read ``table``, and how many of them feed a shuffle Exchange. A
-    scan that feeds a broadcast reaches what lies above it only as a hash
-    relation, so the walk up stops there."""
+def _table_scans(spark, since: int, table: str):
+    """Over the final plans of the SQL executions after ``since``: yields
+    (scan id, plan nodes by id, parent ids by id) for every scan that reads
+    ``table``. A plan shows the first 100 characters of a scan's location
+    (spark.sql.maxMetadataStringLength), so the store needs a short path."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
     execs = store.executionsList()
-    scans = shuffled = 0
     for i in range(execs.size()):
         eid = execs.apply(i).executionId()
         if eid <= since:
@@ -984,18 +1036,43 @@ def _scans_under_shuffle(spark, since: int, table: str) -> tuple[int, int]:
             e = graph.edges().apply(j)
             parents.setdefault(e.fromId(), []).append(e.toId())
         for nid, node in nodes.items():
-            if "Scan" not in node.name() or f"/{table}]" not in node.desc():
+            if "Scan" in node.name() and f"/{table}]" in node.desc():
+                yield nid, nodes, parents
+
+
+def _scans_under_shuffle(spark, since: int, table: str) -> tuple[int, int]:
+    """How many scans of ``table`` the executions after ``since`` ran, and
+    how many of them feed a shuffle Exchange. A scan that feeds a broadcast
+    reaches what lies above it only as a hash relation, so the walk up
+    stops there."""
+    scans = shuffled = 0
+    for nid, nodes, parents in _table_scans(spark, since, table):
+        scans += 1
+        seen, todo = set(), list(parents.get(nid, []))
+        while todo:
+            up = todo.pop()
+            if up in seen or nodes[up].name() == "BroadcastExchange":
                 continue
-            scans += 1
-            seen, todo = set(), list(parents.get(nid, []))
-            while todo:
-                up = todo.pop()
-                if up in seen or nodes[up].name() == "BroadcastExchange":
-                    continue
-                seen.add(up)
-                todo += parents.get(up, [])
-            shuffled += any(nodes[up].name() == "Exchange" for up in seen)
+            seen.add(up)
+            todo += parents.get(up, [])
+        shuffled += any(nodes[up].name() == "Exchange" for up in seen)
     return scans, shuffled
+
+
+def _paths_to_anti_join(spark, since: int, table: str) -> list[list[str]]:
+    """For each scan of ``table`` in the executions after ``since``: the
+    names of the plan nodes its rows pass on their way up, to the first
+    left-anti join they meet (included)."""
+    paths = []
+    for nid, nodes, parents in _table_scans(spark, since, table):
+        path = []
+        while nid in parents:
+            nid = parents[nid][0]
+            path.append(nodes[nid].name())
+            if "LeftAnti" in nodes[nid].desc():
+                break
+        paths.append(path)
+    return paths
 
 
 def test_append_without_new_surface_shuffles_no_signature(
